@@ -1842,7 +1842,10 @@ object InferenceQueries {
       |FROM l4 GROUP BY 1 ORDER BY 1""".stripMargin))
 
   /** [[Dedup.weightedJaccardPairs]]: repetition-aware multiset Jaccard
-    * near-dups — exact integer Σmin/Σmax on token frequencies. */
+    * near-dups — exact integer Σmin/Σmax on token frequencies, one
+    * sparse-vector merge per same-block doc pair. The oracle spells the
+    * definition directly: Σmin over shared (block, term) postings, over
+    * the per-id totals. */
   private val wjOracle = """WITH tok AS (SELECT id, blk, term, CAST(count(*) AS BIGINT)
       |          AS tf
       |      FROM (SELECT doc_id AS id, source AS blk,
@@ -1876,8 +1879,8 @@ object InferenceQueries {
 
   /** [[Dedup.weightedJaccardPairsBanded]]: the q285 scale twin (the
     * q60/q61 convention) — prefix-filter candidates over rare-first
-    * postings instead of the every-shared-term join, exact verify, SAME
-    * oracle: the driver's gate pins bit-identical output. */
+    * (block, term) postings instead of every same-block doc pair, exact
+    * verify, SAME oracle: the driver's gate pins bit-identical output. */
   private val q305 = QDef("q305_weighted_jaccard_banded",
     (s, dir) => Dedup.weightedJaccardPairsBanded(T(s, dir, "documents"),
         col("text"), col("doc_id"), col("source"), minW = 0.6)

@@ -491,71 +491,119 @@ object Dedup {
     * vectors — the repetition-aware dedup score set-Jaccard flattens
     * (a doc that repeats a template 10× matches its 10×-repeating twin
     * here, but not a once-only doc with the same vocabulary). EXACT
-    * integer arithmetic end to end: Σmax = ΣA + ΣB − Σmin, so one
-    * (block, term)-keyed pair join accumulating Σmin plus per-doc
-    * total-tf tables closes it; the threshold compares a division of
-    * identical longs. Same candidates-∝-shared-terms bound as
-    * [[ngramContainmentPairs]]. */
+    * integer arithmetic end to end: Σmax = ΣA + ΣB − Σmin, Σmin runs
+    * over shared (block, term) entries and the totals over every block
+    * of an id; the threshold compares a division of identical longs.
+    *
+    * Shape: one sparse tf vector per (id, block) ([[wjVectors]]), one
+    * block-keyed self-join of those vectors, and a codegen two-pointer
+    * Σmin merge per surviving block pair
+    * ([[org.apache.spark.sql.graft.SparseMinSumLong]]): the pair work is
+    * one merge per same-block doc pair that passes the lossless length
+    * filter, whatever the term frequencies. Terms are compared as 64-bit
+    * xxhash64 keys (the q61/q305/q326 convention: Σmin agrees with the
+    * string form modulo ~1e-10/pair collision odds). The vector table is
+    * corpus-sized, so the join carries no broadcast hint: the planner
+    * broadcasts it while it fits the auto-broadcast threshold (sf0.1's
+    * 5,000 documents) and falls back to a shuffle join on the block key
+    * past it, the small-corpus form; [[weightedJaccardPairsBanded]] is
+    * the prefix-filtered scale twin with the same output. */
   def weightedJaccardPairs(df: DataFrame, text: Column, id: Column,
                            block: Column,
                            minW: Double = 0.6): DataFrame = {
-    // checkpoint the postings ONCE, repartitioned by id: they feed the
-    // totals and BOTH pair-join sides (three consumers would re-run the
-    // tokenize+tf chain), and AQE otherwise coalesces the small table to
-    // one partition, freezing the whole pair join onto a single task
-    // (the q266 finding)
-    val para = df.sparkSession.sessionState.conf.numShufflePartitions
-    val tok = df.select(id.as("id"), block.as("blk"),
-        explode(split(text, " ")).as("term"))
-      .where(col("id").isNotNull && col("blk").isNotNull)
-      .groupBy("id", "blk", "term").agg(count(lit(1)).as("tf"))
-      .repartition(para, col("id"))
-      .localCheckpoint()
-    val totals = tok.groupBy("id").agg(sum("tf").as("tt"))
-    val mins = tok.as("a")
-      .join(tok.as("b"),
-        col("a.blk") === col("b.blk") && col("a.term") === col("b.term"))
-      .where(col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(sum(least(col("a.tf"), col("b.tf"))).as("smin"))
-    sealWj(mins, totals, minW)
-  }
-
-  /** Shared tail of the weighted-Jaccard pair operators: join totals,
-    * threshold on the raw ratio, emit the integer-sealed display value
-    * (Seal.ratio4 — smin/(ta+tb−smin) is an exact integer rational). */
-  private def sealWj(mins: DataFrame, totals: DataFrame,
-                     minW: Double): DataFrame =
-    mins
-      .join(totals.select(col("id").as("id_a"), col("tt").as("ta")), "id_a")
-      .join(totals.select(col("id").as("id_b"), col("tt").as("tb")), "id_b")
+    val v = wjVectors(df, text, id, block)
+    val side = (s: String) => v.select(col("id").as(s"id_$s"), col("blk"),
+      col("ks").as(s"k$s"), col("vs").as(s"v$s"), col("tt").as(s"t$s"),
+      col("nb").as(s"n$s"))
+    val slack = lit(minW * (1 - 1e-9))
+    // length filter (lossless): wj ≥ t forces t·tb ≤ ta ≤ tb/t, since
+    // Σmin ≤ min(ta, tb); 1−1e-9 slack keeps the double compare
+    // conservative. An id in several blocks meets its partner once per
+    // shared block, so the per-block Σmin sum per pair. A pair of
+    // single-block ids meets once, so its one row already holds the full
+    // Σmin and must pass the threshold (wj ≥ t ⇔ Σmin·(1+t) ≥ t·(ta+tb))
+    // before the aggregate's shuffle. Catalyst pushes that filter into
+    // the join condition, after the id and length predicates; spelled
+    // with `smin` once, the merge runs once per block pair there and
+    // again only for the pairs that pass (about 1% at sf0.1). `smin > 0`
+    // must stay after the aggregate: before it, nearly every pair
+    // passes and pays two merges.
+    side("a").join(side("b"), Seq("blk"))
+      .where(col("id_a") < col("id_b") &&
+        col("ta").cast("double") >= slack * col("tb").cast("double") &&
+        col("tb").cast("double") >= slack * col("ta").cast("double"))
+      .select(col("id_a"), col("id_b"), col("ta"), col("tb"), col("na"),
+        col("nb"),
+        org.apache.spark.sql.graft.SparseExprs.sparseMinSumLong(
+          col("ka"), col("va"), col("kb"), col("vb")).as("smin"))
+      .where(col("na") > 1 || col("nb") > 1 ||
+        col("smin").cast("double") * (1 + minW) >=
+          slack * (col("ta") + col("tb")).cast("double"))
+      .groupBy("id_a", "id_b", "ta", "tb").agg(sum("smin").as("smin"))
+      .where(col("smin") > 0)
       .withColumn("wden", col("ta") + col("tb") - col("smin"))
-      .withColumn("__raw", col("smin").cast("double") / col("wden"))
-      .where(col("__raw") >= minW)
+      .where(col("smin").cast("double") / col("wden") >= minW)
       .select(col("id_a"), col("id_b"),
         Seal.ratio4("smin", "wden").as("wjaccard"))
+  }
+
+  /** The per-(id, block) term-frequency vectors of
+    * [[weightedJaccardPairs]], checkpointed: `ks` the sorted xxhash64
+    * term keys, `vs` their tf counts, `tt` the id's total tf over all
+    * its blocks, `nb` its number of blocks. The DOCUMENT rows are
+    * hash-partitioned by id with an explicit count before tokenizing, so
+    * the (id, block, term) count, the collect and the `tt`/`nb` window
+    * run in one stage, and AQE cannot coalesce the exchange to one
+    * partition (which would freeze the pair join onto a single task:
+    * the q266 finding). */
+  private[graft] def wjVectors(df: DataFrame, text: Column, id: Column,
+                               block: Column): DataFrame = {
+    val para = df.sparkSession.sessionState.conf.numShufflePartitions
+    val byId = org.apache.spark.sql.expressions.Window.partitionBy("id")
+    df.select(id.as("id"), block.as("blk"), text.as("text"))
+      .where(col("id").isNotNull && col("blk").isNotNull)
+      .repartition(para, col("id"))
+      .select(col("id"), col("blk"),
+        explode(split(col("text"), " ")).as("term"))
+      .groupBy(col("id"), col("blk"), xxhash64(col("term")).as("k"))
+      .agg(count(lit(1)).as("tf"))
+      .groupBy("id", "blk")
+      // sort_array is the native comparator; array_sort's default one
+      // is an interpreted lambda
+      .agg(sort_array(collect_list(struct(col("k"), col("tf")))).as("ps"),
+        sum("tf").as("bt"))
+      .select(col("id"), col("blk"), col("ps.k").as("ks"),
+        col("ps.tf").as("vs"),
+        sum("bt").over(byId).as("tt"), count(lit(1)).over(byId).as("nb"))
+      .localCheckpoint()
+  }
 
   /** Banded scale twin of [[weightedJaccardPairs]] (the q60/q61
-    * convention: bit-identical output, scale-shaped candidates). The
-    * naive pair join meets on EVERY shared term, so corpus-wide terms
-    * drive Σdf² candidates; here terms order globally rare-first
-    * (df asc, term asc) and each doc indexes only its PREFIX — the
-    * minimal head such that the remaining tail mass < t/(1+t)·tt.
+    * convention: bit-identical output, scale-shaped candidates).
+    * [[weightedJaccardPairs]] merges every same-block doc pair that
+    * passes the length filter, ~n²/2 per block of n docs; here postings
+    * are keyed on xxhash64(block, term), order globally rare-first (df
+    * asc, key asc) and each doc indexes only its PREFIX — the minimal
+    * head such that the remaining tail mass < t/(1+t)·tt.
     * wj ≥ t forces smin ≥ t/(1+t)·(ta+tb) ≥ t/(1+t)·ta, and shared-
     * terms-only-in-a's-tail caps smin below that, so every qualifying
     * pair shares a term in each side's prefix and the full⋈prefix join
     * finds it (the Bayardo all-pairs argument, conservative 1−1e-9
     * slack on the double compare). Candidates then verify with the
-    * exact full-postings min-sum — output EQUALS the naive join. */
+    * exact full-postings min-sum over the (block, term) keys, so an id
+    * spanning several blocks sums Σmin per shared block exactly as the
+    * oracle does — output EQUALS [[weightedJaccardPairs]]. */
   def weightedJaccardPairsBanded(df: DataFrame, text: Column, id: Column,
                                  block: Column, minW: Double = 0.6,
                                  broadcastVocab: Boolean = true)
       : DataFrame = {
     val para = df.sparkSession.sessionState.conf.numShufflePartitions
-    // Terms are 64-bit-hashed up front (the q61/q326 convention: min-sums
-    // and totals agree with the string form modulo ~1e-10/pair collision
-    // odds, and every downstream shuffle, join key, sort order, and
-    // per-pair merge runs on fixed-width longs instead of term strings),
+    // (block, term) keys are 64-bit-hashed up front (the q61/q326
+    // convention: min-sums and totals agree with the string form modulo
+    // ~1e-10/pair collision odds, and every downstream shuffle, join key,
+    // sort order, and per-pair merge runs on fixed-width longs instead of
+    // term strings; the block in the key keeps tf of the same term in two
+    // blocks of one id apart in the verify merge),
     // and the per-doc total mass tt rides ALONG in the postings via a
     // window over the checkpoint's own id-partitioning (no extra
     // exchange) — threading tt kills three separate totals joins: the
@@ -564,8 +612,8 @@ object Dedup {
         explode(split(text, " ")).as("term0"))
       .where(col("id").isNotNull && col("blk").isNotNull)
       .groupBy("id", "blk", "term0").agg(count(lit(1)).as("tf"))
-      .select(col("id"), col("blk"), xxhash64(col("term0")).as("term"),
-        col("tf"))
+      .select(col("id"), col("blk"),
+        xxhash64(col("blk"), col("term0")).as("term"), col("tf"))
       .repartition(para, col("id"))
       .withColumn("tt", sum("tf").over(
         org.apache.spark.sql.expressions.Window.partitionBy("id")))
@@ -1274,9 +1322,13 @@ object Dedup {
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = l.sparkSession
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // an edge with a null endpoint connects nothing: dropped before
+    // either branch, so the driver path never reads a null as a node id
+    // and neither path labels its other endpoint or a null id
     val ePlan = newEdges
       .select(col("id_a").cast("long").as("__ea"),
         col("id_b").cast("long").as("__eb"))
+      .where(col("__ea").isNotNull && col("__eb").isNotNull)
     // DRIVER-SIDE CONTRACTION (r14, guide §1.2 step 1 / §2.4): the edge
     // list is batch-bounded BY CONTRACT (class doc below) and every
     // derived frame here (ends, lsub, remap) was ALREADY driver-resident

@@ -74,14 +74,13 @@ object CrossoverProbe {
         docs, col("text"), col("doc_id"), col("source"), n = 1, minJ = 0.6))
       assert(jq == jp, s"jaccard paths disagree: $jq vs $jp")
     }
-    // weighted-Jaccard: exact every-shared-term pair join (q285) vs the
-    // prefix-filter + SparseMinSum-verify banded twin (q305). The
-    // regime banding exists for is a ZIPFIAN vocabulary: the uniform
-    // corpus above makes even the "quadratic" join candidate-bounded
-    // (every posting list is ~n·L/V docs), so here the first
-    // `nStop` tokens of every doc come from a 20-word stopword set —
-    // those df≈block-size lists drive Σdf² candidates in the exact
-    // join, and they are exactly what the rare-first prefix skips.
+    // weighted-Jaccard: per-document vector block self-join (q285: one
+    // SparseMinSumLong merge per same-block pair that passes the length
+    // filter) vs the prefix-filter + merge-verify banded twin (q305).
+    // Here the first `nStop` tokens of every doc come from a 20-word
+    // stopword set, a ZIPFIAN head: the rare-first prefix skips those
+    // df≈block-size posting lists, so q305's candidates stay near the
+    // planted pairs while q285 still merges every same-block pair.
     // Planted pairs still share all non-stop tokens (wj ≥ 0.96).
     if (which == "wjaccard") {
       val nStop = 10
@@ -97,7 +96,7 @@ object CrossoverProbe {
           nStop + 1, L - nStop))).as("text"))
         .cache()
       wdocs.count()
-      val wq = time("wjaccard quadratic (q285)")(Dedup.weightedJaccardPairs(
+      val wq = time("wjaccard block pairs (q285)")(Dedup.weightedJaccardPairs(
         wdocs, col("text"), col("doc_id"), col("source"), minW = 0.6))
       val wb = time("wjaccard banded (q305)")(Dedup.weightedJaccardPairsBanded(
         wdocs, col("text"), col("doc_id"), col("source"), minW = 0.6))

@@ -11,17 +11,14 @@ import org.apache.spark.sql.functions._
 class CCFastPathSpec extends SparkSpec {
   import spark.implicits._
 
-  private def both(edges: org.apache.spark.sql.DataFrame)
-      : (Seq[(Long, Long)], Seq[(Long, Long)]) = {
+  /** `run` evaluated on the driver path, then on the distributed path. */
+  private def onBothPaths[T](run: => T): (T, T) = {
     val key = "spark.graft.cc.localEdgeLimit"
     val prev = spark.conf.getOption(key)
-    def run(): Seq[(Long, Long)] =
-      rows(Dedup.connectedComponents(edges).orderBy("id"))
-        .map(r => (r.getLong(0), r.getLong(1)))
     spark.conf.set(key, "1000000")
-    val local = run()
+    val local = run
     spark.conf.set(key, "0") // force the distributed loop
-    val dist = try run() finally {
+    val dist = try run finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
@@ -29,6 +26,14 @@ class CCFastPathSpec extends SparkSpec {
     }
     (local, dist)
   }
+
+  private def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    rows(df.orderBy(df.columns.map(col): _*))
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+  private def both(edges: org.apache.spark.sql.DataFrame)
+      : (Seq[(Long, Long)], Seq[(Long, Long)]) =
+    onBothPaths(pairs(Dedup.connectedComponents(edges)))
 
   test("local union-find == distributed min-label loop (star, chain, cycle, merge)") {
     val edges = Seq(
@@ -64,5 +69,22 @@ class CCFastPathSpec extends SparkSpec {
     val edges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     val (local, dist) = both(edges)
     assert(local.isEmpty && dist.isEmpty)
+  }
+
+  test("ccIncremental / ccIncrementalPatch: a null-endpoint edge is inert on both paths") {
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L)).toDF("id", "comp")
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (2L, 3L), (null, 4L), (5L, null), (null, null), (6L, 7L))
+      .toDF("id_a", "id_b")
+    val (local, dist) = onBothPaths(pairs(Dedup.ccIncremental(labels, edges)))
+    assert(local === dist)
+    // 4 keeps its own label and 5 gets none: the null edges touch nothing
+    assert(local === Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (6L, 6L), (7L, 6L)))
+    val (pLocal, pDist) = onBothPaths {
+      val (patch, fresh) = Dedup.ccIncrementalPatch(labels, edges)
+      (pairs(patch), pairs(fresh))
+    }
+    assert(pLocal === pDist)
+    assert(pLocal === (Seq((3L, 1L), (7L, 6L)), Seq((6L, 6L), (7L, 6L))))
   }
 }
