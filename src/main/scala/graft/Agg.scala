@@ -35,13 +35,6 @@ object Agg {
     df.groupBy(key).agg(exprs.head, exprs.tail: _*)
   }
 
-  /** A3 — global one-row summary stats for a measure column
-    * (reference `examples/tract_level_analysis.py:121-139`). */
-  def summaryStats(df: DataFrame, c: String): DataFrame =
-    df.agg(
-      sum(col(c)).as("sum"), avg(col(c)).as("mean"), median(col(c)).as("median"),
-      min(col(c)).as("min"), max(col(c)).as("max"))
-
   /** Margin-of-error propagation under re-aggregation — the Census
     * Bureau's documented method for derived ACS estimates (the operation
     * the reference's MOE expansion, P5, stops short of): the MOE of a sum

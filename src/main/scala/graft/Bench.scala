@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(32)
     // Pin ALL bench temp I/O (streaming temp checkpoints, foreachBatch
     // parquet spills, staging dirs, executor shuffle spill) to one fixed
     // repo-local path instead of the shared /tmp: the streaming queries'
@@ -12,20 +12,10 @@ object Bench {
     // /tmp the loaded host was churning (r10 verdict directive 6). The
     // dir is wiped per run — bench runs never resume checkpoints.
     val benchTmp = new java.io.File("target/bench_tmp")
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmTree)
-      f.delete(); ()
-    }
-    if (benchTmp.exists()) rmTree(benchTmp)
+    Staging.deleteRecursively(benchTmp)
     benchTmp.mkdirs()
     System.setProperty("java.io.tmpdir", benchTmp.getAbsolutePath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", benchTmp.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus, "spark.local.dir" -> benchTmp.getAbsolutePath)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: run every query once at the bench SF, so the timed
     // pass measures steady-state data work — not Janino codegen, JIT
@@ -151,7 +141,11 @@ object Bench {
     val fullGc = results.map { case (k, _, _, g) =>
       s"\"" + shortKey(k) + "\":" + g }
       .mkString("{", ",", "}")
-    val fullLine = s"""{$head,"queries":$fullQs,"gc_ms":$fullGc,"failed":$failed,"sf":"$sfDir"}"""
+    // the run's own config rides along (bench_full.json only), so a
+    // record from an 8-core run can never pass for a 32-core one
+    val gcNames = gcBeans.asScala.map("\"" + _.getName + "\"").mkString("[", ",", "]")
+    val maxHeapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
+    val fullLine = s"""{$head,"queries":$fullQs,"gc_ms":$fullGc,"failed":$failed,"sf":"$sfDir","cpus":$cpus,"max_heap_mb":$maxHeapMb,"gc":$gcNames}"""
     // full-suite runs only: dev subset runs must not clobber the round's
     // committed per-query record
     if (args.isEmpty) try {

@@ -3389,7 +3389,7 @@ object ExtQueries {
     * build replayed end-to-end: the green row proves post-compaction ≡
     * from-scratch, the q364 LSM-compaction convention applied to ANN.
     * The recall-decay measurement that motivates the compaction lives
-    * in the IvfDriftProbe (PLANS §r12 IVF drift). */
+    * in PLANS.md §r12 IVF codebook drift. */
   private val q367 = QDef("q367_ann_index_recluster",
     (s, dir) => {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

@@ -1232,7 +1232,8 @@ object PlanningQueries {
     * resolve lazily through one broadcast join. Same full-recompute
     * oracle as q364 — the green row proves the patch-log composition
     * ≡ batch-full — with per-trigger durable I/O independent of corpus
-    * size (measured vs the eager swap in IngestStreamProbe). */
+    * size (measured vs the eager swap: PLANS.md §r12 streaming loops at
+    * 100×). */
   private val q368 = QDef("q368_stream_cluster_patchlog",
     (s, dir) => {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

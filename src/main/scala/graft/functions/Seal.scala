@@ -74,15 +74,4 @@ object Seal {
   def sqlRatio4(num: String, den: String): String =
     s"CAST(CASE WHEN $num < 0 THEN -((2 * CAST(-($num) AS HUGEINT) * 10000 + $den) // (2 * $den)) " +
       s"ELSE (2 * CAST($num AS HUGEINT) * 10000 + $den) // (2 * $den) END AS DOUBLE) / 10000.0"
-
-  /** DuckDB fragment mirroring [[pow4]]. */
-  def sqlPow4(num: String, m: Int): String = {
-    require(m >= 4)
-    if (m == 4) s"CAST($num AS DOUBLE) / 10000.0"
-    else {
-      val den = math.pow(10, m - 4).toLong
-      s"CAST(CASE WHEN $num < 0 THEN -((2 * CAST(-($num) AS HUGEINT) + $den) // ${2 * den}) " +
-        s"ELSE (2 * CAST($num AS HUGEINT) + $den) // ${2 * den} END AS DOUBLE) / 10000.0"
-    }
-  }
 }

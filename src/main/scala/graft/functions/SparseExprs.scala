@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongType}
 
 /** Σ min(wa, wb) over the key-intersection of two SPARSE vectors given
   * as parallel (sorted-keys, weights) array pairs — the weighted-Jaccard
@@ -15,73 +14,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * the alternative (per-pair posting-list join + hash re-aggregation)
   * shuffles |pairs|·|doc| rows, which at 10⁵+ candidate pairs is the
   * dominant stage cost (measured on q305: 2.5 s join+agg vs sub-second
-  * merge). Keys are strings sorted in UTF8 binary order — exactly the
-  * order `array_sort(collect_list(struct(term, tf)))` produces, and the
-  * order UTF8String.compare implements, so the merge never misses.
+  * merge). Keys are 64-bit hashes (the q61/q326 fixed-width convention),
+  * so the key compare is a single long compare and everything upstream
+  * (shuffles, join keys, sort order) is fixed-width too. Keys sorted
+  * ascending as signed longs — exactly the order `array_sort` produces
+  * for LongType, so the merge never misses.
   *
   * Nulls: any null input array yields NULL; elements are assumed
   * non-null (builders construct them from non-null groupBy keys).
   */
-case class SparseMinSum(ka: Expression, wa: Expression,
-                        kb: Expression, wb: Expression)
-    extends QuaternaryExpression with ExpectsInputTypes {
-  override def first: Expression = ka
-  override def second: Expression = wa
-  override def third: Expression = kb
-  override def fourth: Expression = wb
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType), ArrayType(LongType),
-      ArrayType(StringType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_sparse_min_sum"
-  override def nullable: Boolean =
-    ka.nullable || wa.nullable || kb.nullable || wb.nullable
-
-  override def nullSafeEval(a1: Any, a2: Any, a3: Any, a4: Any): Any = {
-    val k1 = a1.asInstanceOf[ArrayData]; val v1 = a2.asInstanceOf[ArrayData]
-    val k2 = a3.asInstanceOf[ArrayData]; val v2 = a4.asInstanceOf[ArrayData]
-    var i = 0; var j = 0; var s = 0L
-    val n1 = k1.numElements(); val n2 = k2.numElements()
-    while (i < n1 && j < n2) {
-      val c = k1.getUTF8String(i).compareTo(k2.getUTF8String(j))
-      if (c == 0) {
-        s += math.min(v1.getLong(i), v2.getLong(j)); i += 1; j += 1
-      } else if (c < 0) i += 1
-      else j += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (k1, v1, k2, v2) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val s = ctx.freshName("s"); val c = ctx.freshName("c")
-      s"""
-         |int $i = 0; int $j = 0; long $s = 0L;
-         |while ($i < $k1.numElements() && $j < $k2.numElements()) {
-         |  int $c = $k1.getUTF8String($i).compareTo($k2.getUTF8String($j));
-         |  if ($c == 0) {
-         |    $s += Math.min($v1.getLong($i), $v2.getLong($j));
-         |    $i++; $j++;
-         |  } else if ($c < 0) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      first: Expression, second: Expression,
-      third: Expression, fourth: Expression): Expression =
-    copy(ka = first, wa = second, kb = third, wb = fourth)
-}
-
-/** [[SparseMinSum]] over 64-bit-hashed keys (the q61/q326 fixed-width
-  * convention): same two-pointer merge, but the key compare is a single
-  * long compare instead of a UTF8 byte scan — and everything upstream
-  * (shuffles, join keys, sort order) moves to fixed-width longs too.
-  * Keys sorted ascending as signed longs — exactly the order
-  * `array_sort` produces for LongType. */
 case class SparseMinSumLong(ka: Expression, wa: Expression,
                             kb: Expression, wb: Expression)
     extends QuaternaryExpression with ExpectsInputTypes {
@@ -255,10 +196,6 @@ case class SortedIntersectCountLong(ka: Expression, kb: Expression)
 }
 
 object SparseExprs {
-  def sparseMinSum(ka: Column, wa: Column, kb: Column, wb: Column): Column =
-    ExpressionUtils.column(SparseMinSum(
-      ExpressionUtils.expression(ka), ExpressionUtils.expression(wa),
-      ExpressionUtils.expression(kb), ExpressionUtils.expression(wb)))
   def sparseMinSumLong(ka: Column, wa: Column, kb: Column, wb: Column): Column =
     ExpressionUtils.column(SparseMinSumLong(
       ExpressionUtils.expression(ka), ExpressionUtils.expression(wa),

@@ -1032,7 +1032,8 @@ object Dedup {
     * iterative min-label propagation — the clustering step that turns
     * near-dup PAIRS into dedup GROUPS (keep the min-id doc per component,
     * drop the rest). Returns (id, comp) for every edge endpoint, where
-    * comp = the smallest doc id reachable from it.
+    * comp = the smallest doc id reachable from it; an edge with a null
+    * endpoint is ignored.
     *
     * Scale shape: each iteration is one equi-join plus one min-aggregate,
     * both shuffle-keyed by node id; converges in O(component diameter)
@@ -1042,10 +1043,13 @@ object Dedup {
     * early the first iteration no label improves. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
                           scope: CkptScope = CkptScope.session): DataFrame = {
-    val symPlan = edges
+    // an edge with a null endpoint connects nothing (as in ccContract):
+    // dropped before either branch, so the driver probe never reads a
+    // null as a node id and neither path labels a null id
+    val e = edges
       .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .unionByName(edges
-        .select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+    val symPlan = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
     // SMALL-GRAPH FAST PATH (r13 optimization): below the threshold, run
     // union-find on the driver instead of the iterative join loop. The
     // distributed loop costs ~4 Spark jobs per iteration (join + agg +
@@ -1255,9 +1259,9 @@ object Dedup {
     * coalesce(patch[comp], comp) — one broadcast join); per-trigger
     * durable I/O is then O(batch + total-moves), independent of corpus
     * size ([[graft.streaming.IngestStreams]] patch-log loop, q368;
-    * measured against the eager swap in IngestStreamProbe). The eager
-    * [[ccIncremental]] stays the right call when the state must be a
-    * plain materialized labels table. */
+    * measured against the eager swap in PLANS.md §r12 streaming loops
+    * at 100×). The eager [[ccIncremental]] stays the right call when the
+    * state must be a plain materialized labels table. */
   def ccIncrementalPatch(labels: DataFrame, newEdges: DataFrame,
                          maxIter: Int = 20,
                          scope: CkptScope = CkptScope.session)

@@ -194,9 +194,6 @@ object Trend {
         .as(s"ss_$suf"))
     val aggs = side(a, "a") ++ side(b, "b")
     val sums = g.agg(aggs.head, aggs.tail: _*)
-    def meanOf(s: String) =
-      col(s"s_$s").cast("double") /
-        nullif(col(s"n_$s"), lit(0L)).cast("double")
     // nullif on BOTH divisors: n <= 1 must surface as SQL-NULL, not as a
     // 0.0/0.0 NaN slipping through the downstream sqrt guard
     def varOverN(s: String) =

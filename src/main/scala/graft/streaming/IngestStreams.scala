@@ -104,7 +104,7 @@ object IngestStreams {
     * everything and runs ONE streaming query (the production shape);
     * `true` restarts the stream from its checkpoint after every day —
     * the recovery drill the durability pins compare against the
-    * uninterrupted run. The soak drill's finer controls:
+    * uninterrupted run. The finer controls (SoakSpec's 10-day soak):
     * `killAfterDays` restarts the stream after the NAMED days only
     * (kills at chosen points, ignored when `killBetweenDays` already
     * restarts everywhere); `afterSegment(lastDay)` runs between stream
@@ -148,7 +148,10 @@ object IngestStreams {
     // Dataset.inputFiles reads the micro-batch scan's file index on the
     // driver — no Spark job (r14, guide §1.2: the distinct-count spelling
     // scanned the whole batch once per trigger). Fall back to the scan
-    // only when the plan exposes no file-source leaf.
+    // only when the plan exposes no file-source leaf. inputFiles counts
+    // every file of the batch, zero-row files included (the scan counted
+    // only files that contribute rows), so a day that arrives with an
+    // empty part file beside it is refused too.
     val files = batch.inputFiles
     val n: Long =
       if (files.nonEmpty) files.distinct.length.toLong
@@ -181,8 +184,6 @@ object IngestStreams {
   private[graft] def dedupLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
       prep: DataFrame => DataFrame,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
-      survRows: Option[scala.collection.mutable.Buffer[Long]] = None,
       compactAfterDay: Option[Int] = None)
       : DataFrame = {
     val idx = name + "_idx"
@@ -200,7 +201,6 @@ object IngestStreams {
       // outer session would read a stale file index and silently skip
       // prior survivors
       val ss = batch.sparkSession
-      val t0 = System.nanoTime()
       val scope = CkptScope()
       try {
         val kept = prep(batch)
@@ -221,9 +221,7 @@ object IngestStreams {
           .withColumn("ingest_day", lit((batchId + 1).toInt))
           .write.mode("overwrite")
           .parquet(new java.io.File(outDir, s"ingest_batch=$batchId").getPath)
-        survRows.foreach(_ += surv.count())
       } finally scope.freeAll()
-      batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       ()
     }
     driveDays(spark, days.head.schema, spool, ckpt, days,
@@ -365,18 +363,16 @@ object IngestStreams {
   }
 
   /** [[runLexicalIngest]] / [[runLexicalIngestStats]]'s core over
-    * EXPLICIT corpus/day frames (the 100× probe drives it with modular
-    * cuts, the annLoop convention): stage day-0 postings, append each
+    * EXPLICIT corpus/day frames (SoakSpec drives it with modular cuts,
+    * the annLoop convention): stage day-0 postings, append each
     * arriving day's postings (plus, with `maintainStats`, the q389
     * day-tagged df/N delta), then serve panel top-k from the grown
-    * index. `appendRows` observes the per-trigger durable write volume
-    * (posting rows — batch-bounded by construction: tf is a pure
-    * per-document function). */
+    * index. The per-trigger durable write is posting rows —
+    * batch-bounded by construction: tf is a pure per-document
+    * function. */
   private[graft] def lexicalLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, maintainStats: Boolean,
       killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
-      appendRows: Option[scala.collection.mutable.Buffer[Long]] = None,
       killAfterDays: Set[Int] = Set.empty,
       compactAfterDay: Option[Int] = None)
       : DataFrame = {
@@ -390,23 +386,16 @@ object IngestStreams {
     } else VStage.init(p0, idx, "term", 8)
     val (spool, ckpt) = freshPaths(name)
     val body = (batch: DataFrame, bid: Long) => {
-      val t0 = System.nanoTime()
       if (maintainStats) {
         // one tokenize pass feeds both appends
         val p = graft.Curate.tokenPostings(batch, col("doc_id"), col("text"))
           .localCheckpoint()
         VStage.append(p, idx, "term", 8)
         VStage.append(statsDelta(p, bid), st, "term", 8)
-        appendRows.foreach(_ += p.count())
-      } else {
-        // pin only when the probe observes the write volume — the
-        // production body appends the lazy plan directly
-        val p0b = graft.Curate.tokenPostings(batch, col("doc_id"), col("text"))
-        val p = if (appendRows.isDefined) p0b.localCheckpoint() else p0b
-        VStage.append(p, idx, "term", 8)
-        appendRows.foreach(_ += p.count())
-      }
-      batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
+      } else
+        VStage.append(
+          graft.Curate.tokenPostings(batch, col("doc_id"), col("text")),
+          idx, "term", 8)
       ()
     }
     driveDays(spark, days.head.schema, spool, ckpt, days,
@@ -507,8 +496,9 @@ object IngestStreams {
     * candidates before ranking (`dedupCandidates`, candidate-set-sized,
     * never an index-side shuffle), and the recluster compaction
     * physically drops the duplicates. */
-  /** [[runAnnIngest]]'s core over EXPLICIT corpus/day frames (the 100×
-    * probe drives it with modular cuts): stages the day-0 IVF index
+  /** [[runAnnIngest]]'s core over EXPLICIT corpus/day frames (modular
+    * cuts at 1×/10×/100× corpora: PLANS.md §r13 q370/q372 100× rows):
+    * stages the day-0 IVF index
     * under a codebook trained on the day-0 slice, appends each arriving
     * day's cell assignments. Returns the serving codebook; the staged
     * index is `name + "_idx"` (a [[graft.VStage]] logical table). */
@@ -520,8 +510,6 @@ object IngestStreams {
     * which is exactly what the returned centroids are). */
   private[graft] def annLoop(spark: SparkSession, corpusVecs: DataFrame,
       days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
-      appendRows: Option[scala.collection.mutable.Buffer[Long]] = None,
       reclusterAfterDay: Option[Int] = None,
       killAfterDays: Set[Int] = Set.empty)
       : Seq[(Long, Array[Double])] = {
@@ -544,13 +532,10 @@ object IngestStreams {
       idx, "cell", 8)
     val (spool, ckpt) = freshPaths(name)
     val body = (batch: DataFrame, _: Long) => {
-      val t0 = System.nanoTime()
       VStage.append(
         graft.Similarity.ivfIndexFrame(batch, col("embedding"),
           col("vec_id"), cents),
         idx, "cell", 8)
-      appendRows.foreach(_ += batch.count())
-      batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       ()
     }
     driveDays(spark, days.head.schema, spool, ckpt, days,
@@ -625,20 +610,16 @@ object IngestStreams {
     * oracle is simply the full-recompute cluster census — the green
     * row proves streaming-incremental ≡ batch-full end-to-end. */
   /** The cluster-maintenance loop over EXPLICIT corpus/day frames — the
-    * core [[runClusterMaintenance]] (threshold cuts) and the 100×
-    * streaming probe (modular cuts, so the batch stays fixed-size while
-    * the corpus scales) share. Stages the corpus index, bootstraps the
-    * durable labels, drives the days, returns the state path.
-    * `batchSeconds` (probe hook) collects the wall of each APPLIED
-    * micro-batch body — the per-trigger cost the O(batch) contract is
-    * about. */
+    * core of [[runClusterMaintenance]] (threshold cuts) and SoakSpec
+    * (modular cuts, so the batch stays fixed-size while the corpus
+    * scales; measured at 1×/10×/100× in PLANS.md §r12 streaming loops at
+    * 100×). Stages the corpus index, bootstraps the durable labels,
+    * drives the days, returns the state path. */
   private[graft] def clusterLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
-      maxFilesPerTrigger: Option[Int] = Some(1),
-      writeRows: Option[scala.collection.mutable.Buffer[Long]] = None)
+      maxFilesPerTrigger: Option[Int] = Some(1))
       : String = {
     val idx = name + "_idx"
     val statePath = s"target/ingest_state_$name"
@@ -667,7 +648,6 @@ object IngestStreams {
       // already ran; see the class doc for why an append replay on a
       // NOT-committed batch is inert)
       if (batchId > DurableState.committedBatch(statePath)) {
-        val t0 = System.nanoTime()
         val scope = CkptScope()
         try {
           val state = DurableState.load(ss, statePath)
@@ -690,12 +670,8 @@ object IngestStreams {
           VStage.append(
             Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
             idx, "lsh_key", 8)
-          // probe hook rides the commit's own observed count — the eager
-          // swap rewrites the WHOLE state (no extra re-read job, r14)
-          val stateRows = DurableState.commit(next, statePath, batchId)
-          writeRows.foreach(_ += stateRows)
+          DurableState.commit(next, statePath, batchId)
         } finally scope.freeAll()
-        batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       }
       ()
     }
@@ -834,17 +810,15 @@ object IngestStreams {
     * it periodically. Same recovery story as the eager loop: marker-
     * gated exactly-once, kill-and-resume ≡ uninterrupted (pinned), and
     * the q368 oracle replays the full recompute census. Measured
-    * against the eager loop across 1×/10×/100× corpora in
-    * IngestStreamProbe. */
+    * against the eager loop across 1×/10×/100× corpora in PLANS.md
+    * §r12 streaming loops at 100×. */
   private[graft] def clusterLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String,
       killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
-      maxFilesPerTrigger: Option[Int] = Some(1),
-      writeRows: Option[scala.collection.mutable.Buffer[Long]] = None)
+      maxFilesPerTrigger: Option[Int] = Some(1))
       : String = {
     val idx = name + "_idx"
     val statePath = s"target/ingest_state_$name"
@@ -868,7 +842,6 @@ object IngestStreams {
       val patchPath = statePath + "_patch"
       DurableState.recover(patchPath)
       if (batchId > DurableState.committedBatch(patchPath)) {
-        val t0 = System.nanoTime()
         val scope = CkptScope()
         try {
           val labels = patchLogLabels(ss, statePath)
@@ -886,10 +859,10 @@ object IngestStreams {
           // idempotent per-batch label append, then the marker-carrying
           // patch swap as the commit point (replay overwrites the same
           // label dir and recomputes the same fold). Both cardinalities
-          // the fold trigger and the probe hook need ride the two writes
-          // as Observations (r14, guide §1.2: the separate freshLab
-          // count re-ran its plan and the patch count re-read the swap —
-          // 3 extra jobs per trigger for numbers the writes already had)
+          // the fold trigger needs ride the two writes as Observations
+          // (r14, guide §1.2: the separate freshLab count re-ran its plan
+          // and the patch count re-read the swap — 3 extra jobs per
+          // trigger for numbers the writes already had)
           val labObs = org.apache.spark.sql.Observation()
           freshLab.observe(labObs, count(lit(1)).as("rows"))
             .write.mode("overwrite").parquet(
@@ -911,11 +884,7 @@ object IngestStreams {
           // benign (see foldPatchState)
           maybeFold(ss, statePath, patchRows, labRows,
             foldFactor, foldPatchLog)
-          // probe hook: durable rows this trigger (label append + the
-          // live patch after compose — the batch-bounded claim)
-          writeRows.foreach(_ += labRows + patchRows)
         } finally scope.freeAll()
-        batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       }
       ()
     }
@@ -995,13 +964,13 @@ object IngestStreams {
     * inheritance steps — so the green row proves the day-after-day
     * state composition equals the from-scratch sequential analysis. */
   /** The eager split-stable loop over EXPLICIT corpus/day frames (the
-    * multi-day core [[runSplitStableIngest]] and the soak drill
-    * share). ORDER-DEPENDENT: asserts the one-day-per-trigger contract
+    * multi-day core [[runSplitStableIngest]] and SoakSpec's 10-day
+    * soak share; per-trigger walls in PLANS.md §r13 10-day soak
+    * measurement). ORDER-DEPENDENT: asserts the one-day-per-trigger contract
     * ([[assertSingleFile]]). Returns the state path. */
   private[graft] def splitLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, salt: String,
       killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
       maxFilesPerTrigger: Option[Int] = Some(1)): String = {
@@ -1033,7 +1002,6 @@ object IngestStreams {
       assertSingleFile(batch)
       DurableState.recover(statePath)
       if (batchId > DurableState.committedBatch(statePath)) {
-        val t0 = System.nanoTime()
         val scope = CkptScope()
         try {
           // self-exclusion for replay-after-append (see clusterLoop)
@@ -1048,7 +1016,6 @@ object IngestStreams {
             idx, "lsh_key", 8)
           DurableState.commit(next, statePath, batchId)
         } finally scope.freeAll()
-        batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       }
       ()
     }
@@ -1103,13 +1070,12 @@ object IngestStreams {
     * from-scratch sequential analysis. */
   /** The patch-log split loop over EXPLICIT corpus/day frames
     * ([[splitLoop]]'s deferred twin; the multi-day core
-    * [[runSplitStablePatchLog]] and the soak drill share). Same
+    * [[runSplitStablePatchLog]] and SoakSpec's 10-day soak share). Same
     * one-day-per-trigger contract; auto-folds on the [[maybeFold]]
     * size trigger. Returns the state path. */
   private[graft] def splitLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String, salt: String,
       killBetweenDays: Boolean,
-      batchSeconds: Option[scala.collection.mutable.Buffer[Double]] = None,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => ()): String = {
@@ -1144,7 +1110,6 @@ object IngestStreams {
       val patchPath = statePath + "_patch"
       DurableState.recover(patchPath)
       if (batchId > DurableState.committedBatch(patchPath)) {
-        val t0 = System.nanoTime()
         val scope = CkptScope()
         try {
           // self-exclusion for replay-after-append (see clusterLoop)
@@ -1171,7 +1136,6 @@ object IngestStreams {
           maybeFold(ss, statePath, patchRows, newRowsN,
             foldFactor, foldPatchAssign)
         } finally scope.freeAll()
-        batchSeconds.foreach(_ += (System.nanoTime() - t0) / 1e9)
       }
       ()
     }

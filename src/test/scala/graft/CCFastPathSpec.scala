@@ -71,6 +71,21 @@ class CCFastPathSpec extends SparkSpec {
     assert(local.isEmpty && dist.isEmpty)
   }
 
+  test("connectedComponents: a null-endpoint edge is inert on both paths") {
+    val edges = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (null, 3L), (4L, null), (null, null), (2L, 5L), (6L, 7L))
+      .toDF("id_a", "id_b")
+    val (local, dist) = onBothPaths(
+      rows(Dedup.connectedComponents(edges).orderBy("id"))
+        .map(r => (Option(r.get(0)), Option(r.get(1)))))
+    assert(local === dist)
+    assert(local.forall { case (id, comp) => id.isDefined && comp.isDefined },
+      "no null id or label")
+    // 3 and 4 touch only null edges, so they get no label
+    assert(local.map { case (id, comp) => (id.get, comp.get) } ===
+      Seq((1L, 1L), (2L, 1L), (5L, 1L), (6L, 6L), (7L, 6L)))
+  }
+
   test("ccIncremental / ccIncrementalPatch: a null-endpoint edge is inert on both paths") {
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L)).toDF("id", "comp")
     val edges = Seq[(java.lang.Long, java.lang.Long)](

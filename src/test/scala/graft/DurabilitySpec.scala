@@ -426,7 +426,7 @@ class DurabilitySpec extends SparkSpec {
       "min(corpus_id) — self-exclusion restores the pre-batch edges") {
     val docs = Tables.t(spark, sf, "documents")
     // modular cuts: the batch's ids interleave BELOW most corpus ids,
-    // the IngestStreamProbe drive shape the threshold-cut queries mask
+    // the SoakSpec drive shape the threshold-cut queries mask
     val corpus = docs.where(col("doc_id") % 10 < 8)
     val batch = docs.where(col("doc_id") % 10 === 8)
     Staging.stageBucketed(

@@ -425,7 +425,7 @@ class PlanAuditSpec extends SparkSpec {
                              exception: Exception): Unit = ()
     }
     def drain(): Unit =
-      org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+      org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

@@ -556,7 +556,7 @@ class ScaleSpec extends SparkSpec {
       spark.listenerManager.register(l)
       try {
         val rows = build.orderBy("id_a", "id_b").collect().toSeq
-        org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
         (hints.get, rows)
       } finally spark.listenerManager.unregister(l)
     }
@@ -619,13 +619,13 @@ class ScaleSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
-    org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     val got =
       try {
         val out = Dedup.ccIncremental(labels, newE)
         val got = out.collect()
-        org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
         got
       } finally spark.listenerManager.unregister(l)
     val plans = scala.jdk.CollectionConverters
@@ -666,14 +666,14 @@ class ScaleSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
-    org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     val got =
       try {
         val e = Dedup.batchIngestEdges(batch,
           Staging.load(spark, "b_bie_idx"), col("text"), col("doc_id"))
         val got = e.orderBy("id_a", "id_b").collect().toSeq
-        org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
         got
       } finally spark.listenerManager.unregister(l)
     val scans = scala.jdk.CollectionConverters
@@ -729,13 +729,13 @@ class ScaleSpec extends SparkSpec {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
-    org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(l)
     val (tokenizeJobs, finalHasMinhash, rows) =
       try {
         val df = SparkEntry.queries("q350_cluster_safe_split")(spark, sf)
         val rows = df.collect()
-        org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
         val plans = scala.jdk.CollectionConverters
           .IteratorHasAsScala(captured.iterator).asScala.toSeq
         (plans.count(hasMinhash), hasMinhash(df.queryExecution.analyzed),
@@ -749,14 +749,14 @@ class ScaleSpec extends SparkSpec {
     // and the same single-scan contract for the q351 flagship (its
     // 3-shingle drop stage legitimately tokenizes once more — the fused
     // census itself adds exactly one)
-    org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+    org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
     captured.clear()
     spark.listenerManager.register(l)
     val t351 =
       try {
         val df = SparkEntry.queries("q351_training_prep_v3")(spark, sf)
         df.collect()
-        org.apache.spark.sql.graft.TestListenerBus.drain(spark.sparkContext)
+        org.apache.spark.sql.graft.ListenerBus.drain(spark.sparkContext)
         scala.jdk.CollectionConverters
           .IteratorHasAsScala(captured.iterator).asScala.toSeq
           .count(hasMinhash)

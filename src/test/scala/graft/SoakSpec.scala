@@ -14,7 +14,8 @@ import graft.streaming.{DurableState, IngestStreams}
 class SoakSpec extends SparkSpec {
 
   private val docs = Tables.t(spark, sf, "documents")
-  // MODULAR cuts (the IngestStreamProbe drive shape): arriving ids
+  // MODULAR cuts (the 100× streaming measurements' drive shape,
+  // PLANS.md §r12 streaming loops at 100×): arriving ids
   // interleave BELOW corpus ids, so merges move component minima —
   // without that, threshold cuts never produce a patch row (new ids
   // are always above the old minimum) and the fold pins would be
