@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerBus
@@ -15,8 +15,8 @@ import org.apache.spark.sql.graft.ListenerBus
   * }}}
   *
   *  - `time`: each iteration's wall (noop sink, as Bench), then the last
-  *    iteration's shuffle write/read, spill and task count, read by one
-  *    task-metrics listener — steady-state cost apart from first-run
+  *    iteration's shuffle write/read and spill bytes and its task and job
+  *    counts, read by one listener — steady-state cost apart from first-run
   *    codegen/IO warmup, and the evidence behind PLANS.md's "one shuffle
   *    of X" claims.
   *  - `explain`: the formatted physical plan, to audit the scale-critical
@@ -50,8 +50,9 @@ object Dev {
 
   private def time(spark: SparkSession, dir: String, iters: Int,
                    names: Seq[String]): Unit = {
-    val write, read, spill, tasks = new AtomicLong
+    val write, read, spill, tasks, jobs = new AtomicLong
     val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         Option(te.taskMetrics).foreach { m =>
           write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
@@ -63,10 +64,10 @@ object Dev {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     println(f"${"query"}%-28s ${"wall_s per iteration"}%-24s " +
-      f"${"shufW_MB"}%9s ${"shufR_MB"}%9s ${"spill_MB"}%9s ${"tasks"}%6s")
+      f"${"shufW_MB"}%9s ${"shufR_MB"}%9s ${"spill_MB"}%9s ${"tasks"}%6s ${"jobs"}%5s")
     try names.foreach { n =>
       val walls = (1 to iters).map { _ =>
-        Seq(write, read, spill, tasks).foreach(_.set(0))
+        Seq(write, read, spill, tasks, jobs).foreach(_.set(0))
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
@@ -77,7 +78,7 @@ object Dev {
       }
       println(f"$n%-28s ${walls.map(t => f"$t%7.3f").mkString(" ")}%-24s " +
         f"${write.get / 1e6}%9.3f ${read.get / 1e6}%9.3f " +
-        f"${spill.get / 1e6}%9.3f ${tasks.get}%6d")
+        f"${spill.get / 1e6}%9.3f ${tasks.get}%6d ${jobs.get}%5d")
     } finally sc.removeSparkListener(listener)
   }
 

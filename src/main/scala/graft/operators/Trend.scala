@@ -463,7 +463,7 @@ object Trend {
     val observed = df.select(variant.as("v"))
       .where(col("v").isin(design.map(_._1): _*))
       .groupBy("v").agg(count(lit(1)).as("o"))
-    val counts = broadcast(designSpine(df.sparkSession, design))
+    val counts = designSpine(df.sparkSession, design)
       .join(observed, Seq("v"), "left")
       .select(coalesce(col("o"), lit(0L)).as("o"), col("r"))
     val tot = counts.agg(sum("o").as("n"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -13,10 +14,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * S1–S4): `spark.read.format("graft.sources.CensusDataSource")
   * .option("payload", id).load()`.
   *
-  * Planning mirrors the reference's per-state fan-out
-  * (`src/census_pipeline.py:279-322`): ONE input partition per state, so
-  * the "fetches" run in parallel across executor slots — the thread-pool
-  * becomes the task scheduler. All columns land as strings (the API's
+  * Planning sizes the scan to the session, not to the states: one input
+  * partition per core (`min(#states, defaultParallelism)`), the sorted
+  * state codes dealt round-robin over them. The reference fans out one
+  * fetch per state over a thread pool (`src/census_pipeline.py:279-322`);
+  * here the task scheduler is the pool, and since Spark never runs more
+  * than one task per core at a time, a task per state would add only
+  * per-task set-up (task deserialization, per-task aggregation codegen
+  * downstream) without fetching any faster. Round-robin over sorted codes
+  * is deterministic and needs no size estimate, which an HTTP transport
+  * could not give before fetching. All columns land as strings (the API's
   * contract); numeric coercion stays a downstream projection
   * (`Pipeline.parseApiResponse` semantics).
   *
@@ -25,7 +32,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * deployment replaces the registry lookup in [[CensusPartitionReader]]
   * with an HTTP GET wrapped by [[CensusApi.withRetry]] (the executable
   * retry/backoff/rate-limit policy), keeping every planning/partitioning
-  * piece unchanged. */
+  * piece unchanged. The per-state retry stays inside the reader; a task
+  * that still fails is retried by Spark as a whole, which re-fetches every
+  * state of its group. */
 class CensusDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     CensusPayloads.schema(options.get("payload"))
@@ -44,28 +53,33 @@ class CensusTable(payloadId: String, tschema: StructType) extends Table with Sup
       override def build(): Scan = this
       override def readSchema(): StructType = tschema
       override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] =
-        CensusPayloads.states(payloadId).sorted
-          .map(s => CensusStatePartition(payloadId, s): InputPartition).toArray
+      override def planInputPartitions(): Array[InputPartition] = {
+        val states = CensusPayloads.states(payloadId).sorted
+        val n = math.min(states.size,
+          SparkSession.active.sparkContext.defaultParallelism)
+        Array.tabulate[InputPartition](n)(i =>
+          CensusStatesPartition(payloadId, (i until states.size by n).map(states)))
+      }
       override def createReaderFactory(): PartitionReaderFactory =
         new CensusReaderFactory(tschema.fields.length)
     }
 }
 
-/** One partition = one state's fetch (the unit of retry and parallelism). */
-case class CensusStatePartition(payloadId: String, state: String) extends InputPartition
+/** One partition = one task's group of states, fetched one after another. */
+case class CensusStatesPartition(payloadId: String, states: Seq[String]) extends InputPartition
 
 class CensusReaderFactory(nCols: Int) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[CensusStatePartition]
-    new CensusPartitionReader(p.payloadId, p.state, nCols)
+    val p = partition.asInstanceOf[CensusStatesPartition]
+    new CensusPartitionReader(p.payloadId, p.states, nCols)
   }
 }
 
-class CensusPartitionReader(payloadId: String, state: String, nCols: Int)
+class CensusPartitionReader(payloadId: String, states: Seq[String], nCols: Int)
     extends PartitionReader[InternalRow] {
-  // production: HTTP GET happens here, on the executor, per state
-  private val it = CensusPayloads.rows(payloadId, state).iterator
+  // production: HTTP GET happens here, on the executor, per state, each
+  // fetched only when the previous state's rows are consumed
+  private val it = states.iterator.flatMap(CensusPayloads.rows(payloadId, _))
   private var current: Seq[String] = _
   override def next(): Boolean = { val h = it.hasNext; if (h) current = it.next(); h }
   override def get(): InternalRow =

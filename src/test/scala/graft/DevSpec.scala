@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Smoke pins for the dev entry point: `scale` writes a consistent
-  * key-shifted fixture, and `explain`/`time` run on it. */
+  * key-shifted fixture, and `explain`/`time` run on it; `time` prints
+  * task and job counts. */
 class DevSpec extends SparkSpec {
 
   test("Dev scale doubles every keyed table and its keys, keeps the " +
@@ -38,7 +39,14 @@ class DevSpec extends SparkSpec {
         .where(col("text").startsWith("zq")).isEmpty)
 
       Dev.main(Array("explain", dst.getPath, "q16_group_agg_mixed"))
-      Dev.main(Array("time", dst.getPath, "1", "q16_group_agg_mixed"))
+      val out = new java.io.ByteArrayOutputStream
+      Console.withOut(out) {
+        Dev.main(Array("time", dst.getPath, "1", "q16_group_agg_mixed"))
+      }
+      val Seq(header, row) = out.toString.linesIterator.toSeq
+      assert(header.split("\\s+").takeRight(2).toSeq === Seq("tasks", "jobs"))
+      val Array(tasks, jobs) = row.split("\\s+").takeRight(2).map(_.toLong)
+      assert(tasks > 0 && jobs > 0 && jobs <= tasks, row)
       assert(!spark.sparkContext.isStopped, "Dev must leave a reused session running")
     } finally Staging.deleteRecursively(dst)
   }

@@ -140,7 +140,7 @@ class PipelineSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("DataSourceV2 census source: partition-per-state, string schema, composes with coercion (S1-S4/X1)") {
+  test("DataSourceV2 census source: 2 states, 2 tasks, string cols, coercion (S1-S4/X1)") {
     graft.sources.CensusPayloads.register("acs5_test",
       header = Seq("NAME", "B01003_001E", "state"),
       rowsByState = Map(
@@ -150,7 +150,7 @@ class PipelineSpec extends SparkSpec {
       .option("payload", "acs5_test").load()
     assert(df.schema.fields.map(_.dataType).forall(_ ==
       org.apache.spark.sql.types.StringType))
-    assert(df.rdd.getNumPartitions === 2) // one fetch partition per state
+    assert(df.rdd.getNumPartitions === 2) // fewer states than cores: one each
     assert(df.count() === 3)
     // downstream coercion projection (P2): invalid numeric -> null
     val coerced = df.select(col("NAME"),
@@ -158,6 +158,41 @@ class PipelineSpec extends SparkSpec {
       .orderBy("NAME").collect()
     assert(coerced.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))).toSeq
       === Seq(Some(1600000d), Some(300000d), None))
+  }
+
+  /** (partition index, state) of every row a census scan returns. */
+  private def censusGroups(payload: String): Set[(Int, String)] =
+    spark.read.format("graft.sources.CensusDataSource").option("payload", payload)
+      .load().select("state").as[String].rdd
+      .mapPartitionsWithIndex((i, it) => it.map(i -> _)).collect().toSet
+
+  test("DataSourceV2 census source: 10 states on 4 cores, round-robin groups") {
+    val states = (1 to 10).map(i => f"$i%02d")
+    val byState = states.map(s => s -> (1 to s.toInt).map(j =>
+      Seq(s"tract $s-$j", s"$j", s))).toMap
+    graft.sources.CensusPayloads.register("acs5_ten",
+      header = Seq("NAME", "B01003_001E", "state"), rowsByState = byState)
+    assert(spark.sparkContext.defaultParallelism === 4)
+    val df = spark.read.format("graft.sources.CensusDataSource")
+      .option("payload", "acs5_ten").load()
+    assert(df.rdd.getNumPartitions === 4)
+    // every registered row comes back exactly once
+    assert(df.collect().map(_.toSeq.map(_.toString)).toSeq.sortBy(_.mkString("|")) ===
+      byState.values.flatten.toSeq.sortBy(_.mkString("|")))
+    // sorted codes dealt round-robin, the same on every load
+    val expected = states.zipWithIndex.map { case (s, i) => (i % 4, s) }.toSet
+    assert(censusGroups("acs5_ten") === expected)
+    assert(censusGroups("acs5_ten") === expected)
+  }
+
+  test("DataSourceV2 census source: a 1-state payload plans 1 partition") {
+    graft.sources.CensusPayloads.register("acs5_one",
+      header = Seq("NAME", "state"),
+      rowsByState = Map("06" -> Seq(Seq("Alameda", "06"), Seq("Alpine", "06"))))
+    val df = spark.read.format("graft.sources.CensusDataSource")
+      .option("payload", "acs5_one").load()
+    assert(df.rdd.getNumPartitions === 1)
+    assert(df.count() === 2)
   }
 
   test("aggregateToGeography: per-column named aggs + property sum(state)==sum(county) (A1)") {

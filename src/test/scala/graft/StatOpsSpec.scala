@@ -584,6 +584,18 @@ class StatOpsSpec extends SparkSpec {
     assert(math.abs(o2.getDouble(2) - expected) < 1e-3)
   }
 
+  test("srmCheck: no left outer join asks to broadcast its preserved side") {
+    // Spark cannot build the preserved side of a left join: such a hint is
+    // dropped at planning with a HintErrorLogger warning on every call
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
+    val plan = Trend.srmCheck(Seq("A", "B").toDF("v"), col("v"),
+      Seq("A" -> 0.5, "B" -> 0.5)).queryExecution.optimizedPlan
+    val leftOuter = plan.collect { case j: Join if j.joinType == LeftOuter => j }
+    assert(leftOuter.nonEmpty)
+    assert(!leftOuter.exists(_.hint.leftHint.exists(_.strategy.contains(BROADCAST))))
+  }
+
   // ------------------------------------------------------------------ HHI
 
   test("hhi: monopoly scores 1, even split scores 1/k") {
