@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Staging
 
 /** Crash-safe parquet state for foreachBatch drivers — the q327 CDC
   * sink's three-step rename swap, extracted so every stateful streaming
@@ -33,16 +34,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object DurableState {
   private val Marker = "_graft_commit"
 
-  private def rm(f: java.io.File): Unit = graft.Staging.deleteRecursively(f)
-
   /** Repair a crash at any point of the swap (idempotent; call before
     * every read of the state and at the top of every micro-batch). */
   def recover(statePath: String): Unit = {
     val tmp = new java.io.File(statePath + ".tmp")
     val old = new java.io.File(statePath + ".old")
-    if (tmp.exists()) rm(tmp)
+    if (tmp.exists()) Staging.deleteRecursively(tmp)
     if (old.exists()) {
-      if (new java.io.File(statePath).exists()) rm(old)
+      if (new java.io.File(statePath).exists()) Staging.deleteRecursively(old)
       else Files.move(Paths.get(statePath + ".old"), Paths.get(statePath))
     }
     ()
@@ -91,7 +90,7 @@ object DurableState {
     if (live.exists())
       Files.move(Paths.get(statePath), Paths.get(statePath + ".old"))
     Files.move(Paths.get(tmpPath), Paths.get(statePath))
-    rm(new java.io.File(statePath + ".old"))
+    Staging.deleteRecursively(new java.io.File(statePath + ".old"))
     obs.get("rows").asInstanceOf[Long]
   }
 
@@ -108,5 +107,6 @@ object DurableState {
 
   /** Drop the state (fresh-run initialization). */
   def destroy(statePath: String): Unit =
-    Seq("", ".tmp", ".old").foreach(s => rm(new java.io.File(statePath + s)))
+    Seq("", ".tmp", ".old").foreach(s =>
+      Staging.deleteRecursively(new java.io.File(statePath + s)))
 }

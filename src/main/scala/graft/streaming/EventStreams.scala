@@ -2,10 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
-
-import graft.streaming.DurableState
+import graft.streaming.{AvailableNow, DurableState}
 
 /** Structured Streaming over the events table (extension beyond reference
   * parity — the reference has no streaming surface, SURVEY §2.13).
@@ -71,45 +68,61 @@ object EventStreams {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** events.parquet schema with ts as raw nanos (see Tables.t). Fixture
-    * generations differ — TIMESTAMP(NANOS) lands as int64, timestamp[us]
-    * as TIMESTAMP_NTZ — so [[eventSource]] swaps the ts field to the
-    * probed on-disk type before reading. */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType), StructField("props", StringType)))
-
-  /** Streaming source over the events table with ts normalized to
-    * TIMESTAMP (UTC micros) regardless of the on-disk encoding. A
-    * file-stream source needs a declared schema, so the parquet footer is
-    * probed with a batch read first (metadata only — no data scan). */
-  private def eventSource(spark: SparkSession, dir: String,
-                          glob: String = "events.parquet",
-                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema("ts").dataType
-    val schema = StructType(eventSchema.map(f =>
-      if (f.name == "ts") f.copy(dataType = tsType) else f))
-    val src0 = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = maxFilesPerTrigger.fold(src0)(n =>
-      src0.option("maxFilesPerTrigger", n.toString))
-    val df = src.parquet(dir)
-    tsType match {
-      case LongType => // TIMESTAMP(NANOS) read as raw nano longs
-        df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampNTZType => // timestamp[us]; session tz is UTC, so the
-        // naive wall clock IS the UTC instant (the DuckDB epoch_us view)
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
+  /** Streaming source over the events table, `ts` normalized to
+    * TIMESTAMP (UTC micros) by [[Tables.eventTs]] as the batch loader
+    * does. File-stream sources require a directory: the source points at
+    * `dir` and glob-filters it to the events table. It also needs a
+    * declared schema: for the single events file that is the file's
+    * footer, read on the driver ([[Tables.footerSchema]]), so building
+    * the source starts no Spark job; a wider `glob` (multi-file test
+    * directories) keeps Spark's inference over the matching files. */
+  def readEventStream(spark: SparkSession, dir: String,
+                      glob: String = "events.parquet",
+                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val schema = Some(glob).filter(_ == "events.parquet")
+      .flatMap(g => Tables.footerSchema(spark, s"$dir/$g"))
+      .getOrElse(spark.read.option("pathGlobFilter", glob).parquet(dir).schema)
+    val src = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    maxFilesPerTrigger.foreach(n =>
+      src.option("maxFilesPerTrigger", n.toString))
+    Tables.eventTs(src.parquet(dir))
   }
 
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    // file-stream sources require a directory: point at the sf dir and
-    // glob-filter to the events table
-    eventSource(spark, dir)
+  /** Drains `df` (built under [[withStreamPartitions]]) into the memory
+    * table `name`, dropped first, and returns the table. */
+  private def drain(spark: SparkSession, name: String, mode: String)
+                   (df: => DataFrame): DataFrame = {
+    spark.catalog.dropTempView(name)
+    withStreamPartitions(spark) {
+      AvailableNow.run(df, mode, name = Some(name))
+    }
+    spark.table(name)
+  }
+
+  /** The stream-stream join sinks. `sink = "memory"` (default) drains
+    * through the in-memory table the oracle gate reads — right at
+    * fixture SF, but the memory sink COLLECTS every output row to the
+    * driver, and the joins' output grows with signup×click density per
+    * time bucket (the sf1 probe measured a 10× corpus overflowing
+    * spark.driver.maxResultSize). `sink = "parquet"` spills each
+    * micro-batch to a fresh temp dir and returns the read-back table —
+    * the production shape (executors write, driver never holds rows),
+    * identical result set (pinned). */
+  private def pairsSink(spark: SparkSession, joined: DataFrame,
+                        name: String, sink: String): DataFrame = {
+    require(sink == "memory" || sink == "parquet",
+      s"unknown sink $sink (memory | parquet)")
+    if (sink == "memory") drain(spark, name, "append")(joined)
+    else {
+      val out = java.nio.file.Files
+        .createTempDirectory(s"${name}_spill").toString + "/pairs"
+      withStreamPartitions(spark) {
+        AvailableNow.run(joined, name = Some(name), batch = Some(
+          (batch: DataFrame, _: Long) => batch.write.mode("append").parquet(out)))
+      }
+      spark.read.parquet(out)
+    }
+  }
 
   /** Event-time tumbling 1-hour window aggregation with a 1-hour watermark.
     * State is keyed by (window, event_type) — bounded by the watermark, so
@@ -123,19 +136,15 @@ object EventStreams {
   /** Drive the stream over the bounded fixture and return the final result
     * as a batch DataFrame (memory sink, complete mode). */
   def runHourly(spark: SparkSession, dir: String,
-                name: String = "graft_stream_hourly"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = hourlyAgg(readEventStream(spark, dir))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).select(
+                name: String = "graft_stream_hourly"): DataFrame =
+    hourly(spark, dir, name, "complete")
+
+  private def hourly(spark: SparkSession, dir: String, name: String,
+                     mode: String): DataFrame =
+    drain(spark, name, mode)(hourlyAgg(readEventStream(spark, dir))).select(
       date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
       col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value"))
       .orderBy("hour_ts", "event_type")
-  }
 
   /** Live-deployment twin of [[runHourly]]: append mode — a window row is
     * emitted exactly once, when the watermark passes its end, and its state
@@ -146,19 +155,8 @@ object EventStreams {
     * to windows with end <= that cutoff (emission at exact equality is
     * pinned in the unit suite's boundary test). */
   def runHourlyAppend(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_hourly_append"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = hourlyAgg(readEventStream(spark, dir))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).select(
-      date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
-      col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value"))
-      .orderBy("hour_ts", "event_type")
-  }
+                      name: String = "graft_stream_hourly_append"): DataFrame =
+    hourly(spark, dir, name, "append")
 
   /** Streaming twin of [[Sessionize.sessions]]: session_window aggregation
     * under a watermark, append mode (session windows don't support complete
@@ -167,21 +165,23 @@ object EventStreams {
     * pins the emitted set equal to the batch sessions under that cutoff. */
   def runSessions(spark: SparkSession, dir: String,
                   gap: String = "30 minutes", watermark: String = "1 hour",
-                  name: String = "graft_stream_sessions"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+                  name: String = "graft_stream_sessions"): DataFrame =
+    drain(spark, name, "append") {
+      readEventStream(spark, dir)
         .withWatermark("ts", watermark)
         .groupBy(col("user_id"), session_window(col("ts"), gap).as("sw"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("sw.start").as("session_start"),
           col("sw.end").as("session_end"), col("n_events"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
     }
-    spark.table(name)
-  }
+
+  /** One event type of the stream as (`id`, `ts`) under a 2-hour
+    * watermark: a side of the conversion joins. */
+  private def joinSide(spark: SparkSession, dir: String, eventType: String,
+                       id: String, ts: String): DataFrame =
+    readEventStream(spark, dir).filter(col("event_type") === eventType)
+      .select(col("event_id").as(id), col("ts").as(ts))
+      .withWatermark(ts, "2 hours")
 
   /** Stream-stream interval join: clicks within the hour after each signup
     * (the streaming twin of the batch range join, q52). Stream-stream
@@ -192,60 +192,22 @@ object EventStreams {
     * condition. Both sides carry watermarks so join state is evictable —
     * bounded by watermark + interval, not stream length. On the bounded
     * fixture the inner join emits exactly the batch pair set (watermarks
-    * gate state eviction, not inner-join emission); pinned in the suite. */
-  /** `sink = "memory"` (default) drains through the in-memory table the
-    * oracle gate reads — right at fixture SF, but the memory sink
-    * COLLECTS every output row to the driver, and this join's output
-    * grows with signup×click density per time bucket (the sf1 probe
-    * measured a 10× corpus overflowing spark.driver.maxResultSize).
-    * `sink = "parquet"` spills each micro-batch to a fresh temp dir and
-    * returns the read-back table — the production shape (executors
-    * write, driver never holds rows), identical result set. */
+    * gate state eviction, not inner-join emission); pinned in the suite.
+    * `sink`: see [[pairsSink]]. */
   def runConversionJoin(spark: SparkSession, dir: String,
                         name: String = "graft_stream_conv",
                         sink: String = "memory"): DataFrame = {
-    require(sink == "memory" || sink == "parquet",
-      s"unknown sink $sink (memory | parquet)")
-    spark.catalog.dropTempView(name)
     val bkt = 3600000000L
-    val signups = readEventStream(spark, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"), col("ts").as("s_ts"))
-      .withWatermark("s_ts", "2 hours")
+    val signups = joinSide(spark, dir, "signup", "signup_id", "s_ts")
       .withColumn("bucket", explode(sequence(
         floor(unix_micros(col("s_ts")) / bkt).cast("long"),
         floor((unix_micros(col("s_ts")) + bkt - 1) / bkt).cast("long"))))
-    val clicks = readEventStream(spark, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
+    val clicks = joinSide(spark, dir, "click", "click_id", "c_ts")
       .withColumn("bucket", floor(unix_micros(col("c_ts")) / bkt).cast("long"))
     val joined = signups.join(clicks, Seq("bucket"))
       .where(expr("c_ts >= s_ts AND c_ts < s_ts + INTERVAL 1 HOUR"))
       .select("signup_id", "click_id")
-    if (sink == "memory") {
-      withStreamPartitions(spark) {
-        val q = joined
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name)
-    } else {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"${name}_spill").toString + "/pairs"
-      withStreamPartitions(spark) {
-        val q = joined
-          .writeStream.outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) => batch.write.mode("append").parquet(out); ()
-          }
-          .trigger(Trigger.AvailableNow()).queryName(name).start()
-        q.awaitTermination()
-      }
-      spark.read.parquet(out)
-    }
+    pairsSink(spark, joined, name, sink)
   }
 
   /** Stream-stream LEFT OUTER interval join — [[runConversionJoin]]'s
@@ -271,24 +233,15 @@ object EventStreams {
     * ≤ the final global watermark min(max s_ts, max c_ts) − 2 h; later
     * signups stay in state and do NOT emit (the q71 closed-before-
     * watermark convention). NULL click_id surfaces as −1 so both
-    * engines order identically. */
+    * engines order identically. `sink`: see [[pairsSink]]. */
   def runConversionJoinOuter(spark: SparkSession, dir: String,
                              name: String = "graft_stream_conv_outer",
                              sink: String = "memory"): DataFrame = {
-    require(sink == "memory" || sink == "parquet",
-      s"unknown sink $sink (memory | parquet)")
-    spark.catalog.dropTempView(name)
     val bkt = 3600000000L
-    val signups = readEventStream(spark, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"), col("ts").as("s_ts"))
-      .withWatermark("s_ts", "2 hours")
+    val signups = joinSide(spark, dir, "signup", "signup_id", "s_ts")
       .withColumn("s_bucket",
         floor(unix_micros(col("s_ts")) / bkt).cast("long"))
-    val clicks = readEventStream(spark, dir)
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "2 hours")
+    val clicks = joinSide(spark, dir, "click", "click_id", "c_ts")
       .withColumn("c_bucket", explode(sequence(
         floor((unix_micros(col("c_ts")) - (bkt - 1)) / bkt).cast("long"),
         floor(unix_micros(col("c_ts")) / bkt).cast("long"))))
@@ -298,50 +251,19 @@ object EventStreams {
         "leftOuter")
       .select(col("signup_id"),
         coalesce(col("click_id"), lit(-1L)).as("click_id"))
-    // the memory sink collects the (density-quadratic) pair output on
-    // the driver — the q78 sf1 finding; sink = "parquet" is the scale
-    // path (executors write, driver holds nothing), result-equal pinned
-    if (sink == "memory") {
-      withStreamPartitions(spark) {
-        val q = joined
-          .writeStream.outputMode("append").format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      spark.table(name)
-    } else {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"${name}_spill").toString + "/pairs"
-      withStreamPartitions(spark) {
-        val q = joined
-          .writeStream.outputMode("append")
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-             _: Long) => batch.write.mode("append").parquet(out); ()
-          }
-          .trigger(Trigger.AvailableNow()).queryName(name).start()
-        q.awaitTermination()
-      }
-      spark.read.parquet(out)
-    }
+    pairsSink(spark, joined, name, sink)
   }
 
   /** Streaming exact dedup: watermark-bounded state keyed by the dedup
     * column — the streaming face of [[Dedup.exact]]'s first stage. */
   def runDedup(spark: SparkSession, dir: String, keyCols: Seq[String],
                watermark: String = "1 hour",
-               name: String = "graft_stream_dedup"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+               name: String = "graft_stream_dedup"): DataFrame =
+    drain(spark, name, "append") {
+      readEventStream(spark, dir)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(keyCols)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
     }
-    spark.table(name)
-  }
 
   /** Streaming sketch aggregation: KMV distinct-user estimates per
     * (1h window, event_type) via [[Sketches.KmvAgg]] — a custom mergeable
@@ -355,18 +277,13 @@ object EventStreams {
   def runKmvDistinct(spark: SparkSession, dir: String, k: Int = 32,
                      name: String = "graft_stream_kmv"): DataFrame = {
     import org.apache.spark.sql.Encoders
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+    drain(spark, name, "complete") {
+      readEventStream(spark, dir)
         .select(window(col("ts"), "1 hour").as("w"), col("event_type"),
           Dedup.hash60(col("user_id").cast("string")).as("__h"))
         .groupBy("w", "event_type")
         .agg(udaf(new Sketches.KmvAgg(k), Encoders.scalaLong)(col("__h")).as("r"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).select(
+    }.select(
       date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
       col("event_type"), col("r.est_distinct").as("est_distinct"),
       col("r.n_seen").as("n_seen"), col("r.exact").as("exact"))
@@ -392,16 +309,11 @@ object EventStreams {
       override def outputEncoder: Encoder[Map[String, Long]] =
         ExpressionEncoder()
     }
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+    drain(spark, name, "complete") {
+      readEventStream(spark, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(udaf(mg, Encoders.STRING)(col("event_type")).as("mg"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).select(
+    }.select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
         explode(col("mg")).as(Seq("event_type", "cnt")))
       .orderBy("hour_ts", "event_type")
@@ -433,22 +345,19 @@ object EventStreams {
                   name: String = "graft_stream_cdc"): DataFrame = {
     DurableState.recover(statePath)
     withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
-        .select(col("user_id").as("k"), col("event_id"), col("ts"), col("value"))
-        .writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      AvailableNow.run(readEventStream(spark, dir)
+          .select(col("user_id").as("k"), col("event_id"), col("ts"), col("value")),
+        name = Some(name), batch = Some { (batch: DataFrame, batchId: Long) =>
           DurableState.recover(statePath)
           val merged0 =
             if (new java.io.File(statePath).isDirectory)
-              spark.read.parquet(statePath).unionByName(batch.toDF())
-            else batch.toDF()
+              spark.read.parquet(statePath).unionByName(batch)
+            else batch
           DurableState.commit(
             Dedup.latestSnapshot(merged0, Seq("k"), "ts", "event_id"),
             statePath, batchId)
           ()
-        }
-        .trigger(Trigger.AvailableNow()).queryName(name).start()
-      q.awaitTermination()
+        })
     }
     spark.read.parquet(statePath)
   }
@@ -472,32 +381,28 @@ object EventStreams {
                        maxFilesPerTrigger: Option[Int] = None,
                        glob: String = "events.parquet"): DataFrame = {
     import spark.implicits._
-    spark.catalog.dropTempView(name)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(provKey)
     // transformWithState requires the RocksDB provider; session-scoped,
     // restored after the bounded run
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStreamPartitions(spark) {
-      val typed = eventSource(spark, dir, glob, maxFilesPerTrigger)
+    val totals = try drain(spark, name, "append") {
+      readEventStream(spark, dir, glob, maxFilesPerTrigger)
         .select(col("user_id"),
           expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"),
           unix_micros(col("ts")).as("us"))
         .as[(Long, Long, Long)]
-      val q = typed.groupByKey(_._1)
+        .groupByKey(_._1)
         .transformWithState(new RunningTotalsProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF()
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
     } finally prev match {
       case Some(v) => spark.conf.set(provKey, v)
       case None => spark.conf.unset(provKey)
     }
-    Dedup.latestSnapshot(spark.table(name), Seq("user_id"), "n_events",
+    Dedup.latestSnapshot(totals, Seq("user_id"), "n_events",
         "sum_cents")
       .select(col("user_id"), col("n_events"), col("sum_cents"), col("max_us"))
       .orderBy("user_id")
@@ -516,21 +421,15 @@ object EventStreams {
     * Inner join: fixture user ids all resolve; production would left-join
     * a late-arriving dimension. */
   def runStaticEnrich(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_enrich"): DataFrame = {
-    spark.catalog.dropTempView(name)
-    val dim = Tables.t(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
-        .join(dim, col("user_id") === col("c_custkey"))
+                      name: String = "graft_stream_enrich"): DataFrame =
+    drain(spark, name, "append") {
+      readEventStream(spark, dir)
+        .join(Tables.t(spark, dir, "customer")
+          .select(col("c_custkey"), col("c_mktsegment")),
+          col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"),
           col("c_mktsegment").as("segment"), col("value"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
     }
-    spark.table(name)
-  }
 
   /** Streaming PSI drift monitor: per event-time hour, the Population
     * Stability Index of that hour's `value` distribution against the
@@ -559,17 +458,12 @@ object EventStreams {
         lit(0L)).cast("long")
     val baseCounts = base.groupBy(binOf(col("v")).as("bin"))
       .agg(count(lit(1)).as("bc"))
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+    val hourly = drain(spark, name, "complete") {
+      readEventStream(spark, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"),
           binOf(col("value").cast("double")).as("bin"))
         .agg(count(lit(1)).as("c"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val hourly = spark.table(name).select(
+    }.select(
       date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
       col("bin"), col("c"))
     val hours = hourly.groupBy("hour_ts").agg(sum("c").as("n_hour"))
@@ -610,16 +504,11 @@ object EventStreams {
         "with ratios summing to 1")
     val variant = when(col("user_id") % 10 <= 4, design.head._1)
       .when(col("user_id") % 10 <= 7, design(1)._1).otherwise(design(2)._1)
-    spark.catalog.dropTempView(name)
-    withStreamPartitions(spark) {
-      val q = readEventStream(spark, dir)
+    val hourly = drain(spark, name, "complete") {
+      readEventStream(spark, dir)
         .groupBy(window(col("ts"), "1 hour").as("w"), variant.as("v"))
         .agg(count(lit(1)).as("o"))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    val hourly = spark.table(name).select(
+    }.select(
       date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
       col("v"), col("o"))
     val hours = hourly.groupBy("hour_ts").agg(sum("o").as("n_hour"))

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 import graft.{CkptScope, Dedup, Staging, Tables, VStage}
 
 /** The ingestion trilogy (q353 staged index, q354 append loop, q355
@@ -19,8 +17,10 @@ import graft.{CkptScope, Dedup, Staging, Tables, VStage}
   * convention: a memory sink would collect data-sized output to the
   * driver).
   *
-  * DEPLOYMENT SEMANTICS (r12): every loop here survives a driver
-  * restart and a micro-batch retry —
+  * The five LSH loops (dedup q358/q370/q377/q379, clusters q364/q368,
+  * split assignment q365/q369) are one skeleton, [[lshLoop]], which
+  * owns the replay and ordering contract. Every loop here survives a
+  * driver restart and a micro-batch retry:
   *
   *  - Cross-batch state (q364's running labels, q365's split
   *    assignment) lives in a [[DurableState]] parquet dir maintained
@@ -33,15 +33,13 @@ import graft.{CkptScope, Dedup, Staging, Tables, VStage}
   *    order-dependent loops).
   *  - Micro-batch RETRIES are exactly-once: stateful loops gate on
   *    the [[DurableState]] commit marker (`batchId ≤ committed` →
-  *    skip); the dedup loop needs no marker — its output writes
-  *    idempotently to a per-batch directory and its index probe
-  *    excludes the batch's own ids ([[Dedup.indexWithoutIds]]), so a
-  *    replay reads the same pre-batch index state even when the
-  *    crashed attempt's append survived.
-  *  - Index appends are NOT rolled back on retry. Every LSH loop
-  *    (dedup AND the stateful cluster/split loops) probes the index
-  *    through [[Dedup.indexWithoutIds]] so a replay reads exactly the
-  *    pre-batch index state. The exclusion is NOT optional for the
+  *    skip; a batch whose commit landed also already appended); the
+  *    dedup loop needs no marker — its output writes idempotently to a
+  *    per-batch directory.
+  *  - Index appends are NOT rolled back on retry, so every LSH loop
+  *    probes the index through [[Dedup.indexWithoutIds]]: a replay
+  *    reads exactly the pre-batch index state even when the crashed
+  *    attempt's append survived. The exclusion is NOT optional for the
   *    stateful loops: duplicate signature rows are inert for collision
   *    EXISTENCE (dedup), but a replayed batch's own rows in the index
   *    can win the cross-edge representative min(corpus_id) whenever
@@ -51,13 +49,15 @@ import graft.{CkptScope, Dedup, Staging, Tables, VStage}
   *    collapses duplicate candidates (`dedupCandidates`) and the
   *    recluster compaction ([[graft.Similarity.ivfRecluster]])
   *    physically drops them (both pinned).
+  *  - Per micro-batch the order is fixed: the step's result
+  *    MATERIALIZES (an eager checkpoint) before the index append, so
+  *    it read the index as of the batch's start; the commit (state
+  *    swap or per-batch output) runs after the append.
   *
   * Per-batch checkpoint blocks are freed via a [[CkptScope]] once the
   * batch's durable output is committed — a long-running stream holds
   * O(1) checkpoint state, not O(days). */
 object IngestStreams {
-
-  private def rm(f: java.io.File): Unit = Staging.deleteRecursively(f)
 
   /** Spool ONE parquet file as arrival day `i` under `spool`: the file
     * stream source orders by (modification time, path), so explicit
@@ -73,38 +73,20 @@ object IngestStreams {
     val target = new java.io.File(spool, f"day_$i%03d.parquet")
     java.nio.file.Files.move(part.toPath, target.toPath)
     target.setLastModified(1000000000000L + i * 60000L)
-    rm(tmp)
+    Staging.deleteRecursively(tmp)
   }
 
-  /** One bounded streaming run over the spool: processes every
-    * not-yet-committed file (one micro-batch each, unless
-    * `maxFilesPerTrigger` is None — the coarser-batching pin), then
-    * terminates. Each call constructs a FRESH query from the same
-    * checkpoint — so two calls with a day spooled in between ARE a
-    * driver restart: nothing carries over but the checkpoint and the
-    * durable state. */
-  private def runAvailable(spark: SparkSession, schema: StructType,
-                           spool: java.io.File, ckpt: java.io.File,
-                           body: (DataFrame, Long) => Unit,
-                           maxFilesPerTrigger: Option[Int] = Some(1))
-      : Unit = {
-    val src = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      src.option("maxFilesPerTrigger", n.toString))
-    val q = src.parquet(spool.getPath)
-      .writeStream
-      .foreachBatch(body)
-      .option("checkpointLocation", ckpt.getPath)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Spool + process the arrival days. `killBetweenDays = false` spools
-    * everything and runs ONE streaming query (the production shape);
-    * `true` restarts the stream from its checkpoint after every day —
-    * the recovery drill the durability pins compare against the
-    * uninterrupted run. The finer controls (SoakSpec's 10-day soak):
+  /** Spool + process the arrival days through fresh
+    * `target/ingest_spool_<name>` / `target/ingest_ckpt_<name>` dirs.
+    * Each stream run is a FRESH query from the same checkpoint that
+    * processes every not-yet-committed file (one micro-batch each,
+    * unless `maxFilesPerTrigger` is None), then terminates — so two runs
+    * with a day spooled in between ARE a driver restart: nothing carries
+    * over but the checkpoint and the durable state.
+    * `killBetweenDays = false` spools everything and runs ONE streaming
+    * query (the production shape); `true` restarts the stream after
+    * every day — the recovery drill the durability pins compare against
+    * the uninterrupted run. The finer controls (SoakSpec's 10-day soak):
     * `killAfterDays` restarts the stream after the NAMED days only
     * (kills at chosen points, ignored when `killBetweenDays` already
     * restarts everywhere); `afterSegment(lastDay)` runs between stream
@@ -114,20 +96,26 @@ object IngestStreams {
     * spooled days (the q364 coarser-batching pin — the order-dependent
     * loops ASSERT one file per trigger instead, see
     * [[assertSingleFile]]). */
-  private[graft] def driveDays(spark: SparkSession, schema: StructType,
-                        spool: java.io.File, ckpt: java.io.File,
+  private def driveDays(spark: SparkSession, name: String,
                         days: Seq[DataFrame], killBetweenDays: Boolean,
                         body: (DataFrame, Long) => Unit,
                         killAfterDays: Set[Int] = Set.empty,
                         afterSegment: Int => Unit = _ => (),
                         maxFilesPerTrigger: Option[Int] = Some(1)): Unit = {
+    val spool = new java.io.File(s"target/ingest_spool_$name")
+    val ckpt = new java.io.File(s"target/ingest_ckpt_$name")
+    Seq(spool, ckpt).foreach(Staging.deleteRecursively)
     val kills =
       if (killBetweenDays) days.indices.map(_ + 1).toSet else killAfterDays
     days.zipWithIndex.foreach { case (d, i0) =>
       val i = i0 + 1
       spoolDay(spool, i, d)
       if (kills(i) || i == days.size) {
-        runAvailable(spark, schema, spool, ckpt, body, maxFilesPerTrigger)
+        val src = spark.readStream.schema(days.head.schema)
+        maxFilesPerTrigger.foreach(n =>
+          src.option("maxFilesPerTrigger", n.toString))
+        AvailableNow.run(src.parquet(spool.getPath),
+          checkpoint = Some(ckpt.getPath), batch = Some(body))
         afterSegment(i)
       }
     }
@@ -162,101 +150,131 @@ object IngestStreams {
         "would be coarsened")
   }
 
-  private def freshPaths(name: String): (java.io.File, java.io.File) = {
-    val spool = new java.io.File(s"target/ingest_spool_$name")
-    val ckpt = new java.io.File(s"target/ingest_ckpt_$name")
-    Seq(spool, ckpt).foreach(f => if (f.exists()) rm(f))
-    (spool, ckpt)
+  /** `key` cut into the corpus (`< cuts.head`) and one arrival day per
+    * cut (`[cuts(i), cuts(i+1))`, the last day unbounded). */
+  private def slices(df: DataFrame, key: String, cuts: Seq[Long])
+      : (DataFrame, Seq[DataFrame]) = {
+    val k = col(key)
+    (df.where(k < cuts.head),
+      cuts.sliding(2).collect { case Seq(lo, hi) =>
+        df.where(k >= lo && k < hi) }.toSeq :+ df.where(k >= cuts.last))
   }
 
-  /** The dedup-ingest loop core shared by [[runIngestDedup]] (q358,
-    * `prep` = identity) and [[runIngestPrep]] (q370, `prep` = gates +
-    * within-batch exact dedup): stage the PREPPED docs `< cut0` as the
-    * corpus index, spool docs `[cut0, cut1)` and `[cut1, ∞)` as two
-    * "daily" arrival files, then per micro-batch prep the batch, drop
-    * its near-dups against the index, append the survivors'
-    * signatures, and write the survivors to a per-batch output
-    * directory. Retry-idempotent without a commit marker: the
-    * per-batch output overwrites (a replay never doubles) and the
-    * probe excludes the batch's own ids ([[Dedup.indexWithoutIds]]),
-    * so a replay after a surviving append still reads the pre-batch
-    * index state. */
-  private[graft] def dedupLoop(spark: SparkSession, corpus: DataFrame,
-      days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
-      prep: DataFrame => DataFrame,
-      compactAfterDay: Option[Int] = None)
-      : DataFrame = {
+  /** The documents table as the corpus and the two arrival days of the
+    * `cut0`/`cut1` drives. */
+  private def docDays(spark: SparkSession, dir: String, cut0: Long,
+                      cut1: Long): (DataFrame, Seq[DataFrame]) =
+    slices(Tables.t(spark, dir, "documents"), "doc_id", Seq(cut0, cut1))
+
+  // ------------------------------------------------------ the LSH loops
+
+  /** What [[lshLoop]] hands a loop's per-batch step: the batch on its
+    * cloned session `ss`, its id, the index as of the batch's start
+    * (its own ids excluded) and the batch's checkpoint scope. */
+  private final case class Tick(ss: SparkSession, batch: DataFrame,
+                                id: Long, index: DataFrame,
+                                scope: CkptScope)
+
+  private def signatures(docs: DataFrame): DataFrame =
+    Dedup.lshIndexFrame(docs, col("text"), col("doc_id"))
+
+  /** The one LSH ingest loop. Stages `corpus`'s signatures as the index
+    * `name + "_idx"`, hands `bootstrap` the day-0 labels (CC over the
+    * star edges of the index just staged — not a second corpus
+    * tokenize, the q350 one-scan lesson), then drives the days. Per
+    * micro-batch:
+    *  1. it works on the batch's CLONED session: the append below
+    *     invalidates that session's relation cache, so the next
+    *     micro-batch re-lists the index and sees the new bucket files —
+    *     loading through the outer session would read a stale file
+    *     index and silently skip prior appends;
+    *  2. `ordered` loops assert one spooled day per trigger;
+    *  3. with a `marker` (a [[DurableState]] path) the state is
+    *     recovered and a batch at or below its committed id skips;
+    *  4. `step` gets the index probe ([[Dedup.indexWithoutIds]]) and
+    *     returns the docs to index plus its commit; everything it
+    *     derived from the probe has materialized by then;
+    *  5. those docs' signatures append to the index, THEN the commit
+    *     runs, then the batch's checkpoint scope is freed. */
+  private def lshLoop(spark: SparkSession, corpus: DataFrame,
+      days: Seq[DataFrame], name: String, marker: Option[String],
+      ordered: Boolean, bootstrap: Option[DataFrame => Unit],
+      killBetweenDays: Boolean, killAfterDays: Set[Int],
+      afterSegment: Int => Unit, maxFilesPerTrigger: Option[Int])
+      (step: Tick => (DataFrame, () => Unit)): Unit = {
     val idx = name + "_idx"
-    VStage.init(
-      Dedup.lshIndexFrame(prep(corpus), col("text"), col("doc_id")),
-      idx, "lsh_key", 8)
-    val (spool, ckpt) = freshPaths(name)
-    val outDir = new java.io.File(s"target/ingest_out_$name")
-    if (outDir.exists()) rm(outDir)
+    VStage.init(signatures(corpus), idx, "lsh_key", 8)
+    bootstrap.foreach { commit =>
+      val scope0 = CkptScope()
+      try commit(Dedup.connectedComponents(
+        Dedup.starEdgesFromIndex(VStage.load(spark, idx)), scope = scope0))
+      finally scope0.freeAll()
+    }
     val body = (batch: DataFrame, batchId: Long) => {
-      // resolve the index through the STREAMING session (foreachBatch
-      // frames live on a cloned session): the append below invalidates
-      // that session's relation cache, so the next micro-batch re-lists
-      // the table and sees the new bucket files — loading through the
-      // outer session would read a stale file index and silently skip
-      // prior survivors
       val ss = batch.sparkSession
-      val scope = CkptScope()
-      try {
-        val kept = prep(batch)
-        val idxSnap = Dedup.indexWithoutIds(VStage.load(ss, idx),
-          batch.select(col("doc_id").as("id")))
-        // survivors MUST materialize before the index append below —
-        // the checkpoint is eager, so the anti-join reads the index
-        // state as of this batch's start
-        val surv = scope.ckpt(Dedup.minhashAgainstIndex(kept, idxSnap,
-          col("text"), col("doc_id")))
-        VStage.append(
-          Dedup.lshIndexFrame(surv, col("text"), col("doc_id")),
-          idx, "lsh_key", 8)
-        surv.select(col("doc_id"), col("source"))
-          // the arrival-day tag IS the micro-batch ordinal (one spooled
-          // day per trigger; ids continue across restarts via the
-          // checkpoint, so kill-and-resume tags identically)
-          .withColumn("ingest_day", lit((batchId + 1).toInt))
-          .write.mode("overwrite")
-          .parquet(new java.io.File(outDir, s"ingest_batch=$batchId").getPath)
-      } finally scope.freeAll()
+      if (ordered) assertSingleFile(batch)
+      marker.foreach(DurableState.recover)
+      if (marker.forall(batchId > DurableState.committedBatch(_))) {
+        val scope = CkptScope()
+        try {
+          val (toIndex, commit) = step(Tick(ss, batch, batchId,
+            Dedup.indexWithoutIds(VStage.load(ss, idx),
+              batch.select(col("doc_id").as("id"))), scope))
+          VStage.append(signatures(toIndex), idx, "lsh_key", 8)
+          commit()
+        } finally scope.freeAll()
+      }
       ()
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body,
-      // the LSH index compaction runs BETWEEN stream segments: one
-      // generation-swap re-stage (dedup rows, one file per bucket) —
-      // content-preserving, so the survivor semantics are unchanged
-      // (q377 oracle-gates exactly that under live ingest)
+    driveDays(spark, name, days, killBetweenDays, body, killAfterDays,
+      afterSegment, maxFilesPerTrigger)
+  }
+
+  /** The dedup-ingest loop behind q358/q370/q377/q379: stage the PREPPED
+    * docs `< cut0` as the corpus index, spool docs `[cut0, cut1)` and
+    * `[cut1, ∞)` as two "daily" arrival files, then per micro-batch
+    * prep the batch, drop its near-dups against the index, append the
+    * survivors' signatures, and write the survivors to a per-batch
+    * output directory — overwritten on replay, so no marker is needed.
+    * `compactAfterDay` runs the LSH index compaction between stream
+    * segments: one generation-swap re-stage (dedup rows, one file per
+    * bucket) — content-preserving, so the survivor semantics are
+    * unchanged (q377 oracle-gates exactly that under live ingest). */
+  private def ingestDedupLoop(spark: SparkSession, dir: String,
+      name: String, cut0: Long, cut1: Long, killBetweenDays: Boolean,
+      prep: DataFrame => DataFrame,
+      compactAfterDay: Option[Int] = None): DataFrame = {
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    val outDir = new java.io.File(s"target/ingest_out_$name")
+    Staging.deleteRecursively(outDir)
+    lshLoop(spark, prep(corpus), days, name, marker = None,
+      ordered = false, bootstrap = None, killBetweenDays,
       killAfterDays = compactAfterDay.toSet,
       afterSegment = day =>
         if (compactAfterDay.contains(day))
-          VStage.compact(spark, idx, "lsh_key", 8,
+          VStage.compact(spark, name + "_idx", "lsh_key", 8,
             df => df.dropDuplicates("lsh_key", "corpus_id")
-              .repartition(8, col("lsh_key"))))
+              .repartition(8, col("lsh_key"))),
+      maxFilesPerTrigger = Some(1)) { t =>
+      val surv = t.scope.ckpt(Dedup.minhashAgainstIndex(prep(t.batch),
+        t.index, col("text"), col("doc_id")))
+      (surv, () => surv.select(col("doc_id"), col("source"))
+        // the arrival-day tag IS the micro-batch ordinal (one spooled
+        // day per trigger; ids continue across restarts via the
+        // checkpoint, so kill-and-resume tags identically)
+        .withColumn("ingest_day", lit((t.id + 1).toInt))
+        .write.mode("overwrite")
+        .parquet(new java.io.File(outDir, s"ingest_batch=${t.id}").getPath))
+    }
     // partition discovery re-adds ingest_batch; the select drops it
     spark.read.parquet(outDir.getPath)
       .select("ingest_day", "doc_id", "source")
       .orderBy("ingest_day", "doc_id")
   }
 
-  private def ingestDedupLoop(spark: SparkSession, dir: String,
-      name: String, cut0: Long, cut1: Long, killBetweenDays: Boolean,
-      prep: DataFrame => DataFrame,
-      compactAfterDay: Option[Int] = None): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    dedupLoop(spark, docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)), name, killBetweenDays, prep,
-      compactAfterDay = compactAfterDay)
-  }
-
-  /** The streaming ingest-dedup loop (q358): each day\u0027s survivors
+  /** The streaming ingest-dedup loop (q358): each day's survivors
     * tagged by ingest day — exactly the q354 inline two-step
-    * semantics, which the oracle replays. See [[ingestDedupLoop]] for
-    * the retry-idempotency contract. */
+    * semantics, which the oracle replays. */
   def runIngestDedup(spark: SparkSession, dir: String, name: String,
                      cut0: Long = 300, cut1: Long = 450,
                      killBetweenDays: Boolean = false): DataFrame =
@@ -278,7 +296,7 @@ object IngestStreams {
     ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
       identity, compactAfterDay = Some(1))
 
-  /** The FULL training-prep front under the stream (q370): q358\u0027s
+  /** The FULL training-prep front under the stream (q370): q358's
     * loop with `prep` = the q49/q351 gates + within-batch exact dedup
     * (min-id per text; exact dups AGAINST the corpus need no separate
     * pass — identical text collides in every LSH band, so the near-dup
@@ -289,10 +307,12 @@ object IngestStreams {
                     cut0: Long = 300, cut1: Long = 450,
                     killBetweenDays: Boolean = false): DataFrame =
     ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
-      df => Dedup.exact(
-        df.where(graft.TextAnalysis.langId(col("text")) === lit("en") &&
-          round(graft.TextAnalysis.qualityScore(col("text")), 4) >= 0.5),
-        col("text"), col("doc_id")))
+      df => Dedup.exact(gate(df), col("text"), col("doc_id")))
+
+  /** The q49/q351 language + quality gate. */
+  private def gate(docs: DataFrame): DataFrame =
+    docs.where(graft.TextAnalysis.langId(col("text")) === lit("en") &&
+      round(graft.TextAnalysis.qualityScore(col("text")), 4) >= 0.5)
 
   /** q379: [[runIngestPrep]] with DECONTAMINATION in the gate — the
     * missing production leg of the streaming prep front: every arriving
@@ -326,9 +346,7 @@ object IngestStreams {
       df => {
         val ss = df.sparkSession
         Dedup.exact(
-          graft.Decontaminate.decontaminateAgainst(
-            df.where(graft.TextAnalysis.langId(col("text")) === lit("en") &&
-              round(graft.TextAnalysis.qualityScore(col("text")), 4) >= 0.5),
+          graft.Decontaminate.decontaminateAgainst(gate(df),
             col("text"), col("doc_id"),
             ss.createDataFrame(bg.rdd, bg.schema), n = 5),
           col("text"), col("doc_id"))
@@ -355,11 +373,9 @@ object IngestStreams {
   def runLexicalIngest(spark: SparkSession, dir: String, name: String,
                        cut0: Long = 300, cut1: Long = 450,
                        killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    lexicalLoop(spark, docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)),
-      name, maintainStats = false, killBetweenDays)
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    lexicalLoop(spark, corpus, days, name, maintainStats = false,
+      killBetweenDays)
   }
 
   /** [[runLexicalIngest]] / [[runLexicalIngestStats]]'s core over
@@ -384,7 +400,6 @@ object IngestStreams {
       VStage.init(pinned, idx, "term", 8)
       VStage.init(statsDelta(pinned, -1L), st, "term", 8)
     } else VStage.init(p0, idx, "term", 8)
-    val (spool, ckpt) = freshPaths(name)
     val body = (batch: DataFrame, bid: Long) => {
       if (maintainStats) {
         // one tokenize pass feeds both appends
@@ -398,8 +413,7 @@ object IngestStreams {
           idx, "term", 8)
       ()
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body,
+    driveDays(spark, name, days, killBetweenDays, body,
       // postings compaction runs BETWEEN stream segments: collapse the
       // exact-duplicate rows replayed appends left and re-bucket one
       // file per term bucket — content ≡ collapsePostings, so serving
@@ -409,17 +423,14 @@ object IngestStreams {
         if (compactAfterDay.contains(day))
           VStage.compact(spark, idx, "term", 8,
             df => collapsePostings(df).repartition(8, col("term"))))
-    if (maintainStats) {
+    val postings = collapsePostings(VStage.load(spark, idx, refresh = true))
+    (if (maintainStats) {
       val (dfT, nd) = readStats(VStage.load(spark, st, refresh = true))
-      graft.Curate.tfidfTopKWithStats(
-          collapsePostings(VStage.load(spark, idx, refresh = true)),
-          col("id") % 50 === 0, kLex = 10, dfT, nd)
-        .orderBy("qid", "rank")
+      graft.Curate.tfidfTopKWithStats(postings, col("id") % 50 === 0,
+        kLex = 10, dfT, nd)
     } else
-      graft.Curate.tfidfTopKFromPostings(
-          collapsePostings(VStage.load(spark, idx, refresh = true)),
-          col("id") % 50 === 0, kLex = 10)
-        .orderBy("qid", "rank")
+      graft.Curate.tfidfTopKFromPostings(postings, col("id") % 50 === 0,
+        kLex = 10)).orderBy("qid", "rank")
   }
 
   /** Replay-tolerant postings read: collapse the exact-duplicate
@@ -451,11 +462,9 @@ object IngestStreams {
   def runLexicalIngestStats(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 450,
                             killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    lexicalLoop(spark, docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)),
-      name, maintainStats = true, killBetweenDays)
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    lexicalLoop(spark, corpus, days, name, maintainStats = true,
+      killBetweenDays)
   }
 
   /** One day's stats delta from its postings: per-term distinct-doc
@@ -495,14 +504,15 @@ object IngestStreams {
     * two ranks) — serving therefore collapses duplicate (qid, id)
     * candidates before ranking (`dedupCandidates`, candidate-set-sized,
     * never an index-side shuffle), and the recluster compaction
-    * physically drops the duplicates. */
-  /** [[runAnnIngest]]'s core over EXPLICIT corpus/day frames (modular
+    * physically drops the duplicates.
+    *
+    * [[runAnnIngest]]'s core over EXPLICIT corpus/day frames (modular
     * cuts at 1×/10×/100× corpora: PLANS.md §r13 q370/q372 100× rows):
     * stages the day-0 IVF index
     * under a codebook trained on the day-0 slice, appends each arriving
     * day's cell assignments. Returns the serving codebook; the staged
-    * index is `name + "_idx"` (a [[graft.VStage]] logical table). */
-  /** `reclusterAfterDay`: run the crash-safe IVF recluster compaction
+    * index is `name + "_idx"` (a [[graft.VStage]] logical table).
+    * `reclusterAfterDay`: run the crash-safe IVF recluster compaction
     * ([[graft.Similarity.ivfRecluster]]) between stream segments after
     * the named day — the codebook RETRAINS on the index's own content
     * and every later day assigns under the retrained codebook (the
@@ -530,7 +540,6 @@ object IngestStreams {
       graft.Similarity.ivfIndexFrame(corpusVecs,
         col("embedding"), col("vec_id"), cents),
       idx, "cell", 8)
-    val (spool, ckpt) = freshPaths(name)
     val body = (batch: DataFrame, _: Long) => {
       VStage.append(
         graft.Similarity.ivfIndexFrame(batch, col("embedding"),
@@ -538,8 +547,7 @@ object IngestStreams {
         idx, "cell", 8)
       ()
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body,
+    driveDays(spark, name, days, killBetweenDays, body,
       // the recluster runs BETWEEN stream segments, so its day must be
       // a segment boundary
       killAfterDays = killAfterDays ++ reclusterAfterDay.toSet,
@@ -579,9 +587,8 @@ object IngestStreams {
                         reclusterAfterDay: Option[Int]): DataFrame = {
     val e = Tables.t(spark, dir, "embeddings")
     val idx = name + "_idx"
-    val cents = annLoop(spark, e.where(col("vec_id") < cut0),
-      Seq(e.where(col("vec_id") >= cut0 && col("vec_id") < cut1),
-        e.where(col("vec_id") >= cut1)), name, killBetweenDays,
+    val (corpus, days) = slices(e, "vec_id", Seq(cut0, cut1))
+    val cents = annLoop(spark, corpus, days, name, killBetweenDays,
       reclusterAfterDay = reclusterAfterDay)
     // the appends ran through the CLONED batch sessions; refresh = true
     // drops the outer session's cached relation so the serve re-lists
@@ -593,101 +600,60 @@ object IngestStreams {
       .orderBy("qid", "rank")
   }
 
+  /** A fresh eager state with `day0` committed as its bootstrap (marker
+    * -1, so streaming batch 0 still applies). */
+  private def eagerBootstrap(statePath: String)(day0: DataFrame): Unit = {
+    DurableState.destroy(statePath)
+    DurableState.commit(day0, statePath, -1L)
+  }
+
   /** STREAMING dedup-cluster maintenance — q355's incremental CC
     * driven by the stream: each arriving day's micro-batch probes the
     * staged index for cross edges + its own star edges
     * ([[Dedup.batchIngestEdges]], one signature scan), merges them
     * into the running labels via [[Dedup.ccIncremental]] (CC over the
     * batch-sized quotient only), and appends ALL its signatures to the
-    * index so later days can connect to it. Per-trigger cost is
-    * O(batch) compute plus one state-sized swap write (the durability
-    * price — measured in PLANS.md; at 100 TB the deferred-relabel
-    * patch log noted in [[Dedup.ccIncremental]]'s scaladoc amortizes
-    * it). The corpus is never rescanned and the labels are never
-    * recomputed. Cluster structure is ORDER-INDEPENDENT (CC over the
-    * union of all discovered edges, which equals the full collision
+    * index so later days can connect to it (unlike the dedup loop's
+    * survivors-only append). Per-trigger cost is O(batch) compute plus
+    * one state-sized swap write (the durability price — measured in
+    * PLANS.md; the deferred-relabel twin [[clusterLoopDeferred]]
+    * amortizes it). The corpus is never rescanned and the labels are
+    * never recomputed. Cluster structure is ORDER-INDEPENDENT (CC over
+    * the union of all discovered edges, which equals the full collision
     * graph: every colliding pair meets through the index), so the
     * oracle is simply the full-recompute cluster census — the green
-    * row proves streaming-incremental ≡ batch-full end-to-end. */
-  /** The cluster-maintenance loop over EXPLICIT corpus/day frames — the
-    * core of [[runClusterMaintenance]] (threshold cuts) and SoakSpec
-    * (modular cuts, so the batch stays fixed-size while the corpus
-    * scales; measured at 1×/10×/100× in PLANS.md §r12 streaming loops at
-    * 100×). Stages the corpus index, bootstraps the durable labels,
-    * drives the days, returns the state path. */
+    * row proves streaming-incremental ≡ batch-full end-to-end.
+    *
+    * Over EXPLICIT corpus/day frames — the core of
+    * [[runClusterMaintenance]] (threshold cuts) and SoakSpec (modular
+    * cuts, so the batch stays fixed-size while the corpus scales;
+    * measured at 1×/10×/100× in PLANS.md §r12 streaming loops at 100×).
+    * Returns the state path. */
   private[graft] def clusterLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
       maxFilesPerTrigger: Option[Int] = Some(1))
       : String = {
-    val idx = name + "_idx"
     val statePath = s"target/ingest_state_$name"
-    VStage.init(
-      Dedup.lshIndexFrame(corpus, col("text"), col("doc_id")),
-      idx, "lsh_key", 8)
-    val (spool, ckpt) = freshPaths(name)
-    // day-0 bootstrap: commit the corpus labels as the initial durable
-    // state (marker -1, so streaming batch 0 still applies)
-    DurableState.destroy(statePath)
-    val scope0 = CkptScope()
-    // day-0 star edges come from the index just staged, not a second
-    // corpus tokenize (Dedup.starEdgesFromIndex — the q350 one-scan
-    // lesson; zero-Exchange on the bucketed layout)
-    try DurableState.commit(
-      Dedup.connectedComponents(
-        Dedup.starEdgesFromIndex(VStage.load(spark, idx)),
-        scope = scope0),
-      statePath, -1L)
-    finally scope0.freeAll()
-    val body = (batch: DataFrame, batchId: Long) => {
-      val ss = batch.sparkSession // cloned session: see runIngestDedup
-      DurableState.recover(statePath)
-      // exactly-once across retries: a re-delivered batch whose state
-      // swap already committed skips cleanly (its index append also
-      // already ran; see the class doc for why an append replay on a
-      // NOT-committed batch is inert)
-      if (batchId > DurableState.committedBatch(statePath)) {
-        val scope = CkptScope()
-        try {
-          val state = DurableState.load(ss, statePath)
-          // edges materialize (checkpoint) inside ccIncremental BEFORE
-          // the append below, so they read the pre-batch index state.
-          // The probe EXCLUDES the batch's own ids: a replay after a
-          // surviving append would otherwise see the batch's own
-          // signatures in the index, and the cross-edge representative
-          // min(corpus_id) could pick a batch doc over the corpus doc
-          // whenever batch ids undercut corpus ids (modular-cut
-          // drives), dropping the connecting edge — pinned in
-          // DurabilitySpec; a semantic no-op on first delivery
-          val next = Dedup.ccIncremental(state,
-            Dedup.batchIngestEdges(batch,
-              Dedup.indexWithoutIds(VStage.load(ss, idx),
-                batch.select(col("doc_id").as("id"))),
-              col("text"), col("doc_id"), scope = scope), scope = scope)
-          // ALL batch signatures append (cluster maintenance keeps every
-          // doc, unlike the dedup loop's survivors-only append)
-          VStage.append(
-            Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
-            idx, "lsh_key", 8)
-          DurableState.commit(next, statePath, batchId)
-        } finally scope.freeAll()
-      }
-      ()
+    lshLoop(spark, corpus, days, name, marker = Some(statePath),
+      ordered = false, bootstrap = Some(eagerBootstrap(statePath)),
+      killBetweenDays, killAfterDays, afterSegment,
+      maxFilesPerTrigger) { t =>
+      // the edges materialize (checkpoint) inside ccIncremental
+      val next = Dedup.ccIncremental(DurableState.load(t.ss, statePath),
+        Dedup.batchIngestEdges(t.batch, t.index, col("text"),
+          col("doc_id"), scope = t.scope), scope = t.scope)
+      (t.batch, () => DurableState.commit(next, statePath, t.id))
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body, killAfterDays, afterSegment,
-      maxFilesPerTrigger)
     statePath
   }
 
   def runClusterMaintenance(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 450,
                             killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    val statePath = clusterLoop(spark, docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)), name, killBetweenDays)
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    val statePath = clusterLoop(spark, corpus, days, name, killBetweenDays)
     clusterCensus(DurableState.load(spark, statePath), cut0)
   }
 
@@ -756,7 +722,7 @@ object IngestStreams {
                              resolved: DataFrame, appends: String): Unit = {
     val upTo = DurableState.committedBatch(statePath + "_patch")
     DurableState.commit(resolved, statePath + "_base", upTo)
-    rm(new java.io.File(statePath + appends))
+    Staging.deleteRecursively(new java.io.File(statePath + appends))
     DurableState.commit(emptyPatch(spark), statePath + "_patch", upTo)
   }
 
@@ -797,6 +763,49 @@ object IngestStreams {
   private def emptyPatch(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id").as("old"), col("id").as("new"))
 
+  /** A fresh patch-log state: `day0` committed as the base and an empty
+    * patch, both with marker -1; no `appends` dir. */
+  private def patchLogBootstrap(spark: SparkSession, statePath: String,
+                                appends: String)(day0: DataFrame): Unit = {
+    Seq("_base", "_patch").foreach(s => DurableState.destroy(statePath + s))
+    Staging.deleteRecursively(new java.io.File(statePath + appends))
+    DurableState.commit(day0, statePath + "_base", -1L)
+    DurableState.commit(emptyPatch(spark), statePath + "_patch", -1L)
+  }
+
+  /** The patch-log loops' commit: the batch's `rows` append
+    * idempotently to its own `ingest_batch` dir (a replay overwrites the
+    * same dir), then the composed patch swaps in with the marker — the
+    * commit point. Then the SIZE-TRIGGERED FOLD (r12 judge directive
+    * 2): the folded patch map grows with total moves, never the corpus
+    * — but "total moves" is unbounded over a long-running stream, so
+    * the loop itself re-bounds it: when the patch holds more than
+    * `foldFactor ×` this batch's rows, the `resolve`d view folds into
+    * the base (one corpus-sized swap, the LSM compaction leg —
+    * amortized, since the trigger requires the patch to have
+    * accumulated a batch's worth of moves first; every fold crash
+    * window is benign, see [[foldPatchState]]). `foldFactor = ∞`
+    * disables it (the A/B baseline). Both counts are observed on the
+    * trigger's own writes ([[DurableState.commit]] returns the swapped
+    * patch's cardinality), so the check runs zero jobs (r14: separate
+    * counts re-ran their plans — 3 extra jobs per trigger). */
+  private def patchLogCommit(t: Tick, statePath: String, appends: String,
+      rows: DataFrame, patch: DataFrame, foldFactor: Double,
+      resolve: (SparkSession, String) => DataFrame): Unit = {
+    val obs = org.apache.spark.sql.Observation()
+    rows.observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(
+        s"$statePath$appends/ingest_batch=${t.id}")
+    val batchRows = obs.get("rows").asInstanceOf[Long]
+    val patchPath = statePath + "_patch"
+    val patchRows = DurableState.commit(
+      Dedup.composePatch(DurableState.load(t.ss, patchPath), patch),
+      patchPath, t.id)
+    if (!foldFactor.isPosInfinity &&
+        patchRows > foldFactor * math.max(batchRows, 1L))
+      foldPatchState(t.ss, statePath, resolve(t.ss, statePath), appends)
+  }
+
   /** [[clusterLoop]]'s DEFERRED-RELABEL twin (q368) — the per-trigger
     * cost shape a 100 TB deployment needs: where the eager loop swaps
     * the full labels table every trigger (O(corpus) durable I/O — the
@@ -806,107 +815,34 @@ object IngestStreams {
     * folds into a terminal patch map ([[Dedup.ccIncrementalPatch]] /
     * [[Dedup.composePatch]]) swapped with the commit marker. State
     * reads resolve lazily ([[patchLogLabels]]); the patch map grows
-    * with total moves, never the corpus, and [[foldPatchLog]] re-bounds
-    * it periodically. Same recovery story as the eager loop: marker-
-    * gated exactly-once, kill-and-resume ≡ uninterrupted (pinned), and
-    * the q368 oracle replays the full recompute census. Measured
-    * against the eager loop across 1×/10×/100× corpora in PLANS.md
-    * §r12 streaming loops at 100×. */
+    * with total moves, never the corpus, and the size-triggered fold
+    * ([[patchLogCommit]]) re-bounds it. Kill-and-resume ≡ uninterrupted
+    * (pinned), and the q368 oracle replays the full recompute census.
+    * Measured against the eager loop across 1×/10×/100× corpora in
+    * PLANS.md §r12 streaming loops at 100×. */
   private[graft] def clusterLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String,
       killBetweenDays: Boolean,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
-      afterSegment: Int => Unit = _ => (),
-      maxFilesPerTrigger: Option[Int] = Some(1))
-      : String = {
-    val idx = name + "_idx"
+      afterSegment: Int => Unit = _ => ()): String = {
     val statePath = s"target/ingest_state_$name"
-    VStage.init(
-      Dedup.lshIndexFrame(corpus, col("text"), col("doc_id")),
-      idx, "lsh_key", 8)
-    val (spool, ckpt) = freshPaths(name)
-    Seq("_base", "_patch").foreach(s => DurableState.destroy(statePath + s))
-    rm(new java.io.File(statePath + "_labels"))
-    val scope0 = CkptScope()
-    try {
-      DurableState.commit(
-        Dedup.connectedComponents(
-          Dedup.starEdgesFromIndex(VStage.load(spark, idx)),
-          scope = scope0),
-        statePath + "_base", -1L)
-      DurableState.commit(emptyPatch(spark), statePath + "_patch", -1L)
-    } finally scope0.freeAll()
-    val body = (batch: DataFrame, batchId: Long) => {
-      val ss = batch.sparkSession // cloned session: see runIngestDedup
-      val patchPath = statePath + "_patch"
-      DurableState.recover(patchPath)
-      if (batchId > DurableState.committedBatch(patchPath)) {
-        val scope = CkptScope()
-        try {
-          val labels = patchLogLabels(ss, statePath)
-          // patch + fresh labels checkpoint inside ccIncrementalPatch
-          // (via ccContract) BEFORE the append — pre-batch index state;
-          // self-exclusion for replay-after-append (see clusterLoop)
-          val (patch, freshLab) = Dedup.ccIncrementalPatch(labels,
-            Dedup.batchIngestEdges(batch,
-              Dedup.indexWithoutIds(VStage.load(ss, idx),
-                batch.select(col("doc_id").as("id"))),
-              col("text"), col("doc_id"), scope = scope), scope = scope)
-          VStage.append(
-            Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
-            idx, "lsh_key", 8)
-          // idempotent per-batch label append, then the marker-carrying
-          // patch swap as the commit point (replay overwrites the same
-          // label dir and recomputes the same fold). Both cardinalities
-          // the fold trigger needs ride the two writes as Observations
-          // (r14, guide §1.2: the separate freshLab count re-ran its plan
-          // and the patch count re-read the swap — 3 extra jobs per
-          // trigger for numbers the writes already had)
-          val labObs = org.apache.spark.sql.Observation()
-          freshLab.observe(labObs, count(lit(1)).as("rows"))
-            .write.mode("overwrite").parquet(
-              s"${statePath}_labels/ingest_batch=$batchId")
-          val labRows = labObs.get("rows").asInstanceOf[Long]
-          val patchRows = DurableState.commit(
-            Dedup.composePatch(DurableState.load(ss, patchPath), patch),
-            patchPath, batchId)
-          // SIZE-TRIGGERED FOLD (r12 judge directive 2): the folded
-          // patch map grows with total moves, never the corpus — but
-          // "total moves" is unbounded over a long-running stream, so
-          // the loop itself re-bounds it: when the patch outgrows
-          // foldFactor × this batch's label rows, fold the resolved
-          // view into the base (one corpus-sized swap, the LSM
-          // compaction leg — amortized, since the trigger requires the
-          // patch to have accumulated a batch's worth of moves first).
-          // Both counts are tiny frames (the patch is move-bounded, the
-          // label rows batch-bounded); every fold crash window is
-          // benign (see foldPatchState)
-          maybeFold(ss, statePath, patchRows, labRows,
-            foldFactor, foldPatchLog)
-        } finally scope.freeAll()
-      }
-      ()
+    lshLoop(spark, corpus, days, name, marker = Some(statePath + "_patch"),
+      ordered = false,
+      bootstrap = Some(patchLogBootstrap(spark, statePath, "_labels")),
+      killBetweenDays, killAfterDays, afterSegment,
+      maxFilesPerTrigger = Some(1)) { t =>
+      // patch + fresh labels checkpoint inside ccIncrementalPatch (via
+      // ccContract)
+      val (patch, freshLab) = Dedup.ccIncrementalPatch(
+        patchLogLabels(t.ss, statePath),
+        Dedup.batchIngestEdges(t.batch, t.index, col("text"),
+          col("doc_id"), scope = t.scope), scope = t.scope)
+      (t.batch, () => patchLogCommit(t, statePath, "_labels", freshLab,
+        patch, foldFactor, patchLogLabels))
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body, killAfterDays, afterSegment,
-      maxFilesPerTrigger)
     statePath
   }
-
-  /** Shared size-trigger for the patch-log loops: fold when the patch
-    * map holds more rows than `foldFactor ×` this batch's appended
-    * rows. `foldFactor = ∞` disables (the A/B baseline). Both counts
-    * arrive observed from the trigger's own writes ([[DurableState.commit]]
-    * returns the swapped patch's cardinality) — the check itself runs
-    * zero jobs (r14). */
-  private def maybeFold(ss: SparkSession, statePath: String,
-      patchRows: Long, batchRows: Long, foldFactor: Double,
-      fold: (SparkSession, String) => Unit): Unit =
-    if (!foldFactor.isPosInfinity &&
-        patchRows > foldFactor * math.max(batchRows, 1L)) {
-      fold(ss, statePath)
-    }
 
   /** q368: [[runClusterMaintenance]]'s census served from the
     * patch-log state — streaming-incremental ≡ batch-full proven by
@@ -914,14 +850,9 @@ object IngestStreams {
     * independent of corpus size. */
   def runClusterPatchLog(spark: SparkSession, dir: String, name: String,
                          cut0: Long = 300, cut1: Long = 450,
-                         killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    val statePath = clusterLoopDeferred(spark,
-      docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)), name, killBetweenDays)
-    clusterCensus(patchLogLabels(spark, statePath), cut0)
-  }
+                         killBetweenDays: Boolean = false): DataFrame =
+    runClusterPatchLogMulti(spark, dir, name, Seq(cut0, cut1),
+      killBetweenDays = killBetweenDays)
 
   /** [[runClusterPatchLog]] over an ARBITRARY arrival-day chain (q374):
     * `cuts` bound the corpus (`< cuts.head`) and each day
@@ -937,15 +868,29 @@ object IngestStreams {
                               foldFactor: Double = 1.0,
                               killBetweenDays: Boolean = false): DataFrame = {
     require(cuts.nonEmpty, "need at least one cut")
-    val docs = Tables.t(spark, dir, "documents")
-    val days = cuts.sliding(2).collect { case Seq(lo, hi) =>
-      docs.where(col("doc_id") >= lo && col("doc_id") < hi) }.toSeq :+
-      docs.where(col("doc_id") >= cuts.last)
-    val statePath = clusterLoopDeferred(spark,
-      docs.where(col("doc_id") < cuts.head), days, name,
+    val (corpus, days) =
+      slices(Tables.t(spark, dir, "documents"), "doc_id", cuts)
+    val statePath = clusterLoopDeferred(spark, corpus, days, name,
       killBetweenDays, foldFactor = foldFactor)
     clusterCensus(patchLogLabels(spark, statePath), cuts.head)
   }
+
+  /** The split fractions and the hash of a component to its split. */
+  private def splitOf(salt: String)(comp: Column): Column =
+    graft.Sampling.splitAssign(comp,
+      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt)
+
+  /** Day-0 split assignment: each corpus doc with its day-0 component
+    * (null when isolated) and the split hashed from that component (its
+    * own id when isolated). */
+  private def day0Splits(corpus: DataFrame, labels0: DataFrame,
+                         salt: String): DataFrame =
+    corpus.select(col("doc_id").cast("long").as("id"))
+      .join(labels0.withColumnRenamed("id", "__lid"),
+        col("id") === col("__lid"), "left")
+      .select(col("id"),
+        splitOf(salt)(coalesce(col("comp"), col("id"))).as("split"),
+        col("comp"))
 
   /** The ingest END-STATE: split-stable assignment maintained under a
     * STREAM of arriving days. Day 0 assigns cluster-safely; each
@@ -956,72 +901,37 @@ object IngestStreams {
     * later days connect. The assignment state is ORDER-DEPENDENT (day
     * 2's inheritance depends on day 1's merges), which is exactly why
     * it lives in [[DurableState]]: a driver restart that lost it could
-    * not reconstruct the sequential history. The final census reports,
-    * per declared split: doc mass and the irreducible legacy conflicts
+    * not reconstruct the sequential history — and why the loop asserts
+    * one spooled day per trigger. The final census reports, per
+    * declared split: doc mass and the irreducible legacy conflicts
     * (components whose members span ≥ 2 splits — merges forced them,
     * history can't be reassigned). The oracle replays the SEQUENTIAL
     * chain — three CC stages (corpus, corpus∪day1, all) and both
     * inheritance steps — so the green row proves the day-after-day
-    * state composition equals the from-scratch sequential analysis. */
-  /** The eager split-stable loop over EXPLICIT corpus/day frames (the
-    * multi-day core [[runSplitStableIngest]] and SoakSpec's 10-day
-    * soak share; per-trigger walls in PLANS.md §r13 10-day soak
-    * measurement). ORDER-DEPENDENT: asserts the one-day-per-trigger contract
-    * ([[assertSingleFile]]). Returns the state path. */
+    * state composition equals the from-scratch sequential analysis.
+    *
+    * Over EXPLICIT corpus/day frames (the multi-day core
+    * [[runSplitStableIngest]] and SoakSpec's 10-day soak share;
+    * per-trigger walls in PLANS.md §r13 10-day soak measurement).
+    * Returns the state path. */
   private[graft] def splitLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, salt: String,
       killBetweenDays: Boolean,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
       maxFilesPerTrigger: Option[Int] = Some(1)): String = {
-    val idx = name + "_idx"
     val statePath = s"target/ingest_state_$name"
-    val fr = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    VStage.init(
-      Dedup.lshIndexFrame(corpus, col("text"), col("doc_id")),
-      idx, "lsh_key", 8)
-    val (spool, ckpt) = freshPaths(name)
-    DurableState.destroy(statePath)
-    val scope0 = CkptScope()
-    try {
-      val labels0 = Dedup.connectedComponents(
-        Dedup.starEdgesFromIndex(VStage.load(spark, idx)),
-        scope = scope0)
-      DurableState.commit(
-        corpus.select(col("doc_id").cast("long").as("id"))
-          .join(labels0.withColumnRenamed("id", "__lid"),
-            col("id") === col("__lid"), "left")
-          .select(col("id"),
-            graft.Sampling.splitAssign(coalesce(col("comp"), col("id")), fr,
-              salt).as("split"),
-            col("comp")),
-        statePath, -1L)
-    } finally scope0.freeAll()
-    val body = (batch: DataFrame, batchId: Long) => {
-      val ss = batch.sparkSession // cloned session: see runIngestDedup
-      assertSingleFile(batch)
-      DurableState.recover(statePath)
-      if (batchId > DurableState.committedBatch(statePath)) {
-        val scope = CkptScope()
-        try {
-          // self-exclusion for replay-after-append (see clusterLoop)
-          val next = Dedup.splitStableAssign(
-            DurableState.load(ss, statePath),
-            Dedup.indexWithoutIds(VStage.load(ss, idx),
-              batch.select(col("doc_id").as("id"))),
-            batch, col("text"), col("doc_id"),
-            c => graft.Sampling.splitAssign(c, fr, salt), scope = scope)
-          VStage.append(
-            Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
-            idx, "lsh_key", 8)
-          DurableState.commit(next, statePath, batchId)
-        } finally scope.freeAll()
-      }
-      ()
+    lshLoop(spark, corpus, days, name, marker = Some(statePath),
+      ordered = true,
+      bootstrap = Some(l0 =>
+        eagerBootstrap(statePath)(day0Splits(corpus, l0, salt))),
+      killBetweenDays, killAfterDays, afterSegment,
+      maxFilesPerTrigger) { t =>
+      val next = Dedup.splitStableAssign(DurableState.load(t.ss, statePath),
+        t.index, t.batch, col("text"), col("doc_id"), splitOf(salt),
+        scope = t.scope)
+      (t.batch, () => DurableState.commit(next, statePath, t.id))
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body, killAfterDays, afterSegment,
-      maxFilesPerTrigger)
     statePath
   }
 
@@ -1029,10 +939,9 @@ object IngestStreams {
                            cut0: Long = 300, cut1: Long = 450,
                            salt: String = "sss",
                            killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    val statePath = splitLoop(spark, docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)), name, salt, killBetweenDays)
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    val statePath = splitLoop(spark, corpus, days, name, salt,
+      killBetweenDays)
     splitCensus(spark, DurableState.load(spark, statePath))
   }
 
@@ -1067,80 +976,29 @@ object IngestStreams {
     * into the folded patch map; batch assignment rows append
     * idempotently per batch. Same sequential-chain oracle as q365 —
     * the green row proves the deferred composition equals the
-    * from-scratch sequential analysis. */
-  /** The patch-log split loop over EXPLICIT corpus/day frames
-    * ([[splitLoop]]'s deferred twin; the multi-day core
-    * [[runSplitStablePatchLog]] and SoakSpec's 10-day soak share). Same
-    * one-day-per-trigger contract; auto-folds on the [[maybeFold]]
-    * size trigger. Returns the state path. */
+    * from-scratch sequential analysis. [[splitLoop]]'s deferred twin
+    * over EXPLICIT corpus/day frames (the multi-day core
+    * [[runSplitStablePatchLog]] and SoakSpec's 10-day soak share).
+    * Returns the state path. */
   private[graft] def splitLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String, salt: String,
       killBetweenDays: Boolean,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => ()): String = {
-    val idx = name + "_idx"
     val statePath = s"target/ingest_state_$name"
-    val fr = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
-    VStage.init(
-      Dedup.lshIndexFrame(corpus, col("text"), col("doc_id")),
-      idx, "lsh_key", 8)
-    val (spool, ckpt) = freshPaths(name)
-    Seq("_base", "_patch").foreach(s => DurableState.destroy(statePath + s))
-    rm(new java.io.File(statePath + "_assign"))
-    val scope0 = CkptScope()
-    try {
-      val labels0 = Dedup.connectedComponents(
-        Dedup.starEdgesFromIndex(VStage.load(spark, idx)),
-        scope = scope0)
-      DurableState.commit(
-        corpus.select(col("doc_id").cast("long").as("id"))
-          .join(labels0.withColumnRenamed("id", "__lid"),
-            col("id") === col("__lid"), "left")
-          .select(col("id"),
-            graft.Sampling.splitAssign(coalesce(col("comp"), col("id")),
-              fr, salt).as("split"),
-            col("comp")),
-        statePath + "_base", -1L)
-      DurableState.commit(emptyPatch(spark), statePath + "_patch", -1L)
-    } finally scope0.freeAll()
-    val body = (batch: DataFrame, batchId: Long) => {
-      val ss = batch.sparkSession // cloned session: see runIngestDedup
-      assertSingleFile(batch)
-      val patchPath = statePath + "_patch"
-      DurableState.recover(patchPath)
-      if (batchId > DurableState.committedBatch(patchPath)) {
-        val scope = CkptScope()
-        try {
-          // self-exclusion for replay-after-append (see clusterLoop)
-          val (patch, newRows) = Dedup.splitStableAssignPatch(
-            patchLogAssign(ss, statePath),
-            Dedup.indexWithoutIds(VStage.load(ss, idx),
-              batch.select(col("doc_id").as("id"))),
-            batch, col("text"), col("doc_id"),
-            c => graft.Sampling.splitAssign(c, fr, salt), scope = scope)
-          VStage.append(
-            Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
-            idx, "lsh_key", 8)
-          // counts observed on the trigger's own writes — see
-          // clusterLoopDeferred (r14)
-          val rowObs = org.apache.spark.sql.Observation()
-          newRows.observe(rowObs, count(lit(1)).as("rows"))
-            .write.mode("overwrite").parquet(
-              s"${statePath}_assign/ingest_batch=$batchId")
-          val newRowsN = rowObs.get("rows").asInstanceOf[Long]
-          val patchRows = DurableState.commit(
-            Dedup.composePatch(DurableState.load(ss, patchPath), patch),
-            patchPath, batchId)
-          // size-triggered fold — see clusterLoopDeferred
-          maybeFold(ss, statePath, patchRows, newRowsN,
-            foldFactor, foldPatchAssign)
-        } finally scope.freeAll()
-      }
-      ()
+    lshLoop(spark, corpus, days, name, marker = Some(statePath + "_patch"),
+      ordered = true,
+      bootstrap = Some(l0 => patchLogBootstrap(spark, statePath,
+        "_assign")(day0Splits(corpus, l0, salt))),
+      killBetweenDays, killAfterDays, afterSegment,
+      maxFilesPerTrigger = Some(1)) { t =>
+      val (patch, newRows) = Dedup.splitStableAssignPatch(
+        patchLogAssign(t.ss, statePath), t.index, t.batch, col("text"),
+        col("doc_id"), splitOf(salt), scope = t.scope)
+      (t.batch, () => patchLogCommit(t, statePath, "_assign", newRows,
+        patch, foldFactor, patchLogAssign))
     }
-    driveDays(spark, days.head.schema, spool, ckpt, days,
-      killBetweenDays, body, killAfterDays, afterSegment)
     statePath
   }
 
@@ -1148,11 +1006,9 @@ object IngestStreams {
                              cut0: Long = 300, cut1: Long = 450,
                              salt: String = "sss",
                              killBetweenDays: Boolean = false): DataFrame = {
-    val docs = Tables.t(spark, dir, "documents")
-    val statePath = splitLoopDeferred(spark,
-      docs.where(col("doc_id") < cut0),
-      Seq(docs.where(col("doc_id") >= cut0 && col("doc_id") < cut1),
-        docs.where(col("doc_id") >= cut1)), name, salt, killBetweenDays)
+    val (corpus, days) = docDays(spark, dir, cut0, cut1)
+    val statePath = splitLoopDeferred(spark, corpus, days, name, salt,
+      killBetweenDays)
     splitCensus(spark, patchLogAssign(spark, statePath))
   }
 }
