@@ -8,8 +8,29 @@ import org.apache.spark.sql.functions._
   * Exact, MinHash+LSH, SimHash, and n-gram-Jaccard near-dup — each shaped so
   * the expensive comparison only happens *within* a bucket/band join, never
   * all-pairs: at 100 TB the candidate-pair count, not the hash computation,
-  * is what kills a job. All hashing is md5-derived (available identically in
-  * Spark and DuckDB) so results stay oracle-checkable.
+  * is what kills a job. Signature hashing is md5-derived (available
+  * identically in Spark and DuckDB) so results stay oracle-checkable.
+  *
+  * Shared building blocks — one definition each, called by every
+  * operator that needs them:
+  *  - [[ngrams]] and [[gramSet]]: a text's distinct word n-grams, and a
+  *    gram set as the sorted distinct xxhash64 values the sorted-merge
+  *    kernel ([[org.apache.spark.sql.graft.SortedIntersectCountLong]])
+  *    reads. Long equality beats string equality in CPU and allocation,
+  *    and set sizes agree with the string form modulo ~1e-10/pair
+  *    collision odds; only sizes feed the measures, so the oracle needs
+  *    no matching hash.
+  *  - [[blockPairs]] with [[probeSide]]: the within-block exact pair
+  *    join; [[jaccardAtLeast]] and [[containmentAtLeast]]: the
+  *    threshold-on-the-raw-ratio, integer-sealed display tails.
+  *  - [[lshTokens]]: the one LSH corpus scan — MinHash signature plus
+  *    unigram gram set, checkpointed for its many readers.
+  *  - [[bandExplode]], [[pinnedBands]] and [[bandPairs]]: the LSH band
+  *    layout, its checkpointed form, and the band-collision self-join
+  *    with the caller's extra predicate inside the join.
+  *  - [[starEdges]]: per-bucket star contraction, the CC feeder.
+  *  - [[splitStableMerge]]: the batch merge every split-stable operator
+  *    starts with.
   */
 object Dedup {
   /** Shared 60-bit token/shingle hash: md5 hex prefix -> long. Identical in
@@ -96,6 +117,16 @@ object Dedup {
       .otherwise(array().cast("array<string>")))
   }
 
+  /** The n-grams compared by the n-gram pair operators: distinct words
+    * for n = 1, else distinct word [[shingles]]. */
+  private def ngrams(text: Column, n: Int): Column =
+    if (n == 1) array_distinct(split(text, " ")) else shingles(text, n)
+
+  /** A gram set as the sorted-merge kernels read it: the distinct
+    * xxhash64 values of a gram array, sorted ascending. */
+  private def gramSet(grams: Column): Column =
+    array_sort(array_distinct(transform(grams, g => xxhash64(g))))
+
   /** MinHash signature: for permutation i, h_i(x) = (a_i*x + b_i) mod p over
     * hash28 shingle values; signature element = min over shingles.
     * p = 2^31-1; x < 2^28 and a <= 2n+1 keep a*x+b well inside int64 for
@@ -145,16 +176,7 @@ object Dedup {
                         shingleSize: Int = 3, numPerm: Int = 16,
                         bands: Int = 4): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val rowsPerBand = numPerm / bands
-    val sig = minhashSignatures(df, text, id, shingleSize, numPerm)
-    // materialized: both sides of the band self-join read this frame — an
-    // unmaterialized plan would run the shingle->md5->min-agg signature
-    // pipeline twice (once per join branch)
-    val banded = sig.select(col("__id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
-      .select(col("__id"), col("pos").as("__band"), col("col").cast("string").as("__bucket"))
-      .localCheckpoint()
+    val banded = pinnedBands(df, text, id, shingleSize, numPerm, bands)
     banded.as("a").join(banded.as("b"),
         col("a.__band") === col("b.__band") && col("a.__bucket") === col("b.__bucket"))
       .where(col("a.__id") < col("b.__id"))
@@ -182,12 +204,7 @@ object Dedup {
                        shingleSize: Int = 3, numPerm: Int = 16,
                        bands: Int = 4): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val sig = minhashSignatures(df, text, id, shingleSize, numPerm)
-    // materialized: the root aggregate and the join-back both read the
-    // banded frame — unmaterialized, the signature pipeline would run
-    // once per consumer
-    val banded = bandExplode(sig, numPerm, bands).localCheckpoint()
-    starEdges(banded)
+    starEdges(pinnedBands(df, text, id, shingleSize, numPerm, bands))
   }
 
   /** (band, bucket)-keyed star contraction of a banded frame: one
@@ -202,6 +219,61 @@ object Dedup {
       .distinct()
   }
 
+  /** The LSH token frame — one corpus scan for the LSH calibration and
+    * leak-census devices: (__id, `extra`…, __sig, __g), the MinHash
+    * signature (null for docs too short to shingle) and the unigram
+    * [[gramSet]] the exact-Jaccard verify reads. Rows failing `keep` go
+    * first; the frame is repartitioned by id (a checkpoint of a small
+    * input would otherwise be one partition) and checkpointed, because
+    * the band join and the verify joins all re-read it. */
+  private def lshTokens(df: DataFrame, text: Column, id: Column,
+                        extra: Seq[Column], keep: Option[Column],
+                        shingleSize: Int, numPerm: Int): DataFrame = {
+    val t = df.select((id.as("__id") +: extra) ++ Seq(
+      org.apache.spark.sql.graft.MinhashExprs
+        .signature(text, shingleSize, numPerm).as("__sig"),
+      gramSet(ngrams(text, 1)).as("__g")): _*)
+    keep.fold(t)(k => t.where(k))
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col("__id"))
+      .localCheckpoint()
+  }
+
+  /** Band-explode a signature frame: every non-`__sig` column rides
+    * along; output gains (__band, __bucket) — one row per (doc, band).
+    * The slice-of-signature bucket string is the LSH join key. */
+  private def bandExplode(sig: DataFrame, numPerm: Int,
+                          bands: Int): DataFrame = {
+    val rowsPerBand = numPerm / bands
+    val rest = sig.columns.filter(_ != "__sig").map(col).toSeq
+    sig.select(rest :+ posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))): _*)
+      .select(rest :+ col("pos").as("__band") :+
+        col("col").cast("string").as("__bucket"): _*)
+  }
+
+  /** [[minhashSignatures]] band-exploded and checkpointed: its callers
+    * read the banded frame twice (both sides of a band self-join, or a
+    * root aggregate and its join-back), and unpinned the signature
+    * pipeline would run once per consumer. */
+  private def pinnedBands(df: DataFrame, text: Column, id: Column,
+                          shingleSize: Int, numPerm: Int,
+                          bands: Int): DataFrame =
+    bandExplode(minhashSignatures(df, text, id, shingleSize, numPerm),
+      numPerm, bands).localCheckpoint()
+
+  /** Distinct band-collision pairs (id_a, id_b), id_a < id_b, of a
+    * banded frame: a and b share a (band, bucket) and meet `also`,
+    * which reads the sides as `a.` / `b.` and is checked inside the
+    * join. */
+  private def bandPairs(banded: DataFrame, also: Column): DataFrame =
+    banded.as("a").join(banded.as("b"),
+        col("a.__band") === col("b.__band") &&
+          col("a.__bucket") === col("b.__bucket") && also)
+      .where(col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
+      .distinct()
+
   /** Incremental near-dedup — the ingestion-time shape: drop every BATCH
     * document whose MinHash bands collide with any EXISTING-corpus
     * document. The corpus (the big side at scale) never self-joins and is
@@ -212,13 +284,9 @@ object Dedup {
                      shingleSize: Int = 3, numPerm: Int = 16,
                      bands: Int = 4): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val rowsPerBand = numPerm / bands
     def banded(df: DataFrame): DataFrame =
-      minhashSignatures(df, text, id, shingleSize, numPerm)
-        .select(col("__id"), posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
-        .select(col("__id"), col("pos").as("__band"),
-          col("col").cast("string").as("__bucket"))
+      bandExplode(minhashSignatures(df, text, id, shingleSize, numPerm),
+        numPerm, bands)
     val hit = banded(batch).as("b")
       .join(banded(corpus).as("c"),
         col("b.__band") === col("c.__band") && col("b.__bucket") === col("c.__bucket"),
@@ -245,25 +313,14 @@ object Dedup {
                     shingleSize: Int = 3, numPerm: Int = 16,
                     bands: Int = 4): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val rowsPerBand = numPerm / bands
-    minhashSignatures(corpus, text, id, shingleSize, numPerm)
-      .select(col("__id"), posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
+    bandExplode(minhashSignatures(corpus, text, id, shingleSize, numPerm),
+        numPerm, bands)
       .select(col("__id").as("corpus_id"),
-        concat(col("pos").cast("string"), lit(":"),
-          col("col").cast("string")).as("lsh_key"))
+        concat(col("__band").cast("string"), lit(":"), col("__bucket"))
+          .as("lsh_key"))
       .where(col("lsh_key").isNotNull)
   }
 
-  /** [[minhashAgainst]] against a PRE-STAGED index ([[lshIndexFrame]]
-    * bucketed on `lsh_key`): identical output (the unit suite pins
-    * result equality; q353 pins the shared oracle), but the corpus-side
-    * signature scan and join shuffle are gone — the bucketed scan
-    * satisfies the join's hash-partitioning requirement from the
-    * catalog, so only the (small) batch side shuffles, sized by the
-    * index's bucket count. The ingestion-time cost model at scale:
-    * O(batch) signatures + one batch-side exchange, independent of
-    * corpus size. */
   /** Star edges recovered from an already-staged [[lshIndexFrame]] —
     * the q350 one-tokenize lesson applied to the streaming bootstraps:
     * an ingest loop that stages the corpus index AND seeds day-0
@@ -299,6 +356,15 @@ object Dedup {
     index.join(broadcast(ids.select(col("id").cast("long").as("__xid"))),
       index("corpus_id") === col("__xid"), "left_anti")
 
+  /** [[minhashAgainst]] against a PRE-STAGED index ([[lshIndexFrame]]
+    * bucketed on `lsh_key`): identical output (the unit suite pins
+    * result equality; q353 pins the shared oracle), but the corpus-side
+    * signature scan and join shuffle are gone — the bucketed scan
+    * satisfies the join's hash-partitioning requirement from the
+    * catalog, so only the (small) batch side shuffles, sized by the
+    * index's bucket count. The ingestion-time cost model at scale:
+    * O(batch) signatures + one batch-side exchange, independent of
+    * corpus size. */
   def minhashAgainstIndex(batch: DataFrame, index: DataFrame, text: Column,
                           id: Column, shingleSize: Int = 3, numPerm: Int = 16,
                           bands: Int = 4): DataFrame = {
@@ -396,41 +462,61 @@ object Dedup {
         i => i / (size(a) + size(b) - i)),
       1)
 
-  /** n-gram Jaccard near-dup pairs within a blocking key, threshold >= minJ.
-    * Distinct word n-grams as the set; blocking (not all-pairs) is the
-    * scale-out story, as with simhash. Gram sets are compared as 64-bit
-    * xxhash64 values, not strings (identical Jaccard modulo ~1e-10/pair
-    * collisions): the per-pair intersect is the inner loop of a quadratic
-    * join, and long equality beats string equality both in CPU and in
-    * allocation. The hash needs no cross-engine twin — only set SIZES feed
-    * the Jaccard, so the oracle can hash (or not) however it likes. */
-  def ngramJaccardPairs(df: DataFrame, text: Column, id: Column, block: Column,
-                        n: Int = 1, minJ: Double = 0.6): DataFrame = {
-    val grams = if (n == 1) array_distinct(split(text, " ")) else shingles(text, n)
-    // sorted once per DOC so the per-pair intersect is the allocation-free
-    // sorted-merge kernel, not a hash set + result array per pair
-    val t = df.select(id.as("__id"), block.as("__blk"),
-      array_sort(array_distinct(transform(grams, g => xxhash64(g)))).as("__g"))
-    // Probe side hash-repartitioned by id (explicit count so AQE cannot
-    // coalesce the tiny shuffle back to one task): a small doc table often
-    // arrives as ONE file split, and the pair-generating broadcast join
-    // would otherwise run serially — the work is in the pairs generated
-    // downstream of the scan, not in the scan rows themselves.
-    val parallelism = df.sparkSession.sessionState.conf.numShufflePartitions
-    t.repartition(parallelism, col("__id")).as("a")
-      .join(t.as("b"), col("a.__blk") === col("b.__blk"))
+  /** The within-block exact pair join over two gram frames
+    * (__id, __blk, __g): every pair a.__id < b.__id sharing a block, as
+    * (id_a, id_b, n_a, n_b, __i, __ab) — both set sizes, the
+    * intersection size from the sorted-merge kernel, and |a| + |b|.
+    * Callers read the columns their measure needs; the optimizer prunes
+    * the rest. */
+  private def blockPairs(probe: DataFrame, build: DataFrame): DataFrame =
+    probe.as("a").join(build.as("b"), col("a.__blk") === col("b.__blk"))
       .where(col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
+        size(col("a.__g")).cast("long").as("n_a"),
+        size(col("b.__g")).cast("long").as("n_b"),
         org.apache.spark.sql.graft.SparseExprs
           .sortedIntersectCountLong(col("a.__g"), col("b.__g")).as("__i"),
         (size(col("a.__g")) + size(col("b.__g"))).cast("long").as("__ab"))
-      .withColumn("__u", col("__ab") - col("__i"))
+
+  /** The probe side of a [[blockPairs]] join over an unpinned scan:
+    * hash-repartitioned by id, with an explicit count so AQE cannot
+    * coalesce the tiny shuffle back to one task. A small doc table often
+    * arrives as ONE file split, and the pair-generating broadcast join
+    * would otherwise run serially — the work is in the pairs generated
+    * downstream of the scan, not in the scan rows themselves. */
+  private def probeSide(t: DataFrame): DataFrame =
+    t.repartition(t.sparkSession.sessionState.conf.numShufflePartitions,
+      col("__id"))
+
+  /** Pairs (id_a, id_b, __i, __ab) with Jaccard __i / (__ab − __i) ≥ minJ,
+    * as (id_a, id_b, jaccard). The threshold reads the raw ratio; the
+    * displayed value is integer-sealed (inter/union is an exact integer
+    * rational). */
+  private def jaccardAtLeast(pairs: DataFrame, minJ: Double): DataFrame =
+    pairs.withColumn("__u", col("__ab") - col("__i"))
       .withColumn("__raw", col("__i").cast("double") / col("__u"))
       .where(col("__raw") >= minJ)
-      // threshold on the raw ratio (unchanged semantics), display
-      // integer-sealed: inter/union is an exact integer rational
       .select(col("id_a"), col("id_b"),
         Seal.ratio4("__i", "__u").as("jaccard"))
+
+  /** Pairs (id_a, id_b, n_a, n_b, __i) with containment
+    * __i / min(n_a, n_b) ≥ minC, as (id_a, id_b, n_a, n_b, containment);
+    * threshold on the raw ratio, display integer-sealed. */
+  private def containmentAtLeast(pairs: DataFrame, minC: Double): DataFrame =
+    pairs.withColumn("__mn", least(col("n_a"), col("n_b")))
+      .withColumn("__raw", col("__i").cast("double") / col("__mn"))
+      .where(col("__raw") >= minC)
+      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
+        Seal.ratio4("__i", "__mn").as("containment"))
+
+  /** n-gram Jaccard near-dup pairs within a blocking key, threshold >= minJ.
+    * Distinct word n-grams as the set; blocking (not all-pairs) is the
+    * scale-out story, as with simhash. */
+  def ngramJaccardPairs(df: DataFrame, text: Column, id: Column, block: Column,
+                        n: Int = 1, minJ: Double = 0.6): DataFrame = {
+    val t = df.select(id.as("__id"), block.as("__blk"),
+      gramSet(ngrams(text, n)).as("__g"))
+    jaccardAtLeast(blockPairs(probeSide(t), t), minJ)
   }
 
   /** Duplicate-cluster size histogram: group documents by exact content
@@ -713,35 +799,13 @@ object Dedup {
     * Jaccard threshold as the length ratio grows. Same block-bounded
     * pair join as [[ngramJaccardPairs]] (the candidates-∝-block shape);
     * the threshold compares an exact small-integer division, identical
-    * in any IEEE engine. Gram sets compared as sorted 64-bit xxhash64
-    * values (the q61 convention — sizes and intersections agree with
-    * the string form modulo ~1e-10/pair collision odds) so the per-pair
-    * intersect is the allocation-free sorted-merge kernel. */
+    * in any IEEE engine. */
   def ngramContainmentPairs(df: DataFrame, text: Column, id: Column,
                             block: Column, n: Int = 1,
                             minC: Double = 0.9): DataFrame = {
-    val grams =
-      if (n == 1) array_distinct(split(text, " ")) else shingles(text, n)
     val t = df.select(id.as("__id"), block.as("__blk"),
-      array_sort(array_distinct(transform(grams, g => xxhash64(g))))
-        .as("__g"))
-    val parallelism =
-      df.sparkSession.sessionState.conf.numShufflePartitions
-    val inter = org.apache.spark.sql.graft.SparseExprs
-      .sortedIntersectCountLong(col("a.__g"), col("b.__g"))
-    t.repartition(parallelism, col("__id")).as("a")
-      .join(t.as("b"), col("a.__blk") === col("b.__blk"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
-        size(col("a.__g")).cast("long").as("n_a"),
-        size(col("b.__g")).cast("long").as("n_b"),
-        inter.cast("long").as("__i"))
-      .withColumn("__mn", least(col("n_a"), col("n_b")))
-      .withColumn("__raw", col("__i").cast("double") / col("__mn"))
-      .where(col("__raw") >= minC)
-      // threshold on the raw ratio, display integer-sealed (Seal)
-      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
-        Seal.ratio4("__i", "__mn").as("containment"))
+      gramSet(ngrams(text, n)).as("__g"))
+    containmentAtLeast(blockPairs(probeSide(t), t), minC)
   }
 
   /** Banded scale twin of [[ngramContainmentPairs]] (the q60/q61/q305
@@ -757,30 +821,19 @@ object Dedup {
     * Candidates verify with the exact distinct-gram intersection —
     * output EQUALS the naive join. Unlike the Jaccard twins there is
     * NO length filter: subset-duplicates with arbitrary length ratio
-    * are precisely what containment exists to catch. */
+    * are precisely what containment exists to catch. Lossless for
+    * minC > 0 only: a pair sharing no gram is never a candidate. */
   def ngramContainmentPairsBanded(df: DataFrame, text: Column, id: Column,
                                   block: Column, n: Int = 1,
                                   minC: Double = 0.9,
                                   broadcastVocab: Boolean = true)
       : DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grams =
-      if (n == 1) array_distinct(split(text, " ")) else shingles(text, n)
     val para = df.sparkSession.sessionState.conf.numShufflePartitions
     // one pin for three consumers (token stream, both verify sides),
-    // repartitioned by id against the checkpoint-1-partition trap.
-    // Grams are 64-bit-hashed up front (the q61 convention: set sizes
-    // and intersections agree with the string form modulo ~1e-10/pair
-    // collision odds, and every downstream shuffle, join key, and
-    // per-pair intersection runs on fixed-width longs instead of
-    // shingle strings).
-    val t = df.select(id.as("id"), block.as("blk"), grams.as("g0"))
+    // repartitioned by id against the checkpoint-1-partition trap
+    val t = df.select(id.as("id"), block.as("blk"), ngrams(text, n).as("g0"))
       .where(col("id").isNotNull && col("blk").isNotNull)
-      .select(col("id"), col("blk"),
-        // sorted once per doc: the verify intersect below runs the
-        // allocation-free sorted-merge kernel on these arrays
-        array_sort(array_distinct(transform(col("g0"), g => xxhash64(g))))
-          .as("g"),
+      .select(col("id"), col("blk"), gramSet(col("g0")).as("g"),
         size(col("g0")).cast("long").as("sz"))
       .repartition(para, col("id"))
       .localCheckpoint()
@@ -811,7 +864,7 @@ object Dedup {
       .select(col("blk"), col("tm"), col("id").as("ia"), col("sz").as("sza"))
       .join(prefix, Seq("blk", "tm"))
       .where(col("ia") =!= col("ib") && col("szb") <= col("sza"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
+      .select(col("blk"), least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"))
       .distinct()
       .repartition(para, col("id_a"))
@@ -824,19 +877,15 @@ object Dedup {
     val cdocs = t.join(candIds, Seq("id"), "left_semi")
       .repartition(para, col("id"))
       .localCheckpoint()
-    cand
-      .join(cdocs.select(col("id").as("id_a"), col("g").as("ga"),
-        col("sz").as("n_a")), Seq("id_a"))
-      .join(cdocs.select(col("id").as("id_b"), col("g").as("gb"),
-        col("sz").as("n_b")), Seq("id_b"))
+    // verify within the candidate's block (one gram set per (id, block))
+    containmentAtLeast(cand
+      .join(cdocs.select(col("id").as("id_a"), col("blk"), col("g").as("ga"),
+        col("sz").as("n_a")), Seq("id_a", "blk"))
+      .join(cdocs.select(col("id").as("id_b"), col("blk"), col("g").as("gb"),
+        col("sz").as("n_b")), Seq("id_b", "blk"))
       .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
         org.apache.spark.sql.graft.SparseExprs
-          .sortedIntersectCountLong(col("ga"), col("gb")).as("__i"))
-      .withColumn("__mn", least(col("n_a"), col("n_b")))
-      .withColumn("__raw", col("__i").cast("double") / col("__mn"))
-      .where(col("__raw") >= minC)
-      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"),
-        Seal.ratio4("__i", "__mn").as("containment"))
+          .sortedIntersectCountLong(col("ga"), col("gb")).as("__i")), minC)
   }
 
   /** Prefix-filtered n-gram Jaccard (PPJoin-style): lossless scale variant
@@ -848,15 +897,12 @@ object Dedup {
     * runs on candidates only. Output matches the quadratic form modulo
     * 64-bit hash collisions (~1e-10/pair — both forms compare token-hash
     * sets, so on any given input they agree exactly); at scale the
-    * candidate count tracks true near-dups, not block-size². */
+    * candidate count tracks true near-dups, not block-size². Lossless
+    * for minJ > 0 only: a pair sharing no gram is never a candidate. */
   def ngramJaccardPairsPrefix(df: DataFrame, text: Column, id: Column, block: Column,
                               n: Int = 1, minJ: Double = 0.6): DataFrame = {
-    val grams = if (n == 1) array_distinct(split(text, " ")) else shingles(text, n)
-    // intersect 64-bit token hashes, not strings: same set sizes (collision
-    // odds ~1e-10 at corpus scale), far cheaper per-pair comparison; sorted
-    // once per doc for the sorted-merge verify kernel
     val t = df.select(id.as("__id"), block.as("__blk"),
-      array_sort(array_distinct(transform(grams, g => xxhash64(g)))).as("__g"))
+      gramSet(ngrams(text, n)).as("__g"))
     // carry |g| through the explode: the prefix cutoff needs each doc's set
     // size, and size(__g) is free here — a count(*) window over
     // (__blk,__id) downstream would re-derive it with a second full pass
@@ -903,19 +949,19 @@ object Dedup {
             lit(minJ) * greatest(col("a.__sz"), col("b.__sz")) &&
           reachable + eps >=
             lit(minJ / (1.0 + minJ)) * (col("a.__sz") + col("b.__sz")))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b")).distinct()
-    cand
-      .join(t.select(col("__id").as("id_a"), col("__g").as("g_a")), Seq("id_a"))
-      .join(t.select(col("__id").as("id_b"), col("__g").as("g_b")), Seq("id_b"))
+      .select(col("a.__blk").as("__blk"), col("a.__id").as("id_a"),
+        col("b.__id").as("id_b")).distinct()
+    // verify within the candidate's block: an id in several blocks is
+    // one gram set per block, as in the quadratic form
+    jaccardAtLeast(cand
+      .join(t.select(col("__id").as("id_a"), col("__blk"), col("__g").as("g_a")),
+        Seq("id_a", "__blk"))
+      .join(t.select(col("__id").as("id_b"), col("__blk"), col("__g").as("g_b")),
+        Seq("id_b", "__blk"))
       .select(col("id_a"), col("id_b"),
         org.apache.spark.sql.graft.SparseExprs
           .sortedIntersectCountLong(col("g_a"), col("g_b")).as("__i"),
-        (size(col("g_a")) + size(col("g_b"))).cast("long").as("__ab"))
-      .withColumn("__u", col("__ab") - col("__i"))
-      .withColumn("__raw", col("__i").cast("double") / col("__u"))
-      .where(col("__raw") >= minJ)
-      .select(col("id_a"), col("id_b"),
-        Seal.ratio4("__i", "__u").as("jaccard"))
+        (size(col("g_a")) + size(col("g_b"))).cast("long").as("__ab")), minJ)
   }
 
   /** Embedding-cosine near-dup pairs within a blocking key. The threshold is
@@ -929,10 +975,7 @@ object Dedup {
     val t = df
       .select(id.as("__id"), block.as("__blk"), emb.cast("array<double>").as("__e"))
       .select(col("__id"), col("__blk"), col("__e"), Similarity.l2(col("__e")).as("__n"))
-    // same probe-side spread as ngramJaccardPairs: pair generation must not
-    // be serialized by a single input split
-    val parallelism = df.sparkSession.sessionState.conf.numShufflePartitions
-    t.repartition(parallelism, col("__id")).as("a")
+    probeSide(t).as("a")
       .join(t.as("b"), col("a.__blk") === col("b.__blk"))
       .where(col("a.__id") < col("b.__id"))
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
@@ -1516,27 +1559,10 @@ object Dedup {
                         shingleSize: Int = 3, numPerm: Int = 16,
                         bands: Int = 4, maxIter: Int = 20,
                         scope: CkptScope = CkptScope.session): DataFrame = {
-    val oa = oldAssign.select(col("id").cast("long").as("id"),
-      col("split").as("__sp0"), col("comp").cast("long").as("__c0"))
-    val labels0 = oa.where(col("__c0").isNotNull)
-      .select(col("id"), col("__c0").as("comp"))
-    val (_, _, remap) = ccContract(labels0,
-      batchIngestEdges(batch, corpusIndex, text, id,
-        shingleSize, numPerm, bands, scope), maxIter, scope)
-    // batch docs' merged components (batch-bounded; isolated -> own id)
-    val bFull = scope.ckpt(batch.select(id.cast("long").as("id"))
-      .join(broadcast(remap), col("id") === col("__old"), "left")
-      .select(col("id"), coalesce(col("__new"), col("id")).as("__c1")))
-    val touched = bFull.select(col("__c1")).distinct()
-    // old members of TOUCHED components only, with their merged label:
-    // patch key = day-0 component (or own id when isolated), applied as
-    // a broadcast map over one corpus scan
-    val oldTouched = scope.ckpt(oa
-      .join(broadcast(remap),
-        coalesce(col("__c0"), col("id")) === col("__old"), "left")
-      .select(col("id"), col("__sp0"),
-        coalesce(col("__new"), col("__c0"), col("id")).as("__c1"))
-      .join(broadcast(touched), Seq("__c1")))
+    val (_, bFull, oldTouched0) = splitStableMerge(oldAssign,
+      corpusIndex, batch, text, id, shingleSize, numPerm, bands, maxIter,
+      scope)
+    val oldTouched = scope.ckpt(oldTouched0)
     // inheritance + conflict analysis per touched component
     val inh = scope.ckpt(oldTouched.groupBy(col("__c1"))
       .agg(min_by(col("__sp0"), col("id")).as("__isp"),
@@ -1552,7 +1578,7 @@ object Dedup {
     val spine = spark0.range(1)
       .select(explode(array(spineSplits.map(lit): _*)).as("split"))
     spine
-      .join(oa.groupBy(col("__sp0").as("split"))
+      .join(oldAssignFrame(oldAssign).groupBy(col("__sp0").as("split"))
         .agg(count(lit(1)).as("__no")), Seq("split"), "left")
       .join(newSp.groupBy(col("__sp").as("split"))
         .agg(count(lit(1)).as("__nn")), Seq("split"), "left")
@@ -1587,9 +1613,7 @@ object Dedup {
     // old rows: splits NEVER move; comps patch through the broadcast
     // map (untouched isolated docs keep their null comp, the day-0
     // convention)
-    val oa = oldAssign.select(col("id").cast("long").as("id"),
-      col("split").as("__sp0"), col("comp").cast("long").as("__c0"))
-    val oldRows = oa.join(broadcast(remap),
+    val oldRows = oldAssignFrame(oldAssign).join(broadcast(remap),
         coalesce(col("__c0"), col("id")) === col("__old"), "left")
       .select(col("id"), col("__sp0").as("split"),
         coalesce(col("__new"), col("__c0")).as("comp"))
@@ -1619,18 +1643,26 @@ object Dedup {
     (remap.select(col("__old").as("old"), col("__new").as("new")), newRows)
   }
 
-  /** Shared merge + inheritance core of [[splitStableAssign]] /
-    * [[splitStableAssignPatch]]: (label remap, batch assignment rows).
-    * Every frame here is batch-bounded except the two broadcast-joined
-    * scans of `oldAssign` (endpoint subset inside [[ccContract]];
-    * touched-component inheritance). */
-  private def splitStableCore(oldAssign: DataFrame, corpusIndex: DataFrame,
-                              batch: DataFrame, text: Column, id: Column,
-                              splitBy: Column => Column, shingleSize: Int,
-                              numPerm: Int, bands: Int, maxIter: Int,
-                              scope: CkptScope): (DataFrame, DataFrame) = {
-    val oa = oldAssign.select(col("id").cast("long").as("id"),
+  /** `oldAssign` (id, split, comp) as (id, __sp0, __c0), ids and comps
+    * as longs. */
+  private def oldAssignFrame(oldAssign: DataFrame): DataFrame =
+    oldAssign.select(col("id").cast("long").as("id"),
       col("split").as("__sp0"), col("comp").cast("long").as("__c0"))
+
+  /** The batch merge every split-stable operator starts with:
+    * [[ccContract]] over the day-0 labels and [[batchIngestEdges]].
+    * Returns the label remap (__old → __new), the batch docs' merged
+    * components `bFull` (id, __c1; checkpointed, batch-bounded, isolated
+    * docs keep their own id), and — unpinned — the old members of the
+    * TOUCHED components with their merged label (id, __sp0, __c1): the
+    * patch key is the day-0 component (own id when isolated), applied as
+    * a broadcast map over one corpus scan. */
+  private def splitStableMerge(oldAssign: DataFrame, corpusIndex: DataFrame,
+                               batch: DataFrame, text: Column, id: Column,
+                               shingleSize: Int, numPerm: Int, bands: Int,
+                               maxIter: Int, scope: CkptScope)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val oa = oldAssignFrame(oldAssign)
     val labels0 = oa.where(col("__c0").isNotNull)
       .select(col("id"), col("__c0").as("comp"))
     val (_, _, remap) = ccContract(labels0,
@@ -1646,6 +1678,22 @@ object Dedup {
       .select(col("id"), col("__sp0"),
         coalesce(col("__new"), col("__c0"), col("id")).as("__c1"))
       .join(broadcast(touched), Seq("__c1"))
+    (remap, bFull, oldTouched)
+  }
+
+  /** Shared merge + inheritance core of [[splitStableAssign]] /
+    * [[splitStableAssignPatch]]: (label remap, batch assignment rows).
+    * Every frame here is batch-bounded except the two broadcast-joined
+    * scans of `oldAssign` (endpoint subset inside [[ccContract]];
+    * touched-component inheritance). */
+  private def splitStableCore(oldAssign: DataFrame, corpusIndex: DataFrame,
+                              batch: DataFrame, text: Column, id: Column,
+                              splitBy: Column => Column, shingleSize: Int,
+                              numPerm: Int, bands: Int, maxIter: Int,
+                              scope: CkptScope): (DataFrame, DataFrame) = {
+    val (remap, bFull, oldTouched) = splitStableMerge(oldAssign,
+      corpusIndex, batch, text, id, shingleSize, numPerm, bands, maxIter,
+      scope)
     val inh = scope.ckpt(oldTouched.groupBy(col("__c1"))
       .agg(min_by(col("__sp0"), col("id")).as("__isp"))
       ) // batch-bounded (one row per touched component)
@@ -1927,6 +1975,24 @@ object Dedup {
     df.select(cols: _*).localCheckpoint()
   }
 
+  /** Merge each doc's marked `w`-token windows (doc_id, p) into maximal
+    * covered spans (doc_id, grp, s, e) — [s, e) in token positions: a
+    * window opens a new span when it starts past every earlier window's
+    * end. */
+  private def mergeSpans(marked: DataFrame, w: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byDoc = Window.partitionBy("doc_id").orderBy("p")
+    marked
+      .withColumn("pe", col("p") + w)
+      .withColumn("mp", max(col("pe")).over(
+        byDoc.rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("nw",
+        when(col("mp").isNull || col("p") > col("mp"), 1L).otherwise(0L))
+      .withColumn("grp", sum("nw").over(byDoc))
+      .groupBy("doc_id", "grp")
+      .agg(min("p").as("s"), max("pe").as("e"))
+  }
+
   /** Exact substring-level dedup census (the ExactSubstr policy of Lee
     * et al. 2021, "Deduplicating Training Data Makes Language Models
     * Better", at token-window granularity): every `w`-token window that
@@ -1946,23 +2012,13 @@ object Dedup {
     * realistic corpus — the q174 convention). */
   def repeatedSpans(df: DataFrame, text: Column, id: Column,
                     w: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(w >= 2, "window width must be >= 2")
     val base = spanBase(df, text, id, w, withTokens = false)
     val occ = base.select(col("doc_id"), explode(col("ws")).as("u"))
       .select(col("doc_id"), col("u.p").as("p"), col("u.g").as("g"))
     val rep = occ.groupBy("g").agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= 2).select("g")
-    val byDoc = Window.partitionBy("doc_id").orderBy("p")
-    val marked = occ.join(rep, Seq("g"), "left_semi")
-      .withColumn("pe", col("p") + w)
-      .withColumn("mp", max(col("pe")).over(
-        byDoc.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("nw",
-        when(col("mp").isNull || col("p") > col("mp"), 1L).otherwise(0L))
-      .withColumn("grp", sum("nw").over(byDoc))
-    val spans = marked.groupBy("doc_id", "grp")
-      .agg(min("p").as("s"), max("pe").as("e"))
+    val spans = mergeSpans(occ.join(rep, Seq("g"), "left_semi"), w)
     val perDoc = spans.groupBy("doc_id")
       .agg(count(lit(1)).as("n_spans"), sum(col("e") - col("s")).as("rt"))
     base.select("doc_id", "n_toks")
@@ -1999,7 +2055,6 @@ object Dedup {
     * anti join — equi keys only, no range predicates, no broadcast. */
   def scrubRepeatedSpans(df: DataFrame, text: Column, id: Column,
                          w: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(w >= 2, "window width must be >= 2")
     val base = spanBase(df, text, id, w, withTokens = true)
     val occ = base.select(col("doc_id"), explode(col("ws")).as("u"))
@@ -2011,16 +2066,7 @@ object Dedup {
     val marked = occ.join(rep, Seq("g"))
       .where(struct(col("doc_id"), col("p")) =!= col("__first"))
       .select("doc_id", "p")
-    val byDoc = Window.partitionBy("doc_id").orderBy("p")
-    val spans = marked
-      .withColumn("pe", col("p") + w)
-      .withColumn("mp", max(col("pe")).over(
-        byDoc.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("nw",
-        when(col("mp").isNull || col("p") > col("mp"), 1L).otherwise(0L))
-      .withColumn("grp", sum("nw").over(byDoc))
-      .groupBy("doc_id", "grp")
-      .agg(min("p").as("s"), max("pe").as("e"))
+    val spans = mergeSpans(marked, w)
     val removedPos = spans.select(col("doc_id"),
       explode(sequence(col("s"), col("e") - 1)).as("i"))
     val tokPos = base.select(col("doc_id"), posexplode(col("tk")))
@@ -2052,14 +2098,10 @@ object Dedup {
     * from an explicit spine so "no pairs in this band" is a 0-row, not
     * an absent one; capture is NULL only for empty bins.
     *
-    * Scale: ONE tokenize pass — the MinHash signature (native
-    * single-pass expression) and the sorted distinct unigram-hash set
-    * come out of the same checkpointed corpus scan, so neither the
-    * truth side nor any plan's candidate join re-tokenizes. Each plan's
-    * candidate join is the banding join (candidates ∝ near-dups, never
-    * all-pairs). The TRUTH side is the quadratic within-block join —
-    * per-pair intersections run the allocation-free sorted-merge kernel
-    * ([[org.apache.spark.sql.graft.SortedIntersectCountLong]]), and at
+    * Scale: ONE tokenize pass ([[lshTokens]]) feeds the truth side and
+    * every plan's candidate join. Each plan's candidate join is the
+    * banding join (candidates ∝ near-dups, never all-pairs). The TRUTH
+    * side is the quadratic within-block join ([[blockPairs]]), and at
     * 100 TB the device runs on a block-bounded sample: `truthSample`
     * < 1 keeps a deterministic [[Sampling.hashSample]] doc band, so
     * pair volume falls by truthSample² while every per-bin capture
@@ -2075,17 +2117,9 @@ object Dedup {
     require(plans.nonEmpty && plans.forall(b => b >= 1 && numPerm % b == 0),
       "each plan's band count must divide numPerm")
     val spark = df.sparkSession
-    val para = spark.sessionState.conf.numShufflePartitions
-    val tok = lshTok(df, text, id, block, shingleSize, numPerm,
-      truthSample, para)
+    val tok = lshTok(df, text, id, block, shingleSize, numPerm, truthSample)
     val t = tok.select("__id", "__blk", "__g")
-    val exact = t.as("a")
-      .join(t.as("b"), col("a.__blk") === col("b.__blk"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
-        org.apache.spark.sql.graft.SparseExprs
-          .sortedIntersectCountLong(col("a.__g"), col("b.__g")).as("__i"),
-        (size(col("a.__g")) + size(col("b.__g"))).cast("long").as("__ab"))
+    val exact = blockPairs(t, t)
       .withColumn("__u", col("__ab") - col("__i"))
       .withColumn("bin10", expr("(__i * 10) div __u"))
       .where(col("bin10") >= minBin10)
@@ -2147,31 +2181,20 @@ object Dedup {
         when(col("n_pairs") > 0, Seal.ratio4("n_caught", "n_pairs")))
   }
 
-  /** Shared single-tokenize pass for the LSH calibration devices
-    * ([[bandPlanCapture]] / [[lshPlanEval]]): per doc, the blocking
-    * key, the numPerm-long MinHash signature (native single-pass
-    * expression — null for unshingleable docs, exactly
-    * [[minhashSignatures]]' filter), and the SORTED distinct
-    * unigram-hash set the truth side's merge kernel needs. Checkpointed
-    * because every downstream consumer — both sides of the truth
-    * self-join AND both sides of each plan's band join — re-reads it;
-    * without the pin each branch re-runs the full tokenize+hash scan.
-    * `truthSample` < 1 first narrows the corpus to a deterministic
+  /** The [[lshTokens]] frame of the LSH calibration devices
+    * ([[bandPlanCapture]] / [[lshPlanEval]]), with the blocking key as
+    * `__blk`. `truthSample` < 1 first narrows the corpus to a deterministic
     * [[Sampling.hashSample]] doc band (the q111 device) — the
     * block-bounded-sample mode these calibrators run in at 100 TB. */
   private def lshTok(df: DataFrame, text: Column, id: Column,
                      block: Column, shingleSize: Int, numPerm: Int,
-                     truthSample: Double, para: Int): DataFrame = {
+                     truthSample: Double): DataFrame = {
     require(truthSample > 0 && truthSample <= 1,
       s"truthSample must be in (0, 1], got $truthSample")
     val src = if (truthSample >= 1.0) df
       else Sampling.hashSample(df, id, truthSample, "lshtruth")
-    src.select(id.as("__id"), block.as("__blk"),
-        org.apache.spark.sql.graft.MinhashExprs
-          .signature(text, shingleSize, numPerm).as("__sig"),
-        array_sort(array_distinct(transform(
-          array_distinct(split(text, " ")), g => xxhash64(g)))).as("__g"))
-      .repartition(para, col("__id")).localCheckpoint()
+    lshTokens(src, text, id, Seq(block.as("__blk")), None, shingleSize,
+      numPerm)
   }
 
   /** Recall / precision / F1 of the SHIPPED MinHash-LSH plan against
@@ -2184,41 +2207,21 @@ object Dedup {
     * F1 = 2·hits / (n_true + n_cand). All counts are exact longs; the
     * three ratios seal via the ratio4 device, NULL on empty
     * denominators. Same scale story as [[bandPlanCapture]], including
-    * the one-tokenize checkpoint, the sorted-merge intersection kernel,
-    * and the `truthSample` hash-band sampled mode for 100 TB (counts
+    * the `truthSample` hash-band sampled mode for 100 TB (counts
     * then describe the sampled sub-corpus; recall/precision stay
     * unbiased ratios among its pairs). */
   def lshPlanEval(df: DataFrame, text: Column, id: Column, block: Column,
                   shingleSize: Int = 3, numPerm: Int = 16, bands: Int = 4,
                   minBin10: Int = 6, truthSample: Double = 1.0): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
-    val para = df.sparkSession.sessionState.conf.numShufflePartitions
-    val tok = lshTok(df, text, id, block, shingleSize, numPerm,
-      truthSample, para)
+    val tok = lshTok(df, text, id, block, shingleSize, numPerm, truthSample)
     val t = tok.select("__id", "__blk", "__g")
-    val truth = t.as("a")
-      .join(t.as("b"), col("a.__blk") === col("b.__blk"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"),
-        org.apache.spark.sql.graft.SparseExprs
-          .sortedIntersectCountLong(col("a.__g"), col("b.__g")).as("__i"),
-        (size(col("a.__g")) + size(col("b.__g"))).cast("long").as("__ab"))
+    val truth = blockPairs(t, t)
       .where(col("__i") * 10 >= (col("__ab") - col("__i")) * minBin10)
       .select(col("id_a"), col("id_b"), lit(1L).as("__true"))
-    val rowsPerBand = numPerm / bands
-    val banded = tok.where(col("__sig").isNotNull)
-      .select(col("__id"), col("__blk"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))))
-      .select(col("__id"), col("__blk"), col("pos").as("__band"),
-        col("col").cast("string").as("__bucket"))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__band") === col("b.__band") &&
-          col("a.__bucket") === col("b.__bucket") &&
-          col("a.__blk") === col("b.__blk"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
+    val banded = bandExplode(tok.where(col("__sig").isNotNull)
+      .select(col("__id"), col("__blk"), col("__sig")), numPerm, bands)
+    val cand = bandPairs(banded, col("a.__blk") === col("b.__blk"))
       .select(col("id_a"), col("id_b"), lit(1L).as("__cand"))
     truth.join(cand, Seq("id_a", "id_b"), "full")
       .agg(sum(coalesce(col("__true"), lit(0L))).as("n_true"),
@@ -2246,37 +2249,19 @@ object Dedup {
     * candidate/leaked pair counts and distinct leaked docs per side.
     * Absent split pairs surface as explicit zero rows.
     *
-    * Scale shape: one tokenize pass (signature + sorted token-hash set,
-    * checkpointed — the q334 lshTok convention), the banding self-join
-    * with the cross-split predicate INSIDE the join (same-split
-    * collisions — the vast majority in a dup-rich corpus — never
-    * materialize), verification over the candidate-reduced token-array
-    * join using the allocation-free sorted-merge kernel, and a
-    * split-pair-keyed rollup over a bounded spine. Candidates ∝ true
-    * cross-split near-dups, never all-pairs. */
+    * Scale shape: [[crossSplitCandidates]] (one tokenize pass, band
+    * pairs with the split predicate inside the join), verification over
+    * the candidate-reduced token-array join, and a split-pair-keyed
+    * rollup over a bounded spine. Candidates ∝ true cross-split
+    * near-dups, never all-pairs. */
   def crossSplitNearDupLeak(df: DataFrame, text: Column, id: Column,
                             splitCol: Column, shingleSize: Int = 1,
                             numPerm: Int = 16, bands: Int = 4,
                             minBin10: Int = 7): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     require(minBin10 >= 1 && minBin10 <= 10, "minBin10 in [1, 10]")
-    val para = df.sparkSession.sessionState.conf.numShufflePartitions
-    val tok = df.select(id.as("__id"), splitCol.cast("string").as("__sp"),
-        org.apache.spark.sql.graft.MinhashExprs
-          .signature(text, shingleSize, numPerm).as("__sig"),
-        array_sort(array_distinct(transform(
-          array_distinct(split(text, " ")), g => xxhash64(g)))).as("__g"))
-      .where(col("__sp").isNotNull && col("__id").isNotNull)
-      .repartition(para, col("__id")).localCheckpoint()
-    val banded = bandExplode(tok.where(col("__sig").isNotNull)
-      .select(col("__id"), col("__sp"), col("__sig")), numPerm, bands)
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__band") === col("b.__band") &&
-          col("a.__bucket") === col("b.__bucket") &&
-          col("a.__sp") =!= col("b.__sp"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
+    val (tok, cand) = crossSplitCandidates(df, text, id, splitCol,
+      shingleSize, numPerm, bands)
     leakCensusTail(cand, tok, minBin10, splitSizes = false)
   }
 
@@ -2306,16 +2291,8 @@ object Dedup {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     require(minBin10 >= 1 && minBin10 <= 10, "minBin10 in [1, 10]")
     require(frac > 0 && frac <= 1, s"frac must be in (0, 1], got $frac")
-    val para = df.sparkSession.sessionState.conf.numShufflePartitions
-    val tok = df.select(id.as("__id"), splitCol.cast("string").as("__sp"),
-        org.apache.spark.sql.graft.MinhashExprs
-          .signature(text, shingleSize, numPerm).as("__sig"),
-        array_sort(array_distinct(transform(
-          array_distinct(split(text, " ")), g => xxhash64(g)))).as("__g"))
-      .where(col("__sp").isNotNull && col("__id").isNotNull)
-      .repartition(para, col("__id")).localCheckpoint()
-    val banded = bandExplode(tok.where(col("__sig").isNotNull)
-      .select(col("__id"), col("__sp"), col("__sig")), numPerm, bands)
+    val (tok, cand) = crossSplitCandidates(df, text, id, splitCol,
+      shingleSize, numPerm, bands)
     // ONE streaming pass, nothing pair-sized ever materializes (the
     // q350 sf1 lesson: checkpointing the quadratic candidate frame
     // fills the disk exactly when the census matters), and the pipe is
@@ -2329,18 +2306,11 @@ object Dedup {
     // (1 − frac) array bytes never cross the wire, which is the entire
     // intended saving; the pair stream itself (ids + labels) flows in
     // full because the candidate counts are exact by contract.
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.__band") === col("b.__band") &&
-          col("a.__bucket") === col("b.__bucket") &&
-          col("a.__sp") =!= col("b.__sp"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
+    val verified = cand
       .withColumn("__smp",
         pmod(hash60(concat(col("id_a").cast("string"), lit(":"),
           col("id_b").cast("string"), lit(":"), lit(salt))), lit(1000000L))
           < lit((frac * 1000000L).toLong))
-    val verified = cand
       .join(tok.select(col("__id").as("id_a"), col("__sp").as("sp_a"),
         col("__g").as("ga0")), "id_a")
       .select(col("id_a"), col("id_b"), col("__smp"), col("sp_a"),
@@ -2395,17 +2365,21 @@ object Dedup {
       .orderBy("split_a", "split_b")
   }
 
-  /** Band-explode a signature frame: every non-`__sig` column rides
-    * along; output gains (__band, __bucket) — one row per (doc, band).
-    * The slice-of-signature bucket string is the LSH join key. */
-  private def bandExplode(sig: DataFrame, numPerm: Int,
-                          bands: Int): DataFrame = {
-    val rowsPerBand = numPerm / bands
-    val rest = sig.columns.filter(_ != "__sig").map(col).toSeq
-    sig.select(rest :+ posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => slice(col("__sig"), b * rowsPerBand + 1, lit(rowsPerBand)))): _*)
-      .select(rest :+ col("pos").as("__band") :+
-        col("col").cast("string").as("__bucket"): _*)
+  /** The candidate side of [[crossSplitNearDupLeak]] and its sampled
+    * twin: the LSH token frame with split label `__sp` (docs with a null
+    * id or split dropped), and its band-collision pairs (id_a, id_b)
+    * that cross splits — the split predicate sits inside the band join,
+    * so same-split collisions never materialize. */
+  private def crossSplitCandidates(df: DataFrame, text: Column, id: Column,
+                                   splitCol: Column, shingleSize: Int,
+                                   numPerm: Int, bands: Int)
+      : (DataFrame, DataFrame) = {
+    val tok = lshTokens(df, text, id, Seq(splitCol.cast("string").as("__sp")),
+      Some(col("__sp").isNotNull && col("__id").isNotNull), shingleSize,
+      numPerm)
+    val banded = bandExplode(tok.where(col("__sig").isNotNull)
+      .select(col("__id"), col("__sp"), col("__sig")), numPerm, bands)
+    (tok, bandPairs(banded, col("a.__sp") =!= col("b.__sp")))
   }
 
   /** Shared verify+rollup tail of the cross-split leak census
@@ -2540,15 +2514,9 @@ object Dedup {
                              spineSplits: Seq[String] = Nil): DataFrame = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     require(minBin10 >= 1 && minBin10 <= 10, "minBin10 in [1, 10]")
-    val para = df.sparkSession.sessionState.conf.numShufflePartitions
     // THE one corpus scan: signature + verify arrays, checkpointed
-    val base = df.select(id.as("__id"),
-        org.apache.spark.sql.graft.MinhashExprs
-          .signature(text, shingleSize, numPerm).as("__sig"),
-        array_sort(array_distinct(transform(
-          array_distinct(split(text, " ")), g => xxhash64(g)))).as("__g"))
-      .where(col("__id").isNotNull)
-      .repartition(para, col("__id")).localCheckpoint()
+    val base = lshTokens(df, text, id, Nil, Some(col("__id").isNotNull),
+      shingleSize, numPerm)
     // checkpointed: four downstream passes (star roots + join-back,
     // census bucket-split agg + semi-join) read the banded frame; each
     // would otherwise re-run the explode over the base checkpoint
@@ -2579,13 +2547,7 @@ object Dedup {
       .where(col("__lo") =!= col("__hi"))
       .select(col("__band"), col("__bucket"))
     val mixed = sb.join(mixedKeys, Seq("__band", "__bucket"), "left_semi")
-    val cand = mixed.as("a").join(mixed.as("b"),
-        col("a.__band") === col("b.__band") &&
-          col("a.__bucket") === col("b.__bucket") &&
-          col("a.__sp") =!= col("b.__sp"))
-      .where(col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .distinct()
+    val cand = bandPairs(mixed, col("a.__sp") =!= col("b.__sp"))
     leakCensusTail(cand, base.join(spl, Seq("__id"))
       .select(col("__id"), col("__sp"), col("__g")), minBin10, splitSizes,
       spineSplits)

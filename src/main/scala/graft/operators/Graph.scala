@@ -145,6 +145,53 @@ object Graph {
       .orderBy(desc("pr_score"), col("vertex"))
   }
 
+  /** The undirected simple graph under an edge list: (u, v) with
+    * u < v, distinct, null endpoints and self-loops dropped. */
+  private def simpleEdges(edges: DataFrame, u: Column, v: Column): DataFrame =
+    edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
+      .where(col("u").isNotNull && col("v").isNotNull &&
+        col("u") =!= col("v"))
+      .distinct()
+
+  /** (vert, d): the degree of every vertex of [[simpleEdges]]' `e`. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("u").as("vert")).union(e.select(col("v")))
+      .groupBy("vert").agg(count(lit(1)).as("d"))
+
+  /** `e` with each endpoint's degree (du, dv) joined on. */
+  private def withDegrees(e: DataFrame, deg: DataFrame,
+                          bv: DataFrame => DataFrame): DataFrame =
+    e.join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
+      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
+
+  /** The degree-ordered orientation over [[withDegrees]]: u comes first
+    * when (du, u) < (dv, v). */
+  private val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
+
+  /** The oriented wedges of [[triangleCount]] and
+    * [[clusteringCoefficient]], every frame checkpointed: `e` and `deg`
+    * as above; `o` = each edge oriented s → t with t's degree `dt`;
+    * `w` = every pair of out-edges of one source, ordered by (dt, t), as
+    * wedge ends (y, z), led by the source `s` when `withApex`. */
+  private def orientedWedges(edges: DataFrame, u: Column, v: Column,
+                             bv: DataFrame => DataFrame, withApex: Boolean)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val e = simpleEdges(edges, u, v).localCheckpoint()
+    val deg = degrees(e).localCheckpoint()
+    val o = withDegrees(e, deg, bv).select(
+        when(uFirst, col("u")).otherwise(col("v")).as("s"),
+        when(uFirst, col("v")).otherwise(col("u")).as("t"),
+        when(uFirst, col("dv")).otherwise(col("du")).as("dt"))
+      .localCheckpoint()
+    val ends = Seq(col("o1.t").as("y"), col("o2.t").as("z"))
+    val w = o.as("o1").join(o.as("o2"), col("o1.s") === col("o2.s"))
+      .where(struct(col("o1.dt"), col("o1.t")) <
+        struct(col("o2.dt"), col("o2.t")))
+      .select((if (withApex) col("o1.s").as("s") +: ends else ends): _*)
+      .localCheckpoint()
+    (e, deg, o, w)
+  }
+
   /** Exact triangle count over an undirected edge list, via degree-ordered
     * orientation (Suri & Vassilvitskii 2011 / Schank-Wagner): orient every
     * edge from its (degree, key)-smaller endpoint to the larger, build
@@ -160,29 +207,10 @@ object Graph {
     * dedup and the two equi-joins. */
   def triangleCount(edges: DataFrame, u: Column, v: Column,
                     broadcastVertices: Boolean = true): DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .distinct().localCheckpoint()
-    val deg = e.select(col("u").as("vert")).union(e.select(col("v")))
-      .groupBy("vert").agg(count(lit(1)).as("d")).localCheckpoint()
-    val ed = e
-      .join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
-      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val o = ed.select(
-        when(uFirst, col("u")).otherwise(col("v")).as("s"),
-        when(uFirst, col("v")).otherwise(col("u")).as("t"),
-        when(uFirst, col("dv")).otherwise(col("du")).as("dt"))
-      .localCheckpoint()
-    val w = o.as("o1").join(o.as("o2"), col("o1.s") === col("o2.s"))
-      .where(struct(col("o1.dt"), col("o1.t")) <
-        struct(col("o2.dt"), col("o2.t")))
-      .select(col("o1.t").as("y"), col("o2.t").as("z"))
-      .localCheckpoint()
+    val (e, deg, o, w) = orientedWedges(edges, u, v,
+      bcastIf(broadcastVertices), withApex = false)
     val tri = w.join(o.select(col("s").as("y"), col("t").as("z")), Seq("y", "z"))
     Seq((deg.count(), e.count(), w.count(), tri.count()))
       .toDF("n_vertices", "n_edges", "n_wedges", "n_triangles")
@@ -241,27 +269,8 @@ object Graph {
   def clusteringCoefficient(edges: DataFrame, u: Column, v: Column,
                             broadcastVertices: Boolean = true)
       : DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
-    val e = edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .distinct().localCheckpoint()
-    val deg = e.select(col("u").as("vert")).union(e.select(col("v")))
-      .groupBy("vert").agg(count(lit(1)).as("d")).localCheckpoint()
-    val ed = e
-      .join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
-      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val o = ed.select(
-        when(uFirst, col("u")).otherwise(col("v")).as("s"),
-        when(uFirst, col("v")).otherwise(col("u")).as("t"),
-        when(uFirst, col("dv")).otherwise(col("du")).as("dt"))
-      .localCheckpoint()
-    val w = o.as("o1").join(o.as("o2"), col("o1.s") === col("o2.s"))
-      .where(struct(col("o1.dt"), col("o1.t")) <
-        struct(col("o2.dt"), col("o2.t")))
-      .select(col("o1.s").as("s"), col("o1.t").as("y"), col("o2.t").as("z"))
-      .localCheckpoint()
+    val (_, deg, o, w) = orientedWedges(edges, u, v,
+      bcastIf(broadcastVertices), withApex = true)
     val tr = w
       .join(o.select(col("s").as("y"), col("t").as("z")), Seq("y", "z"))
       .select(col("s"), col("y"), col("z")).localCheckpoint()
@@ -302,19 +311,11 @@ object Graph {
   def dagLayers(edges: DataFrame, u: Column, v: Column,
                 rounds: Int = 4,
                 broadcastVertices: Boolean = true): DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .distinct()
-    val deg = e.select(col("u").as("vert")).union(e.select(col("v")))
-      .groupBy("vert").agg(count(lit(1)).as("d"))
-    val ed = e
-      .join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
-      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
-    val uFirst = struct(col("du"), col("u")) < struct(col("dv"), col("v"))
-    val o = ed.select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
+    val e = simpleEdges(edges, u, v)
+    val deg = degrees(e)
+    val o = withDegrees(e, deg, bcastIf(broadcastVertices))
+      .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
         when(uFirst, col("v")).otherwise(col("u")).as("t"))
       .localCheckpoint()
     var lvl = deg.select(col("vert"), lit(0L).as("lv"))
@@ -345,16 +346,8 @@ object Graph {
   def degreeAssortativity(edges: DataFrame, u: Column, v: Column,
                           broadcastVertices: Boolean = true)
       : DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
-    val e = edges.select(least(u, v).as("u"), greatest(u, v).as("v"))
-      .where(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
-      .distinct()
-    val deg = e.select(col("u").as("vert")).union(e.select(col("v")))
-      .groupBy("vert").agg(count(lit(1)).as("d"))
-    val ed = e
-      .join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
-      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
+    val e = simpleEdges(edges, u, v)
+    val ed = withDegrees(e, degrees(e), bcastIf(broadcastVertices))
     val pairs = ed.select(col("du").as("x"), col("dv").as("y"))
       .union(ed.select(col("dv"), col("du")))
     Trend.pearson(pairs.withColumn("g", lit("all")), col("g"),

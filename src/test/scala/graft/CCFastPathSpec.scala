@@ -1,13 +1,16 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
 /** Equality pin for [[Dedup.connectedComponents]]' r13 small-graph
   * fast path: the driver union-find must produce exactly the iterative
   * min-label loop's fixpoint — same endpoint set, same comp = min
   * reachable id — on star, chain, cycle, and fixture-derived graphs.
   * The threshold conf (spark.graft.cc.localEdgeLimit) switches paths,
-  * so the pin drives BOTH implementations explicitly. */
+  * so the pin drives BOTH implementations explicitly. A random-graph
+  * property checks both paths of connectedComponents, ccIncremental and
+  * ccIncrementalPatch against a plain-Scala union-find. */
 class CCFastPathSpec extends SparkSpec {
   import spark.implicits._
 
@@ -101,5 +104,95 @@ class CCFastPathSpec extends SparkSpec {
     }
     assert(pLocal === pDist)
     assert(pLocal === (Seq((3L, 1L), (7L, 6L)), Seq((6L, 6L), (7L, 6L))))
+  }
+
+  type Edge = (Option[Long], Option[Long])
+
+  // ids 1..12 so edges collide, duplicate and reverse; null endpoints,
+  // self-loops, and an isolated pair far from the rest
+  private val edgeGen: Gen[Edge] = {
+    val end = Gen.frequency(10 -> Gen.choose(1L, 12L).map(Option(_)),
+      1 -> Gen.const(None))
+    Gen.frequency(
+      12 -> Gen.zip(end, end),
+      2 -> Gen.choose(1L, 12L).map(v => (Some(v), Some(v))),
+      1 -> Gen.choose(0L, 9L).map(k => (Some(100L + 2 * k), Some(101L + 2 * k))))
+  }
+
+  private def gen[T](g: Gen[T], seed: Long): T =
+    g.apply(Gen.Parameters.default, org.scalacheck.rng.Seed(seed)).get
+
+  /** id → min id of its component, over `nodes` linked by `links`. */
+  private def unionFind(nodes: Iterable[Long], links: Iterable[(Long, Long)])
+      : Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    nodes.foreach(find)
+    links.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def live(edges: Seq[Edge]): Seq[(Long, Long)] =
+    edges.collect { case (Some(a), Some(b)) => (a, b) }
+
+  private def edgeFrame(edges: Seq[Edge]) =
+    edges.map { case (a, b) => (a.map(Long.box).orNull, b.map(Long.box).orNull) }
+      .toDF("id_a", "id_b")
+
+  /** `run` at the default localEdgeLimit, then forced distributed (0). */
+  private def atDefaultAndZero[T](run: => T): (T, T) = {
+    val key = "spark.graft.cc.localEdgeLimit"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val dflt = run
+      spark.conf.set(key, "0")
+      (dflt, run)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("random graphs: connectedComponents / ccIncremental / ccIncrementalPatch == union-find on both paths") {
+    for (round <- 0 until 3) {
+      val old = live(gen(Gen.listOfN(10, edgeGen), 3100L + round))
+      val batch = gen(Gen.listOfN(10, edgeGen), 3200L + round)
+      val oldEnds = old.flatMap { case (a, b) => Seq(a, b) }
+      // day-0 labels: the old graph's components plus two isolated docs
+      val labels = unionFind(oldEnds ++ Seq(50L, 51L), old)
+      val ends = live(batch).flatMap { case (a, b) => Seq(a, b) }.distinct
+      val merged = unionFind(labels.keys ++ ends, labels.toSeq ++ live(batch))
+      // CC over the batch alone
+      val ccWant = unionFind(ends, live(batch)).toSeq.sorted
+      // full relabel over labels ∪ batch endpoints
+      val incWant = merged.toSeq.sorted
+      // patch: touched contracted nodes (an endpoint's old label, or
+      // itself when unlabeled) whose minimum moved; fresh: unlabeled ends
+      val patchWant = ends.map(x => labels.getOrElse(x, x)).distinct
+        .collect { case n if merged(n) != n => (n, merged(n)) }.sorted
+      val freshWant = ends.filterNot(labels.contains)
+        .map(x => (x, merged(x))).sorted
+      val labelDf = labels.toSeq.toDF("id", "comp")
+      val edgeDf = edgeFrame(batch)
+      val (cc0, cc1) = atDefaultAndZero(pairs(Dedup.connectedComponents(edgeDf)))
+      assert(cc0 === ccWant, s"round $round: connectedComponents, default limit")
+      assert(cc1 === ccWant, s"round $round: connectedComponents, limit 0")
+      val (inc0, inc1) = atDefaultAndZero(pairs(Dedup.ccIncremental(labelDf, edgeDf)))
+      assert(inc0 === incWant, s"round $round: ccIncremental, default limit")
+      assert(inc1 === incWant, s"round $round: ccIncremental, limit 0")
+      val (p0, p1) = atDefaultAndZero {
+        val (patch, fresh) = Dedup.ccIncrementalPatch(labelDf, edgeDf)
+        (pairs(patch), pairs(fresh))
+      }
+      assert(p0 === (patchWant, freshWant), s"round $round: ccIncrementalPatch, default limit")
+      assert(p1 === (patchWant, freshWant), s"round $round: ccIncrementalPatch, limit 0")
+    }
   }
 }

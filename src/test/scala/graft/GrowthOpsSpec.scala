@@ -301,6 +301,66 @@ class GrowthOpsSpec extends SparkSpec {
     assert(n.isNullAt(0))
   }
 
+  test("sorted-merge kernels == plain Scala on random sparse vectors, codegen on and off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.graft.SparseExprs
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    // distinct sorted keys (negatives and the long extremes included),
+    // one weight per key; empty and null arrays too
+    val vecGen: Gen[Option[(Seq[Long], Seq[Long])]] = Gen.frequency(
+      1 -> Gen.const(None),
+      1 -> Gen.const(Some((Nil, Nil))),
+      8 -> (for {
+        keys <- Gen.containerOf[Set, Long](Gen.frequency(
+          12 -> Gen.choose(-8L, 8L), 1 -> Gen.oneOf(Long.MinValue, Long.MaxValue)))
+        ws <- Gen.listOfN(keys.size, Gen.choose(-20L, 20L))
+      } yield Some((keys.toSeq.sorted, ws))))
+    val pairs = Gen.listOfN(60, Gen.zip(vecGen, vecGen))
+      .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L)).get
+    def nullable(v: Option[(Seq[Long], Seq[Long])], part: ((Seq[Long], Seq[Long])) => Seq[Long]) =
+      v.map(part).orNull
+    val arr = ArrayType(LongType, containsNull = false)
+    val schema = StructType(Seq("ka", "wa", "kb", "wb").map(StructField(_, arr)))
+    val input = spark.createDataFrame(spark.sparkContext.parallelize(
+      pairs.map { case (a, b) => Row(nullable(a, _._1), nullable(a, _._2),
+        nullable(b, _._1), nullable(b, _._2)) }, 2), schema)
+    // per key: (weight a, weight b) of every key in both vectors
+    def matched(a: (Seq[Long], Seq[Long]), b: (Seq[Long], Seq[Long])) = {
+      val wb = b._1.zip(b._2).toMap
+      a._1.zip(a._2).collect { case (k, w) if wb.contains(k) => (w, wb(k)) }
+    }
+    val want = pairs.map {
+      case (Some(a), Some(b)) =>
+        val m = matched(a, b)
+        Seq[Any](m.map { case (x, y) => math.min(x, y) }.sum,
+          m.map { case (x, y) => x * y }.sum, m.size.toLong)
+      case _ => Seq[Any](null, null, null)
+    }
+    def run(codegen: Boolean): Seq[Seq[Any]] = {
+      val out = input.select(
+        SparseExprs.sparseMinSumLong(col("ka"), col("wa"), col("kb"), col("wb")),
+        SparseExprs.sparseDotLong(col("ka"), col("wa"), col("kb"), col("wb")),
+        SparseExprs.sortedIntersectCountLong(col("ka"), col("kb")))
+      val stages = out.queryExecution.executedPlan.collect {
+        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w }
+      assert(stages.nonEmpty == codegen, out.queryExecution.executedPlan)
+      out.collect().toSeq.map(_.toSeq)
+    }
+    val wholeStage = "spark.sql.codegen.wholeStage"
+    val factory = "spark.sql.codegen.factoryMode"
+    val prev = Seq(wholeStage, factory).map(k => k -> spark.conf.getOption(k))
+    try {
+      assert(run(codegen = true) === want, "whole-stage codegen")
+      spark.conf.set(wholeStage, "false")
+      spark.conf.set(factory, "NO_CODEGEN")
+      assert(run(codegen = false) === want, "interpreted")
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("bandPlanCapture: sampled truth == exact truth on the hash band") {
     // truthSample = r must equal exact mode run over the same
     // deterministic hashSample(id, r, "lshtruth") sub-corpus: the
