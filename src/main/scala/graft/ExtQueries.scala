@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Queries.QDef
@@ -908,8 +909,7 @@ object ExtQueries {
         idx, "cell", 8)
       Staging.appendBucketed(
         Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
-          col("embedding"), col("vec_id"), cents),
-        idx, "cell", 8)
+          col("embedding"), col("vec_id"), cents), idx)
       Similarity.ivfKnnJoinIndex(Staging.load(s, idx),
         e.filter(col("label") === 1), col("embedding"), col("vec_id"),
         k = 3, centroids = cents, nProbe = 4)
@@ -3378,6 +3378,29 @@ object ExtQueries {
     Some(s"""WITH RECURSIVE $prepKeptBestCtes,
       |$clusterSafeCensusTailSql""".stripMargin))
 
+  /** q367/q373's drifted IVF index `idx` (the other half appended under
+    * the corpus half's codebook): the embeddings and that codebook. */
+  private def driftedIvf(s: SparkSession, dir: String, idx: String)
+      : (DataFrame, Seq[(Long, Array[Double])]) = {
+    val e = T(s, dir, "embeddings")
+    val stale = Similarity.kmeansCentroids(e.where(col("vec_id") < 500),
+      col("embedding"), col("vec_id"), c = 16, iters = 2)
+    VStage.init(Similarity.ivfIndexFrame(e.where(col("vec_id") < 500),
+      col("embedding"), col("vec_id"), stale), idx, "cell")
+    VStage.append(Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
+      col("embedding"), col("vec_id"), stale), idx)
+    (e, stale)
+  }
+
+  /** The label-1 panel's top 3 from IVF index `idx` under `cents`. */
+  private def serveIvf(s: SparkSession, idx: String, e: DataFrame,
+                       cents: Seq[(Long, Array[Double])]): DataFrame =
+    Similarity.ivfKnnJoinIndex(VStage.load(s, idx),
+      e.filter(col("label") === 1), col("embedding"), col("vec_id"),
+      k = 3, centroids = cents, nProbe = 4)
+      .select(col("qid"), col("rank"), col("id"),
+        round(col("cos_sim"), 4).as("cos_sim"))
+
   /** [[Similarity.ivfRecluster]]: q361's ingest loop CLOSED WITH ITS
     * COMPACTION LEG (r11 directive 4). Drift setup: the codebook trains
     * on the corpus HALF only, and the other half appends under that
@@ -3392,28 +3415,10 @@ object ExtQueries {
     * in PLANS.md §r12 IVF codebook drift. */
   private val q367 = QDef("q367_ann_index_recluster",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val e = T(s, dir, "embeddings")
-      val idx = s"graft_ivf_rc_$tag"
-      val stale = Similarity.kmeansCentroids(e.where(col("vec_id") < 500),
-        col("embedding"), col("vec_id"), c = 16, iters = 2)
-      // VStage logical table (r13): the compaction below swaps a new
-      // generation in atomically — a crash mid-recluster can no longer
-      // destroy the serving index (the r12 weak; drills in ScaleSpec)
-      VStage.init(
-        Similarity.ivfIndexFrame(e.where(col("vec_id") < 500),
-          col("embedding"), col("vec_id"), stale), idx, "cell", 8)
-      VStage.append(
-        Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
-          col("embedding"), col("vec_id"), stale), idx, "cell", 8)
-      val cents = Similarity.ivfRecluster(s, idx, c = 16, iters = 2,
-        buckets = 8)
-      Similarity.ivfKnnJoinIndex(VStage.load(s, idx),
-        e.filter(col("label") === 1), col("embedding"), col("vec_id"),
-        k = 3, centroids = cents, nProbe = 4)
-        .select(col("qid"), col("rank"), col("id"),
-          round(col("cos_sim"), 4).as("cos_sim"))
-        .orderBy("qid", "rank")
+      val idx = s"graft_ivf_rc_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val (e, _) = driftedIvf(s, dir, idx)
+      val cents = Similarity.ivfRecluster(s, idx, c = 16, iters = 2)
+      serveIvf(s, idx, e, cents).orderBy("qid", "rank")
     },
     Some(s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
       |${kmeansCtes(16, 64, 2)},
@@ -3528,21 +3533,12 @@ object ExtQueries {
     * changes the post-compaction answer. */
   private val q373 = QDef("q373_recluster_crash_recovery",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val e = T(s, dir, "embeddings")
-      val idx = s"graft_ivf_cr_$tag"
-      val stale = Similarity.kmeansCentroids(e.where(col("vec_id") < 500),
-        col("embedding"), col("vec_id"), c = 16, iters = 2)
-      VStage.init(
-        Similarity.ivfIndexFrame(e.where(col("vec_id") < 500),
-          col("embedding"), col("vec_id"), stale), idx, "cell", 8)
-      VStage.append(
-        Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
-          col("embedding"), col("vec_id"), stale), idx, "cell", 8)
+      val idx = s"graft_ivf_cr_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val (e, stale) = driftedIvf(s, dir, idx)
       // the injected crash: new generation fully staged, pointer not
       // yet moved — the exact window the r12 device could not survive
       val crashed = try {
-        Similarity.ivfRecluster(s, idx, c = 16, iters = 2, buckets = 8,
+        Similarity.ivfRecluster(s, idx, c = 16, iters = 2,
           onStep = step =>
             if (step == "staged") throw new RuntimeException("injected"))
         false
@@ -3551,19 +3547,11 @@ object ExtQueries {
       require(crashed, "the drill must actually crash mid-compaction")
       VStage.recover(s, idx)
       // the pre-compaction index must still SERVE after recovery
-      require(Similarity.ivfKnnJoinIndex(VStage.load(s, idx),
-        e.filter(col("label") === 1), col("embedding"), col("vec_id"),
-        k = 3, centroids = stale, nProbe = 4).limit(1).count() == 1,
+      require(serveIvf(s, idx, e, stale).limit(1).count() == 1,
         "recovered index must serve the pre-compaction answer")
       // retry completes; serve ≡ q367's uninterrupted compaction
-      val cents = Similarity.ivfRecluster(s, idx, c = 16, iters = 2,
-        buckets = 8)
-      Similarity.ivfKnnJoinIndex(VStage.load(s, idx),
-        e.filter(col("label") === 1), col("embedding"), col("vec_id"),
-        k = 3, centroids = cents, nProbe = 4)
-        .select(col("qid"), col("rank"), col("id"),
-          round(col("cos_sim"), 4).as("cos_sim"))
-        .orderBy("qid", "rank")
+      val cents = Similarity.ivfRecluster(s, idx, c = 16, iters = 2)
+      serveIvf(s, idx, e, cents).orderBy("qid", "rank")
     },
     q367.oracle)
 
@@ -4122,7 +4110,7 @@ object ExtQueries {
           col("doc_id"), col("text")), posts, "term", 8)
       Staging.appendBucketed(
         Curate.tokenPostings(docs.where(col("doc_id") >= 300),
-          col("doc_id"), col("text")), posts, "term", 8)
+          col("doc_id"), col("text")), posts)
       Curate.tfidfTopKFromPostings(Staging.load(s, posts),
           col("id") % 50 === 0, kLex = 10)
         .orderBy("qid", "rank")

@@ -813,8 +813,7 @@ object PlanningQueries {
           Staging.load(s, idx), col("text"), col("doc_id"))
         .localCheckpoint()
       Staging.appendBucketed(
-        Dedup.lshIndexFrame(day1, col("text"), col("doc_id")),
-        idx, "lsh_key", 8)
+        Dedup.lshIndexFrame(day1, col("text"), col("doc_id")), idx)
       val day2 = Dedup.minhashAgainstIndex(docs.where(col("doc_id") >= 350),
         Staging.load(s, idx), col("text"), col("doc_id"))
       day1.withColumn("ingest_day", lit(1))

@@ -430,14 +430,14 @@ object Similarity {
     * Returns the retrained centroids (the serving layer must switch
     * codebooks atomically with the index — queries probe cells by
     * centroid, so serving old centroids against the new index would
-    * probe wrong cells). `onStep` is the kill-drill hook, forwarded to
-    * [[graft.VStage.compact]]. */
+    * probe wrong cells). `buckets` and `onStep` (the kill-drill hook)
+    * are forwarded to [[graft.VStage.compact]]. */
   def ivfRecluster(spark: org.apache.spark.sql.SparkSession, base: String,
-                   c: Int, iters: Int = 2, buckets: Int = 8,
+                   c: Int, iters: Int = 2, buckets: Option[Int] = None,
                    onStep: String => Unit = _ => ())
       : Seq[(Long, Array[Double])] = {
     var out: Seq[(Long, Array[Double])] = Seq.empty
-    graft.VStage.compact(spark, base, "cell", buckets, { idx0 =>
+    graft.VStage.compact(spark, base, "cell", { idx0 =>
       // drop exact-duplicate rows a crashed-and-replayed streaming
       // append (q372) left behind: one id-keyed shuffle, amortized into
       // the compaction's full-index rebuild — this is where "compaction
@@ -448,12 +448,8 @@ object Similarity {
       val rows = idx0.select("id", "emb").dropDuplicates("id")
       val cents = kmeansCentroids(rows, col("emb"), col("id"), c, iters)
       out = cents
-      // cluster by the bucket key before staging so each task owns
-      // exactly one bucket → one file per bucket (bucketBy writes one
-      // file per bucket per task — the ScaleSpec compaction convention)
       ivfIndexFrame(rows, col("emb"), col("id"), cents)
-        .repartition(buckets, col("cell"))
-    }, onStep)
+    }, buckets, onStep)
     out
   }
 

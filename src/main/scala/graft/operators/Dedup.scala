@@ -364,15 +364,15 @@ object Dedup {
     * catalog, so only the (small) batch side shuffles, sized by the
     * index's bucket count. The ingestion-time cost model at scale:
     * O(batch) signatures + one batch-side exchange, independent of
-    * corpus size. */
+    * corpus size. A doc hit in several bands repeats in the hit set; the
+    * `left_anti` join ignores repeats, so no `distinct()` precedes it. */
   def minhashAgainstIndex(batch: DataFrame, index: DataFrame, text: Column,
                           id: Column, shingleSize: Int = 3, numPerm: Int = 16,
                           bands: Int = 4): DataFrame = {
     val hit = lshIndexFrame(batch, text, id, shingleSize, numPerm, bands)
-      .withColumnRenamed("corpus_id", "__id")
       .join(index.select(col("lsh_key")), Seq("lsh_key"), "left_semi")
-      .select(col("__id")).distinct()
-    batch.join(hit.select(col("__id").as("__hit")), id === col("__hit"), "left_anti")
+    batch.join(hit.select(col("corpus_id").as("__hit")), id === col("__hit"),
+      "left_anti")
   }
 
   /** Per-doc 60-bit SimHash signature as (__id, __blk, __sig): bit j is set
@@ -821,13 +821,15 @@ object Dedup {
     * Candidates verify with the exact distinct-gram intersection —
     * output EQUALS the naive join. Unlike the Jaccard twins there is
     * NO length filter: subset-duplicates with arbitrary length ratio
-    * are precisely what containment exists to catch. Lossless for
-    * minC > 0 only: a pair sharing no gram is never a candidate. */
+    * are precisely what containment exists to catch. Requires minC > 0:
+    * a pair sharing no gram is never a candidate. */
   def ngramContainmentPairsBanded(df: DataFrame, text: Column, id: Column,
                                   block: Column, n: Int = 1,
                                   minC: Double = 0.9,
                                   broadcastVocab: Boolean = true)
       : DataFrame = {
+    require(minC > 0, s"minC = $minC: the banded form is lossless only " +
+      "above 0; use ngramContainmentPairs")
     val para = df.sparkSession.sessionState.conf.numShufflePartitions
     // one pin for three consumers (token stream, both verify sides),
     // repartitioned by id against the checkpoint-1-partition trap
@@ -897,10 +899,12 @@ object Dedup {
     * runs on candidates only. Output matches the quadratic form modulo
     * 64-bit hash collisions (~1e-10/pair — both forms compare token-hash
     * sets, so on any given input they agree exactly); at scale the
-    * candidate count tracks true near-dups, not block-size². Lossless
-    * for minJ > 0 only: a pair sharing no gram is never a candidate. */
+    * candidate count tracks true near-dups, not block-size². Requires
+    * minJ > 0: a pair sharing no gram is never a candidate. */
   def ngramJaccardPairsPrefix(df: DataFrame, text: Column, id: Column, block: Column,
                               n: Int = 1, minJ: Double = 0.6): DataFrame = {
+    require(minJ > 0, s"minJ = $minJ: the prefix form is lossless only " +
+      "above 0; use ngramJaccardPairs")
     val t = df.select(id.as("__id"), block.as("__blk"),
       gramSet(ngrams(text, n)).as("__g"))
     // carry |g| through the explode: the prefix cutoff needs each doc's set

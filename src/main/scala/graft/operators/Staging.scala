@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.internal.SQLConf
 
 /** Bucketed staging tables — the co-located-join story at cluster scale.
   *
@@ -24,6 +26,10 @@ object Staging {
     f.delete(); ()
   }
 
+  /** The session's warehouse directory (managed tables live under it). */
+  private[graft] def warehouse(spark: SparkSession): java.io.File =
+    new java.io.File(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
+
   /** Stage `df` as a bucketed, per-bucket-sorted managed parquet table.
     * Idempotent: drops any prior table AND its location first (with the
     * in-memory catalog, a dropped table's files survive the session and
@@ -39,40 +45,52 @@ object Staging {
   def stageBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val warehouse = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val loc = new java.io.File(warehouse, table)
+    val loc = new java.io.File(warehouse(spark), table)
     if (loc.exists()) deleteRecursively(loc)
     // ONE FILE PER BUCKET (r14, guide §6 small-files): the bucketed writer
     // splits every input task's rows by bucket id, so an N-partition input
-    // writes up to N files per bucket — a 32-partition index frame staged
-    // ~256 near-empty parquet files, and the committer/open fixed costs
-    // dominated both the stage and every later bucketed scan.
-    // repartition(buckets, key) routes rows with the same murmur3-pmod
-    // expression the bucket id uses, so each task holds exactly one
-    // bucket and writes exactly one file. Scale-adaptive by construction:
-    // `buckets` is the caller's scale knob (a 100 TB index passes a
-    // bucket count sized to its data; write parallelism = bucket count
-    // either way, since distinct files are the unit of parallel I/O).
+    // writes up to N files per bucket. repartition(buckets, key) routes
+    // rows with the same murmur3-pmod expression the bucket id uses, so
+    // each task holds exactly one bucket and writes exactly one file.
     df.repartition(buckets, org.apache.spark.sql.functions.col(key))
       .write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
   }
 
+  /** The bucket count of a table staged from `df` when the caller names
+    * none: ceil(estimated bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+    * within [1, shuffle partitions]. The estimate is the optimized plan's
+    * Catalyst statistic, so sizing starts no job. Bucket count is write
+    * parallelism (one task and one file per bucket) and the task count
+    * of every bucketed scan. */
+  def sizedBuckets(df: DataFrame): Int = {
+    val conf = df.sparkSession.sessionState.conf
+    val advisory = BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    ((size + advisory - 1) / advisory)
+      .min(conf.numShufflePartitions).max(1).toInt
+  }
+
   def load(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
-  /** Append rows to a table staged by [[stageBucketed]], preserving its
-    * bucket spec (the writer re-declares it; Spark verifies against the
-    * catalog). The incremental-index maintenance path: an ingest batch's
-    * SURVIVORS add their rows to the staged index so the next batch
-    * dedups against corpus ∪ survivors — appending writes only the new
-    * rows' buckets-worth of files, never rewriting the index (at 100 TB
-    * the index rewrite would dominate the ingest). Each bucket gains one
-    * file per append; periodic compaction (re-[[stageBucketed]]) bounds
-    * the file count, the classic LSM trade. */
-  def appendBucketed(df: DataFrame, table: String, key: String,
-                     buckets: Int): Unit =
+  /** Append rows to a table staged by [[stageBucketed]] under the bucket
+    * spec the catalog holds for it (the writer re-declares it; Spark
+    * verifies against the catalog). The incremental-index maintenance
+    * path: an ingest batch's SURVIVORS add their rows to the staged index
+    * so the next batch dedups against corpus ∪ survivors — appending
+    * writes only new files, never rewriting the index. Each bucket gains
+    * up to one file per append task; compaction ([[graft.VStage.compact]])
+    * bounds the file count, the classic LSM trade. */
+  def appendBucketed(df: DataFrame, table: String): Unit = {
+    val spec = df.sparkSession.sessionState.catalog
+      .getTableMetadata(TableIdentifier(table)).bucketSpec
+      .getOrElse(sys.error(s"$table is not bucketed"))
     df.write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
+      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+        spec.bucketColumnNames.tail.toSeq: _*)
+      .sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail.toSeq: _*)
+      .saveAsTable(table)
+  }
 
   /** Sort-clustered parquet staging — the zone-map/data-skipping layout.
     *

@@ -30,19 +30,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exactly why the pointer is a FILE and not a catalog property.
   *
   * Appends between compactions go to the live generation
-  * ([[Staging.appendBucketed]] semantics: new bucket files only), so
-  * the LSM trade is unchanged — this object only replaces the unsafe
-  * re-stage-over-the-live-table compaction leg. Kill-mid-compaction
+  * ([[Staging.appendBucketed]] semantics: new bucket files only, under
+  * the live spec), so the LSM trade is unchanged — this object only
+  * replaces the unsafe re-stage-over-the-live-table compaction leg.
+  * Unless the caller names a bucket count, [[init]] and [[compact]] size
+  * each generation to its data ([[Staging.sizedBuckets]]). Kill-mid-compaction
   * drills are pinned in the unit suite for both the LSH dedup index
   * and the IVF recluster (q373 oracle-gates the recovery path).
   */
 object VStage {
-  private def warehouse(spark: SparkSession): java.io.File =
-    new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-
   private def ptrFile(spark: SparkSession, base: String): java.io.File =
-    new java.io.File(warehouse(spark), base + "._ptr")
+    new java.io.File(Staging.warehouse(spark), base + "._ptr")
 
   /** Generation-table name for `base` at generation `gen`. */
   def genTable(base: String, gen: Long): String = s"${base}__g$gen"
@@ -72,16 +70,18 @@ object VStage {
     * exist without the other after a crash). */
   private def dropGen(spark: SparkSession, base: String, gen: Long): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `${genTable(base, gen)}`")
-    val d = new java.io.File(warehouse(spark), genTable(base, gen))
+    val d = new java.io.File(Staging.warehouse(spark), genTable(base, gen))
     if (d.exists()) Staging.deleteRecursively(d)
   }
 
   /** Every generation number with a trace on disk or in the catalog. */
   private def knownGens(spark: SparkSession, base: String): Seq[Long] = {
     val re = (java.util.regex.Pattern.quote(base) + "__g(\\d+)").r
-    val dirs = Option(warehouse(spark).listFiles()).getOrElse(Array.empty)
+    val dirs = Option(Staging.warehouse(spark).listFiles()).getOrElse(Array.empty)
       .map(_.getName).toSeq
-    val cat = spark.catalog.listTables().collect().map(_.name).toSeq
+    // listed on the driver: spark.catalog.listTables() starts a job
+    val catalog = spark.sessionState.catalog
+    val cat = catalog.listTables(catalog.getCurrentDatabase).map(_.table)
     (dirs ++ cat).flatMap {
       case re(n) => Some(n.toLong)
       case _ => None
@@ -110,18 +110,19 @@ object VStage {
     * generation 0, commit the pointer. (Crash before the commit leaves
     * no pointer → recover drops the partial g0 → `exists` is false —
     * the caller's bootstrap re-runs, same as stageBucketed today.) */
-  def init(df: DataFrame, base: String, key: String, buckets: Int): Unit = {
+  def init(df: DataFrame, base: String, key: String,
+           buckets: Option[Int] = None): Unit = {
     val spark = df.sparkSession
     destroy(spark, base)
-    Staging.stageBucketed(df, genTable(base, 0), key, buckets)
+    Staging.stageBucketed(df, genTable(base, 0), key,
+      buckets.getOrElse(Staging.sizedBuckets(df)))
     commitPtr(spark, base, 0)
   }
 
   /** Append to the live generation ([[Staging.appendBucketed]] — new
     * bucket files only, never a rewrite). */
-  def append(df: DataFrame, base: String, key: String, buckets: Int): Unit =
-    Staging.appendBucketed(df, genTable(base, currentGen(df.sparkSession, base)),
-      key, buckets)
+  def append(df: DataFrame, base: String): Unit =
+    Staging.appendBucketed(df, genTable(base, currentGen(df.sparkSession, base)))
 
   /** Read the live generation. `refresh = true` drops the session's
     * cached relation first — needed on the OUTER session after a
@@ -145,9 +146,11 @@ object VStage {
     * `"staged"` (new generation fully written, pointer NOT yet moved —
     * a crash here must leave the OLD generation serving) and at
     * `"committed"` (pointer moved, old generation not yet dropped — a
-    * crash here must leave the NEW generation serving). */
-  def compact(spark: SparkSession, base: String, key: String, buckets: Int,
+    * crash here must leave the NEW generation serving). Sized by
+    * default, a compaction re-sizes an index its appends have grown. */
+  def compact(spark: SparkSession, base: String, key: String,
               rebuild: DataFrame => DataFrame,
+              buckets: Option[Int] = None,
               onStep: String => Unit = _ => ()): Unit = {
     recover(spark, base)
     val cur = currentGen(spark, base)
@@ -160,8 +163,9 @@ object VStage {
     // from the day-0 file listing and DROPS every appended signature
     // (caught by the 10-day soak drill)
     spark.catalog.refreshTable(genTable(base, cur))
-    Staging.stageBucketed(rebuild(spark.table(genTable(base, cur))),
-      genTable(base, next), key, buckets)
+    val rebuilt = rebuild(spark.table(genTable(base, cur)))
+    Staging.stageBucketed(rebuilt, genTable(base, next), key,
+      buckets.getOrElse(Staging.sizedBuckets(rebuilt)))
     onStep("staged")
     commitPtr(spark, base, next)
     onStep("committed")

@@ -54,6 +54,9 @@ import graft.{CkptScope, Dedup, Staging, Tables, VStage}
   *    it read the index as of the batch's start; the commit (state
   *    swap or per-batch output) runs after the append.
   *
+  * Every index is a [[VStage]] table bucketed on its probe key and sized
+  * to its data ([[graft.Staging.sizedBuckets]]); appends keep its count.
+  *
   * Per-batch checkpoint blocks are freed via a [[CkptScope]] once the
   * batch's durable output is committed — a long-running stream holds
   * O(1) checkpoint state, not O(days). */
@@ -203,7 +206,7 @@ object IngestStreams {
       afterSegment: Int => Unit, maxFilesPerTrigger: Option[Int])
       (step: Tick => (DataFrame, () => Unit)): Unit = {
     val idx = name + "_idx"
-    VStage.init(signatures(corpus), idx, "lsh_key", 8)
+    VStage.init(signatures(corpus), idx, "lsh_key")
     bootstrap.foreach { commit =>
       val scope0 = CkptScope()
       try commit(Dedup.connectedComponents(
@@ -220,7 +223,7 @@ object IngestStreams {
           val (toIndex, commit) = step(Tick(ss, batch, batchId,
             Dedup.indexWithoutIds(VStage.load(ss, idx),
               batch.select(col("doc_id").as("id"))), scope))
-          VStage.append(signatures(toIndex), idx, "lsh_key", 8)
+          VStage.append(signatures(toIndex), idx)
           commit()
         } finally scope.freeAll()
       }
@@ -252,9 +255,8 @@ object IngestStreams {
       killAfterDays = compactAfterDay.toSet,
       afterSegment = day =>
         if (compactAfterDay.contains(day))
-          VStage.compact(spark, name + "_idx", "lsh_key", 8,
-            df => df.dropDuplicates("lsh_key", "corpus_id")
-              .repartition(8, col("lsh_key"))),
+          VStage.compact(spark, name + "_idx", "lsh_key",
+            _.dropDuplicates("lsh_key", "corpus_id")),
       maxFilesPerTrigger = Some(1)) { t =>
       val surv = t.scope.ckpt(Dedup.minhashAgainstIndex(prep(t.batch),
         t.index, col("text"), col("doc_id")))
@@ -394,25 +396,16 @@ object IngestStreams {
       : DataFrame = {
     val idx = name + "_idx"
     val st = name + "_stats"
-    val p0 = graft.Curate.tokenPostings(corpus, col("doc_id"), col("text"))
-    if (maintainStats) {
-      val pinned = p0.localCheckpoint()
-      VStage.init(pinned, idx, "term", 8)
-      VStage.init(statsDelta(pinned, -1L), st, "term", 8)
-    } else VStage.init(p0, idx, "term", 8)
-    val body = (batch: DataFrame, bid: Long) => {
-      if (maintainStats) {
-        // one tokenize pass feeds both appends
-        val p = graft.Curate.tokenPostings(batch, col("doc_id"), col("text"))
-          .localCheckpoint()
-        VStage.append(p, idx, "term", 8)
-        VStage.append(statsDelta(p, bid), st, "term", 8)
-      } else
-        VStage.append(
-          graft.Curate.tokenPostings(batch, col("doc_id"), col("text")),
-          idx, "term", 8)
-      ()
+    // with stats, one pinned tokenize pass feeds both tables
+    def stage(docs: DataFrame, bid: Long, write: (DataFrame, String) => Unit) = {
+      val p = graft.Curate.tokenPostings(docs, col("doc_id"), col("text"))
+      val pinned = if (maintainStats) p.localCheckpoint() else p
+      write(pinned, idx)
+      if (maintainStats) write(statsDelta(pinned, bid), st)
     }
+    stage(corpus, -1L, VStage.init(_, _, "term"))
+    val body = (batch: DataFrame, bid: Long) =>
+      stage(batch, bid, VStage.append(_, _))
     driveDays(spark, name, days, killBetweenDays, body,
       // postings compaction runs BETWEEN stream segments: collapse the
       // exact-duplicate rows replayed appends left and re-bucket one
@@ -421,8 +414,7 @@ object IngestStreams {
       killAfterDays = killAfterDays ++ compactAfterDay.toSet,
       afterSegment = day =>
         if (compactAfterDay.contains(day))
-          VStage.compact(spark, idx, "term", 8,
-            df => collapsePostings(df).repartition(8, col("term"))))
+          VStage.compact(spark, idx, "term", collapsePostings))
     val postings = collapsePostings(VStage.load(spark, idx, refresh = true))
     (if (maintainStats) {
       val (dfT, nd) = readStats(VStage.load(spark, st, refresh = true))
@@ -536,15 +528,11 @@ object IngestStreams {
     @volatile var cents = graft.Similarity.kmeansCentroids(
       corpusVecs, col("embedding"), col("vec_id"), c = 16, iters = 2)
     val idx = name + "_idx"
-    VStage.init(
-      graft.Similarity.ivfIndexFrame(corpusVecs,
-        col("embedding"), col("vec_id"), cents),
-      idx, "cell", 8)
+    VStage.init(graft.Similarity.ivfIndexFrame(corpusVecs,
+      col("embedding"), col("vec_id"), cents), idx, "cell")
     val body = (batch: DataFrame, _: Long) => {
-      VStage.append(
-        graft.Similarity.ivfIndexFrame(batch, col("embedding"),
-          col("vec_id"), cents),
-        idx, "cell", 8)
+      VStage.append(graft.Similarity.ivfIndexFrame(batch, col("embedding"),
+        col("vec_id"), cents), idx)
       ()
     }
     driveDays(spark, name, days, killBetweenDays, body,
@@ -554,7 +542,7 @@ object IngestStreams {
       afterSegment = day =>
         if (reclusterAfterDay.contains(day))
           cents = graft.Similarity.ivfRecluster(spark, idx, c = 16,
-            iters = 2, buckets = 8))
+            iters = 2))
     cents
   }
 

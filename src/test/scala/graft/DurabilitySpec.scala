@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{DurableState, IngestStreams}
@@ -181,19 +182,31 @@ class DurabilitySpec extends SparkSpec {
     assert(plain.nonEmpty)
     val gen = VStage.currentGen(spark, "t_sdc_cmp_idx")
     assert(gen > 0L, "compaction never ran — the pin is vacuous")
+    assert(plain.exists(_.head == 2), "day 2 must append survivors")
     val wh = new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
-    // day-2 appended AFTER the compaction, so the live generation holds
-    // 8 compacted files + day-2's append files — strictly fewer than
-    // the un-compacted twin's accumulation
-    val live = new java.io.File(wh, VStage.genTable("t_sdc_cmp_idx", gen))
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val liveTable = VStage.genTable("t_sdc_cmp_idx", gen)
+    val numBuckets = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(liveTable)).bucketSpec.get.numBuckets
+    // day 2 appended AFTER the compaction, so the live generation holds
+    // the files of two write jobs, told apart by the job UUID in every
+    // file name (part-<task>-<uuid>_<bucket>…): the compaction's, one
+    // file per bucket, then day 2's append
+    val live = new java.io.File(wh, liveTable).listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    val byJob = live.groupBy(_.getName.split("-", 3)(2).take(36)).values
+      .toSeq.sortBy(_.map(_.lastModified).min)
+    assert(byJob.size === 2, live.map(_.getName))
+    val (compactionFiles, day2Files) = (byJob.head, byJob(1))
+    assert(compactionFiles.map(f => f.getName.split("_")(1).take(5).toInt)
+      .sorted === (0 until numBuckets), "one compacted file per bucket")
+    assert(live.size === numBuckets + day2Files.size)
     val plainFiles = new java.io.File(wh,
         VStage.genTable("t_sdc_plain_idx",
           VStage.currentGen(spark, "t_sdc_plain_idx")))
       .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(live < plainFiles,
-      s"compaction must re-bound the file count ($live vs $plainFiles)")
+    assert(live.size < plainFiles,
+      s"compaction must re-bound the file count (${live.size} vs $plainFiles)")
   }
 
   test("q379 decon-gated prep: kill-and-resume equals uninterrupted, no " +
@@ -405,7 +418,7 @@ class DurabilitySpec extends SparkSpec {
     VStage.append(
       Similarity.ivfIndexFrame(eTbl.where(col("vec_id") >= 350),
         col("embedding"), col("vec_id"), cents),
-      "t_ann_u_idx", "cell", 8)
+      "t_ann_u_idx")
     def serve(dedup: Boolean) = Similarity.ivfKnnJoinIndex(
         VStage.load(spark, "t_ann_u_idx", refresh = true),
         eTbl.filter(col("label") === 1), col("embedding"), col("vec_id"),
@@ -446,7 +459,7 @@ class DurabilitySpec extends SparkSpec {
     // the crashed attempt's append reached the index; the batch replays
     Staging.appendBucketed(
       Dedup.lshIndexFrame(batch, col("text"), col("doc_id")),
-      "t_replay_mod_idx", "lsh_key", 4)
+      "t_replay_mod_idx")
     spark.catalog.refreshTable("t_replay_mod_idx")
     assert(edges(excludeSelf = true) === firstDelivery,
       "replay with self-exclusion must reproduce the pre-batch edges")
@@ -477,7 +490,7 @@ class DurabilitySpec extends SparkSpec {
       Dedup.lshIndexFrame(
         batch.where(col("doc_id").isin(firstDelivery.map(Long.box): _*)),
         col("text"), col("doc_id")),
-      "t_replay_idx", "lsh_key", 4)
+      "t_replay_idx")
     assert(survivors() === firstDelivery,
       "replay with self-exclusion must reproduce the original survivors")
     val naive = Dedup.minhashAgainstIndex(batch,

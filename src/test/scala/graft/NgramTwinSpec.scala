@@ -105,4 +105,17 @@ class NgramTwinSpec extends SparkSpec {
       }
     }
   }
+
+  test("the prefix and banded forms refuse a zero threshold (they meet " +
+      "only pairs that share a gram)") {
+    val df = corpus(7L).toDF("doc_id", "source", "text")
+    intercept[IllegalArgumentException] {
+      Dedup.ngramJaccardPairsPrefix(df, col("text"), col("doc_id"),
+        col("source"), minJ = 0.0)
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.ngramContainmentPairsBanded(df, col("text"), col("doc_id"),
+        col("source"), minC = 0.0)
+    }
+  }
 }

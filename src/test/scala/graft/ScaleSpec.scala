@@ -222,7 +222,7 @@ class ScaleSpec extends SparkSpec {
       .localCheckpoint()
     Staging.appendBucketed(
       Dedup.lshIndexFrame(day1, col("text"), col("doc_id")),
-      "b_lsh_ing", "lsh_key", 4)
+      "b_lsh_ing")
     // appended table keeps its bucket spec in the catalog
     val spec = spark.sql("DESCRIBE EXTENDED b_lsh_ing").collect()
       .map(r => s"${r.getString(0)}=${r.getString(1)}").mkString("; ")
@@ -277,7 +277,7 @@ class ScaleSpec extends SparkSpec {
         Dedup.lshIndexFrame(
           docs.where(col("doc_id") >= lo && col("doc_id") < hi),
           col("text"), col("doc_id")),
-        "b_lsh_cmp", "lsh_key", 4)
+        "b_lsh_cmp")
     }
     def files(table: String): Int = {
       val wh = new java.net.URI(
@@ -326,7 +326,8 @@ class ScaleSpec extends SparkSpec {
       col("embedding"), col("vec_id"), c = 16, iters = 2)
     VStage.init(
       Similarity.ivfIndexFrame(e.where(col("vec_id") < 500),
-        col("embedding"), col("vec_id"), stale), "t_ivf_rc", "cell", 4)
+        col("embedding"), col("vec_id"), stale), "t_ivf_rc", "cell",
+      Some(4))
     // a crashed-and-replayed streaming append (q372) leaves exact
     // duplicates — compaction must drop them or the retrain ≡
     // from-scratch equivalence below breaks (duplicate low ids skew
@@ -334,10 +335,10 @@ class ScaleSpec extends SparkSpec {
     Seq(1, 2).foreach { _ =>
       VStage.append(
         Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
-          col("embedding"), col("vec_id"), stale), "t_ivf_rc", "cell", 4)
+          col("embedding"), col("vec_id"), stale), "t_ivf_rc")
     }
     val cents = Similarity.ivfRecluster(spark, "t_ivf_rc",
-      c = 16, iters = 2, buckets = 4)
+      c = 16, iters = 2, buckets = Some(4))
     // from-scratch twin: train on the full table, stage fresh
     val fresh = Similarity.kmeansCentroids(e, col("embedding"),
       col("vec_id"), c = 16, iters = 2)
@@ -371,9 +372,9 @@ class ScaleSpec extends SparkSpec {
     val b = "t_vstage"
     VStage.destroy(spark, b)
     assert(!VStage.exists(spark, b))
-    VStage.init(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), b, "k", 2)
+    VStage.init(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), b, "k", Some(2))
     assert(VStage.currentGen(spark, b) === 0L)
-    VStage.append(Seq((3L, "c")).toDF("k", "v"), b, "k", 2)
+    VStage.append(Seq((3L, "c")).toDF("k", "v"), b)
     def content(): Seq[(Long, String)] = VStage.load(spark, b)
       .collect().toSeq.map(r => (r.getLong(0), r.getString(1))).sorted
     assert(content() === Seq((1L, "a"), (2L, "b"), (3L, "c")))
@@ -388,8 +389,7 @@ class ScaleSpec extends SparkSpec {
     // crash point B: pointer moved, superseded generation not dropped —
     // recover drops it, the new generation serves
     intercept[RuntimeException] {
-      VStage.compact(spark, b, "k", 2,
-        df => df.repartition(2, col("k")),
+      VStage.compact(spark, b, "k", identity, Some(2),
         onStep = s => if (s == "committed") throw new RuntimeException("kill"))
     }
     // the injected kill left gen 0 behind
@@ -418,10 +418,10 @@ class ScaleSpec extends SparkSpec {
       col("embedding"), col("vec_id"), c = 16, iters = 2)
     VStage.init(
       Similarity.ivfIndexFrame(e.where(col("vec_id") < 500),
-        col("embedding"), col("vec_id"), stale), b, "cell", 4)
+        col("embedding"), col("vec_id"), stale), b, "cell", Some(4))
     VStage.append(
       Similarity.ivfIndexFrame(e.where(col("vec_id") >= 500),
-        col("embedding"), col("vec_id"), stale), b, "cell", 4)
+        col("embedding"), col("vec_id"), stale), b)
     def serve(cs: Seq[(Long, Array[Double])]) =
       Similarity.ivfKnnJoinIndex(VStage.load(spark, b),
         e.filter(col("label") === 1), col("embedding"), col("vec_id"),
@@ -431,7 +431,7 @@ class ScaleSpec extends SparkSpec {
     // kill 1: crash with the new generation fully staged but the
     // pointer NOT moved — recovery must serve the PRE-compaction answer
     intercept[RuntimeException] {
-      Similarity.ivfRecluster(spark, b, c = 16, iters = 2, buckets = 4,
+      Similarity.ivfRecluster(spark, b, c = 16, iters = 2, buckets = Some(4),
         onStep = s => if (s == "staged") throw new RuntimeException("kill"))
     }
     VStage.recover(spark, b)
@@ -442,7 +442,7 @@ class ScaleSpec extends SparkSpec {
     // recovery must serve the COMPACTED index under the retrained
     // codebook, ≡ the from-scratch build
     intercept[RuntimeException] {
-      Similarity.ivfRecluster(spark, b, c = 16, iters = 2, buckets = 4,
+      Similarity.ivfRecluster(spark, b, c = 16, iters = 2, buckets = Some(4),
         onStep = s => if (s == "committed") throw new RuntimeException("kill"))
     }
     VStage.recover(spark, b)
@@ -470,12 +470,12 @@ class ScaleSpec extends SparkSpec {
     val b = "t_lsh_kill"
     VStage.init(
       Dedup.lshIndexFrame(docs.where(col("doc_id") < 150),
-        col("text"), col("doc_id")), b, "lsh_key", 4)
+        col("text"), col("doc_id")), b, "lsh_key", Some(4))
     Seq((150L, 250L), (250L, 350L)).foreach { case (lo, hi) =>
       VStage.append(
         Dedup.lshIndexFrame(
           docs.where(col("doc_id") >= lo && col("doc_id") < hi),
-          col("text"), col("doc_id")), b, "lsh_key", 4)
+          col("text"), col("doc_id")), b)
     }
     val batch = docs.where(col("doc_id") >= 350)
     def survivors() = Dedup.minhashAgainstIndex(batch,
@@ -484,17 +484,16 @@ class ScaleSpec extends SparkSpec {
     val before = survivors()
     assert(before.nonEmpty)
     val rebuild: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => df.dropDuplicates("lsh_key", "corpus_id")
-        .repartition(4, col("lsh_key"))
+      _.dropDuplicates("lsh_key", "corpus_id")
     // crash before the pointer swap → old generation serves, unchanged
     intercept[RuntimeException] {
-      VStage.compact(spark, b, "lsh_key", 4, rebuild,
+      VStage.compact(spark, b, "lsh_key", rebuild, Some(4),
         onStep = s => if (s == "staged") throw new RuntimeException("kill"))
     }
     VStage.recover(spark, b)
     assert(VStage.currentGen(spark, b) === 0L && survivors() === before)
     // completed compaction → same survivors, one file per bucket
-    VStage.compact(spark, b, "lsh_key", 4, rebuild)
+    VStage.compact(spark, b, "lsh_key", rebuild, Some(4))
     assert(VStage.currentGen(spark, b) === 1L && survivors() === before)
     val wh = new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath

@@ -32,9 +32,8 @@ class SoakSpec extends SparkSpec {
     * generation swap, content-preserving for an LSH index. */
   private def compactAt(name: String)(day: Int): Unit =
     if (day == 5)
-      VStage.compact(spark, name + "_idx", "lsh_key", 8,
-        df => df.dropDuplicates("lsh_key", "corpus_id")
-          .repartition(8, col("lsh_key")))
+      VStage.compact(spark, name + "_idx", "lsh_key",
+        _.dropDuplicates("lsh_key", "corpus_id"), Some(8))
 
   private def labelRows(df: org.apache.spark.sql.DataFrame) =
     df.select("id", "comp").collect().toSeq
