@@ -46,17 +46,12 @@ object Normalize {
 
   /** N7 — robust: (v - median) / IQR with exact linearly-interpolated
     * percentiles (pandas `quantile` semantics). `percentile_approx` would
-    * silently break oracle parity (SURVEY §7.4.3) — so `approx = false` is
-    * the default and the oracle-checked path. `approx = true` is the
-    * 100 TB path: exact percentile buffers EVERY value in the partial
-    * aggregate; the approx sketch (Greenwald-Khanna, `accuracy` controls
-    * the rank error 1/accuracy) is bounded-memory. Closeness of the two
-    * paths is pinned in the unit suite. */
-  def robust(df: DataFrame, cols: Seq[String], approx: Boolean = false,
-             accuracy: Int = 10000): DataFrame = {
+    * silently break oracle parity (SURVEY §7.4.3), so the exact
+    * `percentile` is the only path. It buffers every value of a column in
+    * the partial aggregate; a column too large for that is out of scope. */
+  def robust(df: DataFrame, cols: Seq[String]): DataFrame = {
     def pct(c: String, p: Double, alias: String): Column =
-      if (approx) percentile_approx(col(c), lit(p), lit(accuracy)).as(alias)
-      else percentile(col(c), lit(p)).as(alias)
+      percentile(col(c), lit(p)).as(alias)
     val stats = cols.flatMap(c => Seq(
       pct(c, 0.5, s"__med_$c"),
       pct(c, 0.75, s"__q3_$c"),

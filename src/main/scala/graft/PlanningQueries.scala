@@ -1174,14 +1174,6 @@ object PlanningQueries {
     },
     q358.oracle)
 
-  /** [[graft.streaming.IngestStreams.runClusterMaintenance]]: q355's
-    * incremental CC driven by the STREAM — per micro-batch, one
-    * signature scan ([[Dedup.batchIngestEdges]]), a batch-sized
-    * quotient CC merge, and an index append so later days connect.
-    * Cluster structure is order-independent (the union of discovered
-    * edges equals the full collision graph), so the oracle is the
-    * full-recompute census: the green row proves
-    * streaming-incremental ≡ batch-full. */
   /** The full-recompute cluster-census oracle the order-independent
     * streaming loops share (q364/q368/q374): CC over the complete
     * collision graph, census with `n_new` counting ids ≥ `cut0`. */
@@ -1213,6 +1205,14 @@ object PlanningQueries {
       |  max(id) AS max_doc_id
       |FROM lab GROUP BY comp ORDER BY cluster_id""".stripMargin
 
+  /** [[graft.streaming.IngestStreams.runClusterMaintenance]]: q355's
+    * incremental CC driven by the STREAM — per micro-batch, one
+    * signature scan ([[Dedup.batchIngestEdges]]), a batch-sized
+    * quotient CC merge, and an index append so later days connect.
+    * Cluster structure is order-independent (the union of discovered
+    * edges equals the full collision graph), so the oracle is the
+    * full-recompute census: the green row proves
+    * streaming-incremental ≡ batch-full. */
   private val q364 = QDef("q364_stream_cluster_maintenance",
     (s, dir) => {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

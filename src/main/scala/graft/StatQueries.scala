@@ -328,11 +328,14 @@ object StatQueries {
     * artifact (merge rules in priority order). The oracle replays every
     * round: vocab pair counts, deterministic argmax, and the
     * left-greedy merge apply via gaps-and-islands odd-occurrence
-    * selection. */
+    * selection. The ORDER BY sits outside the WITH: DuckDB keeps the
+    * order of a sort under a materialized-CTE root only while
+    * `preserve_insertion_order` is on. */
   private val q359 = QDef("q359_bpe_train",
     (s, dir) => LanguageModel.bpeTrain(T(s, dir, "documents"),
       col("text"), merges = 6),
-    Some(s"""WITH wrd AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM
+    Some(s"""SELECT * FROM (
+      |WITH wrd AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM
       |      (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
       |      WHERE len(w) >= 1 GROUP BY w),
       |w0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY w) AS wid, w, cnt,
@@ -340,7 +343,6 @@ object StatQueries {
       |          q -> substr(w, q, 1)) AS syms
       |      FROM wrd),
       |${(1 to 6).map(bpeIterCtes).mkString(",\n")}
-      |SELECT * FROM (
       |${(1 to 6).map(i =>
         s"""SELECT CAST($i AS INTEGER) AS merge_idx, m1 AS s1, m2 AS s2,
            |  m1 || m2 AS merged, CAST(c AS BIGINT) AS pair_count

@@ -430,10 +430,10 @@ object Similarity {
     * Returns the retrained centroids (the serving layer must switch
     * codebooks atomically with the index — queries probe cells by
     * centroid, so serving old centroids against the new index would
-    * probe wrong cells). `buckets` and `onStep` (the kill-drill hook)
-    * are forwarded to [[graft.VStage.compact]]. */
+    * probe wrong cells). `onStep` (the kill-drill hook) is forwarded
+    * to [[graft.VStage.compact]]. */
   def ivfRecluster(spark: org.apache.spark.sql.SparkSession, base: String,
-                   c: Int, iters: Int = 2, buckets: Option[Int] = None,
+                   c: Int, iters: Int = 2,
                    onStep: String => Unit = _ => ())
       : Seq[(Long, Array[Double])] = {
     var out: Seq[(Long, Array[Double])] = Seq.empty
@@ -449,7 +449,7 @@ object Similarity {
       val cents = kmeansCentroids(rows, col("emb"), col("id"), c, iters)
       out = cents
       ivfIndexFrame(rows, col("emb"), col("id"), cents)
-    }, buckets, onStep)
+    }, onStep)
     out
   }
 

@@ -397,12 +397,10 @@ object Curate {
     * downstream key against the 1-partition coalesce trap), and the
     * verify is the codegen two-pointer [[SparseDotLong]] merge — the
     * SAME exact integers as the naive join, so the final cosine is the
-    * identical double division. The vocabulary-sized df table keeps the
-    * broadcastVocab contract (hint by default, shuffle degrade pinned
-    * result-equal in ScaleSpec). */
+    * identical double division. The vocabulary-sized df table is
+    * broadcast. */
   def tfidfCosinePairsBanded(df: DataFrame, id: Column, text: Column,
-                             block: Column, minCos: Double = 0.6,
-                             broadcastVocab: Boolean = true): DataFrame = {
+                             block: Column, minCos: Double = 0.6): DataFrame = {
     val para = df.sparkSession.sessionState.conf.numShufflePartitions
     val tok = df.select(id.as("id"), block.as("blk"),
         explode(split(text, " ")).as("term0"))
@@ -412,12 +410,10 @@ object Curate {
         col("tf"))
     val nDocs = df.select(id.as("id")).where(col("id").isNotNull)
       .agg(countDistinct("id").as("nd"))
-    val bvv = if (broadcastVocab) (d: DataFrame) => broadcast(d)
-              else identity[DataFrame] _
     val dfT = tok.groupBy("term").agg(count(lit(1)).as("df"))
     // exact-zero weights (df = N boilerplate) drop BEFORE the prefix:
     // they move neither dot nor norm but own the largest postings
-    val w = tok.join(bvv(dfT), "term").crossJoin(broadcast(nDocs))
+    val w = tok.join(broadcast(dfT), "term").crossJoin(broadcast(nDocs))
       .select(col("id"), col("blk"), col("term"), col("df"),
         round(col("tf").cast("double") *
           log(col("nd").cast("double") / col("df")) * lit(1e3), 0)

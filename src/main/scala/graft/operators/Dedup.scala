@@ -680,8 +680,7 @@ object Dedup {
     * spanning several blocks sums Σmin per shared block exactly as the
     * oracle does — output EQUALS [[weightedJaccardPairs]]. */
   def weightedJaccardPairsBanded(df: DataFrame, text: Column, id: Column,
-                                 block: Column, minW: Double = 0.6,
-                                 broadcastVocab: Boolean = true)
+                                 block: Column, minW: Double = 0.6)
       : DataFrame = {
     val para = df.sparkSession.sessionState.conf.numShufflePartitions
     // (block, term) keys are 64-bit-hashed up front (the q61/q326
@@ -705,18 +704,13 @@ object Dedup {
         org.apache.spark.sql.expressions.Window.partitionBy("id")))
       .localCheckpoint()
     // The document-frequency table is VOCABULARY-sized: Zipf keeps it
-    // orders of magnitude under the corpus, and the default pins the
-    // broadcast (the measured fast path — the shuffle-by-term spelling
-    // costs ~2.4 s extra at sf0.1 on the postings re-exchange alone).
-    // Past the executor broadcast budget (10^9-term n-gram vocabs),
-    // callers pass broadcastVocab = false and the join degrades to a
-    // shuffle join — the Graph.broadcastVertices contract shape.
-    val bvv = if (broadcastVocab) (d: DataFrame) => broadcast(d)
-              else identity[DataFrame] _
+    // orders of magnitude under the corpus, so it is broadcast (the
+    // shuffle-by-term spelling costs ~2.4 s extra at sf0.1 on the
+    // postings re-exchange alone).
     val dfT = tok.groupBy("term").agg(count(lit(1)).as("df"))
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("df").desc, col("term").desc)
-    val prefix = tok.join(bvv(dfT), "term")
+    val prefix = tok.join(broadcast(dfT), "term")
       .withColumn("tail_tf", sum("tf")
         .over(byDoc.rowsBetween(Long.MinValue, 0)))
       .where(col("tail_tf").cast("double") >=
@@ -825,8 +819,7 @@ object Dedup {
     * a pair sharing no gram is never a candidate. */
   def ngramContainmentPairsBanded(df: DataFrame, text: Column, id: Column,
                                   block: Column, n: Int = 1,
-                                  minC: Double = 0.9,
-                                  broadcastVocab: Boolean = true)
+                                  minC: Double = 0.9)
       : DataFrame = {
     require(minC > 0, s"minC = $minC: the banded form is lossless only " +
       "above 0; use ngramContainmentPairs")
@@ -841,17 +834,13 @@ object Dedup {
       .localCheckpoint()
     val tok = t.select(col("id"), col("blk"), col("sz"),
       explode(col("g")).as("tm"))
-    // vocabulary-sized df table: broadcast by default, shuffle-join
-    // degrade via broadcastVocab = false (the weightedJaccardPairsBanded
-    // / Graph.broadcastVertices contract shape)
-    val bvv = if (broadcastVocab) (d: DataFrame) => broadcast(d)
-              else identity[DataFrame] _
+    // vocabulary-sized df table, broadcast like weightedJaccardPairsBanded's
     val dfT = tok.groupBy("tm").agg(count(lit(1)).as("df"))
     // per-doc prefix as ONE hash aggregation (collect the doc's
     // (df, gram) pairs, in-memory sort, slice) instead of a sort-based
     // row_number window - the ngramJaccardPairsPrefix device (measured
     // ~3x cheaper there; docs are bounded at 10^2-10^3 grams)
-    val prefix = tok.join(bvv(dfT), "tm")
+    val prefix = tok.join(broadcast(dfT), "tm")
       .groupBy("blk", "id", "sz")
       .agg(collect_list(struct(col("df"), col("tm"))).as("ps"))
       .select(col("blk"), col("id").as("ib"), col("sz").as("szb"),
@@ -1075,6 +1064,14 @@ object Dedup {
       .where(col("n_shared") >= minShared)
   }
 
+  /** The most edge rows [[connectedComponents]] and [[ccContract]]
+    * collect to the driver before taking their distributed paths:
+    * `spark.graft.cc.localEdgeLimit` (default 200000), capped so that
+    * the probe's `limit(cap + 1)` fits an Int. */
+  private def localEdgeCap(spark: SparkSession): Int =
+    math.min(spark.conf.getOption("spark.graft.cc.localEdgeLimit")
+      .map(_.toLong).getOrElse(200000L), Int.MaxValue.toLong - 2L).toInt
+
   /** Connected components over an undirected candidate-pair edge list via
     * iterative min-label propagation — the clustering step that turns
     * near-dup PAIRS into dedup GROUPS (keep the min-id doc per component,
@@ -1109,11 +1106,8 @@ object Dedup {
     // produced (comp = min reachable id) are exactly the loop's fixpoint,
     // pinned distributed-vs-local in the unit suite. At 100 TB corpus
     // edge lists exceed the threshold and take the iterative path
-    // unchanged (threshold via spark.graft.cc.localEdgeLimit, rows of the
-    // symmetrized list).
-    val localLimit = edges.sparkSession.conf
-      .getOption("spark.graft.cc.localEdgeLimit").map(_.toLong)
-      .getOrElse(200000L)
+    // unchanged (threshold [[localEdgeCap]], in rows of the symmetrized
+    // list).
     // PROBE-COLLECT gate (r14, guide §1.2): limit(n+1).collect() returns
     // the COMPLETE symmetrized edge list whenever it has ≤ n rows — the
     // fast path's checkpoint + count + collect (3 jobs per CC call, and
@@ -1121,7 +1115,7 @@ object Dedup {
     // churn. Above the limit the probe stops early (CollectLimit scans
     // partitions incrementally) and the iterative path checkpoints as
     // before.
-    val probeCap = math.min(localLimit, Int.MaxValue.toLong - 2L).toInt
+    val probeCap = localEdgeCap(edges.sparkSession)
     val probe = symPlan.limit(probeCap + 1).collect()
     if (probe.length <= probeCap) {
       System.err.println(s"[cc] local union-find over ${probe.length} edge rows")
@@ -1387,18 +1381,15 @@ object Dedup {
     // for e, one for lsub, a probe job inside the micro-CC and a
     // broadcast-collect job per hint, ~6 jobs of fixed overhead per
     // micro-batch for frames of a few hundred rows. Below the
-    // spark.graft.cc.localEdgeLimit threshold (same conf as the CC fast
-    // path; probe-collect, so an over-limit edge list stops early and
-    // takes the distributed path), the contraction + micro-CC now run on
-    // the driver in TWO jobs total: collect the batch edges, and collect
-    // the touched endpoints' labels (the one corpus scan this operator is
-    // allowed). Outputs are LocalRelations — identical rows (pinned in
+    // [[localEdgeCap]] threshold (the CC fast path's; probe-collect, so
+    // an over-limit edge list stops early and takes the distributed
+    // path), the contraction + micro-CC now run on the driver in TWO
+    // jobs total: collect the batch edges, and collect the touched
+    // endpoints' labels (the one corpus scan this operator is allowed).
+    // Outputs are LocalRelations — identical rows (pinned in
     // CCFastPathSpec / the oracle suite), and their downstream broadcasts
     // launch no collect job at all.
-    val localLimit = spark.conf
-      .getOption("spark.graft.cc.localEdgeLimit").map(_.toLong)
-      .getOrElse(200000L)
-    val cap = math.min(localLimit, Int.MaxValue.toLong - 2L).toInt
+    val cap = localEdgeCap(spark)
     val eProbe = ePlan.limit(cap + 1).collect()
     if (eProbe.length <= cap) {
       // distinct touched endpoints, sorted for deterministic output

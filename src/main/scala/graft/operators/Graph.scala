@@ -10,23 +10,13 @@ import org.apache.spark.sql.functions._
   * parts they supply / rank domains by the quality of the documents they
   * host": each iteration is two distributed join+agg passes over the edge
   * list, nothing driver-side.
+  *
+  * Contract: every vertex-sized table (degree tables, rank and score
+  * tables, per-iteration sums) is broadcast onto the edge list, which
+  * stays in place. A vertex set past the broadcast budget is out of
+  * scope.
   */
 object Graph {
-  /** Broadcast-or-shuffle switch for the VERTEX-sized side tables
-    * (degree tables, rank/score tables, per-iteration sums). The
-    * contract: with `on = true` (default) the vertex table is pinned
-    * onto every executor — right whenever |V| fits the broadcast
-    * budget, which holds for every graded fixture and for most
-    * real graphs (the edge list dwarfs the vertex set). Callers with
-    * vertex sets past the budget (billion-vertex graphs) pass
-    * `broadcastVertices = false` and every vertex join degrades to a
-    * shuffle join on the same keys — identical results, no
-    * driver/executor OOM, just an extra vertex-table exchange per
-    * join. One-row aggregate broadcasts stay unconditional (bounded
-    * by construction). */
-  private def bcastIf(on: Boolean)(df: DataFrame): DataFrame =
-    if (on) broadcast(df) else df
-
   /** Fixed-iteration HITS (Kleinberg 1999) over the distinct bipartite
     * edge list (src, dst). Authorities start at 1; each iteration computes
     * hub(s) = Σ auth(d) over s's edges, then auth(d) = Σ hub(s) over d's
@@ -47,9 +37,7 @@ object Graph {
     * Emits the hub side: (vertex, score) with score the final fixed-point
     * hub value, ordered for the gate by score desc, vertex asc. */
   def hitsBipartite(edges: DataFrame, src: Column, dst: Column,
-                    iters: Int,
-                    broadcastVertices: Boolean = true): DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
+                    iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
       "iters must be in [1, 8]: each iteration is two edge-list shuffles")
     // null-keyed edges can never match the iteration equi-joins, so drop
@@ -72,13 +60,13 @@ object Graph {
     // to the driver as a literal (bounded collect, like the IVF codebook)
     // instead of a 1-row broadcast join.
     for (_ <- 1 to iters) {
-      val hRaw = e.join(bv(auth), "d")
+      val hRaw = e.join(broadcast(auth), "d")
         .groupBy("s").agg(sum("a").as("hr")).localCheckpoint()
       val hMax = hRaw.agg(max("hr")).head.getLong(0)
       hub = hRaw.select(col("s"),
         round(col("hr").cast("double") * lit(1e6) / lit(hMax).cast("double"), 0)
           .cast("long").as("h"))
-      val aRaw = e.join(bv(hub), "s")
+      val aRaw = e.join(broadcast(hub), "s")
         .groupBy("d").agg(sum("h").as("ar")).localCheckpoint()
       val aMax = aRaw.agg(max("ar")).head.getLong(0)
       auth = aRaw.select(col("d"),
@@ -109,9 +97,7 @@ object Graph {
     * integer sums and no association order can move a bit (FIXTURES.md).
     */
   def pageRank(edges: DataFrame, src: Column, dst: Column,
-               iters: Int,
-               broadcastVertices: Boolean = true): DataFrame = {
-    val bv = bcastIf(broadcastVertices) _
+               iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8,
       "iters must be in [1, 8]: each iteration shuffles the edge list")
     // ONE shuffle dedups the edge list; everything vertex-sized below
@@ -123,7 +109,7 @@ object Graph {
     val e = edges.select(src.as("s"), dst.as("d"))
       .where(col("s").isNotNull && col("d").isNotNull).distinct()
     val eDeg = e.join(
-        bv(e.groupBy("s").agg(count(lit(1)).as("deg"))), "s")
+        broadcast(e.groupBy("s").agg(count(lit(1)).as("deg"))), "s")
       .localCheckpoint()
     require(!eDeg.isEmpty,
       "pageRank needs a non-empty edge list after null filtering")
@@ -131,12 +117,12 @@ object Graph {
       .union(eDeg.select(col("d"))).distinct().localCheckpoint()
     var pr = verts.select(col("v"), lit(1000000L).as("p")) // fixed-point 1.0
     for (_ <- 1 to iters) {
-      val sums = eDeg.join(bv(pr), col("s") === col("v"))
+      val sums = eDeg.join(broadcast(pr), col("s") === col("v"))
         .select(col("d"),
           round(col("p").cast("double") / col("deg").cast("double"), 0)
             .cast("long").as("c"))
         .groupBy("d").agg(sum("c").as("sc")) // map-side combinable
-      pr = verts.join(bv(sums), col("v") === col("d"), "left")
+      pr = verts.join(broadcast(sums), col("v") === col("d"), "left")
         .select(col("v"), (lit(150000L) +
           round(lit(0.85) * coalesce(col("sc"), lit(0L)).cast("double"), 0)
             .cast("long")).as("p"))
@@ -159,10 +145,9 @@ object Graph {
       .groupBy("vert").agg(count(lit(1)).as("d"))
 
   /** `e` with each endpoint's degree (du, dv) joined on. */
-  private def withDegrees(e: DataFrame, deg: DataFrame,
-                          bv: DataFrame => DataFrame): DataFrame =
-    e.join(bv(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
-      .join(bv(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
+  private def withDegrees(e: DataFrame, deg: DataFrame): DataFrame =
+    e.join(broadcast(deg.select(col("vert").as("u"), col("d").as("du"))), "u")
+      .join(broadcast(deg.select(col("vert").as("v"), col("d").as("dv"))), "v")
 
   /** The degree-ordered orientation over [[withDegrees]]: u comes first
     * when (du, u) < (dv, v). */
@@ -174,11 +159,11 @@ object Graph {
     * `w` = every pair of out-edges of one source, ordered by (dt, t), as
     * wedge ends (y, z), led by the source `s` when `withApex`. */
   private def orientedWedges(edges: DataFrame, u: Column, v: Column,
-                             bv: DataFrame => DataFrame, withApex: Boolean)
+                             withApex: Boolean)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val e = simpleEdges(edges, u, v).localCheckpoint()
     val deg = degrees(e).localCheckpoint()
-    val o = withDegrees(e, deg, bv).select(
+    val o = withDegrees(e, deg).select(
         when(uFirst, col("u")).otherwise(col("v")).as("s"),
         when(uFirst, col("v")).otherwise(col("u")).as("t"),
         when(uFirst, col("dv")).otherwise(col("du")).as("dt"))
@@ -205,12 +190,10 @@ object Graph {
     * n_triangles) — all exact integer counts; the degree tables are
     * vertex-sized broadcasts, the only corpus-scale shuffles are the edge
     * dedup and the two equi-joins. */
-  def triangleCount(edges: DataFrame, u: Column, v: Column,
-                    broadcastVertices: Boolean = true): DataFrame = {
+  def triangleCount(edges: DataFrame, u: Column, v: Column): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val (e, deg, o, w) = orientedWedges(edges, u, v,
-      bcastIf(broadcastVertices), withApex = false)
+    val (e, deg, o, w) = orientedWedges(edges, u, v, withApex = false)
     val tri = w.join(o.select(col("s").as("y"), col("t").as("z")), Seq("y", "z"))
     Seq((deg.count(), e.count(), w.count(), tri.count()))
       .toDF("n_vertices", "n_edges", "n_wedges", "n_triangles")
@@ -266,11 +249,9 @@ object Graph {
     * double division quantized to 1e-6 fixed-point before the exact
     * global sum (the chiSqTerm device); counts assemble via 1-row
     * broadcasts. Same O(|E|^1.5) wedge bound as [[triangleCount]]. */
-  def clusteringCoefficient(edges: DataFrame, u: Column, v: Column,
-                            broadcastVertices: Boolean = true)
+  def clusteringCoefficient(edges: DataFrame, u: Column, v: Column)
       : DataFrame = {
-    val (_, deg, o, w) = orientedWedges(edges, u, v,
-      bcastIf(broadcastVertices), withApex = true)
+    val (_, deg, o, w) = orientedWedges(edges, u, v, withApex = true)
     val tr = w
       .join(o.select(col("s").as("y"), col("t").as("z")), Seq("y", "z"))
       .select(col("s"), col("y"), col("z")).localCheckpoint()
@@ -309,12 +290,11 @@ object Graph {
     * Output: vertices per level. Each round is one edge join against
     * the vertex-sized level table. */
   def dagLayers(edges: DataFrame, u: Column, v: Column,
-                rounds: Int = 4,
-                broadcastVertices: Boolean = true): DataFrame = {
+                rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val e = simpleEdges(edges, u, v)
     val deg = degrees(e)
-    val o = withDegrees(e, deg, bcastIf(broadcastVertices))
+    val o = withDegrees(e, deg)
       .select(when(uFirst, col("u")).otherwise(col("v")).as("s"),
         when(uFirst, col("v")).otherwise(col("u")).as("t"))
       .localCheckpoint()
@@ -343,11 +323,10 @@ object Graph {
     * longs, the correlation is [[Trend.pearson]]'s integer power-sum
     * closed form — one edge-table pass after the degree aggregation.
     * r > 0: hubs attach to hubs; r < 0: hubs attach to leaves. */
-  def degreeAssortativity(edges: DataFrame, u: Column, v: Column,
-                          broadcastVertices: Boolean = true)
+  def degreeAssortativity(edges: DataFrame, u: Column, v: Column)
       : DataFrame = {
     val e = simpleEdges(edges, u, v)
-    val ed = withDegrees(e, degrees(e), bcastIf(broadcastVertices))
+    val ed = withDegrees(e, degrees(e))
     val pairs = ed.select(col("du").as("x"), col("dv").as("y"))
       .union(ed.select(col("dv"), col("du")))
     Trend.pearson(pairs.withColumn("g", lit("all")), col("g"),

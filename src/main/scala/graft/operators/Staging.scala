@@ -57,8 +57,8 @@ object Staging {
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
   }
 
-  /** The bucket count of a table staged from `df` when the caller names
-    * none: ceil(estimated bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+  /** The bucket count of a [[graft.VStage]] generation staged from `df`:
+    * ceil(estimated bytes / `spark.sql.adaptive.advisoryPartitionSizeInBytes`)
     * within [1, shuffle partitions]. The estimate is the optimized plan's
     * Catalyst statistic, so sizing starts no job. Bucket count is write
     * parallelism (one task and one file per bucket) and the task count

@@ -33,10 +33,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[Staging.appendBucketed]] semantics: new bucket files only, under
   * the live spec), so the LSM trade is unchanged — this object only
   * replaces the unsafe re-stage-over-the-live-table compaction leg.
-  * Unless the caller names a bucket count, [[init]] and [[compact]] size
-  * each generation to its data ([[Staging.sizedBuckets]]). Kill-mid-compaction
-  * drills are pinned in the unit suite for both the LSH dedup index
-  * and the IVF recluster (q373 oracle-gates the recovery path).
+  * [[init]] and [[compact]] size each generation to its data
+  * ([[Staging.sizedBuckets]]). Kill-mid-compaction drills are pinned in
+  * the unit suite for both the LSH dedup index and the IVF recluster
+  * (q373 oracle-gates the recovery path).
   */
 object VStage {
   private def ptrFile(spark: SparkSession, base: String): java.io.File =
@@ -110,12 +110,10 @@ object VStage {
     * generation 0, commit the pointer. (Crash before the commit leaves
     * no pointer → recover drops the partial g0 → `exists` is false —
     * the caller's bootstrap re-runs, same as stageBucketed today.) */
-  def init(df: DataFrame, base: String, key: String,
-           buckets: Option[Int] = None): Unit = {
+  def init(df: DataFrame, base: String, key: String): Unit = {
     val spark = df.sparkSession
     destroy(spark, base)
-    Staging.stageBucketed(df, genTable(base, 0), key,
-      buckets.getOrElse(Staging.sizedBuckets(df)))
+    Staging.stageBucketed(df, genTable(base, 0), key, Staging.sizedBuckets(df))
     commitPtr(spark, base, 0)
   }
 
@@ -146,11 +144,10 @@ object VStage {
     * `"staged"` (new generation fully written, pointer NOT yet moved —
     * a crash here must leave the OLD generation serving) and at
     * `"committed"` (pointer moved, old generation not yet dropped — a
-    * crash here must leave the NEW generation serving). Sized by
-    * default, a compaction re-sizes an index its appends have grown. */
+    * crash here must leave the NEW generation serving). A compaction
+    * re-sizes an index its appends have grown. */
   def compact(spark: SparkSession, base: String, key: String,
               rebuild: DataFrame => DataFrame,
-              buckets: Option[Int] = None,
               onStep: String => Unit = _ => ()): Unit = {
     recover(spark, base)
     val cur = currentGen(spark, base)
@@ -165,7 +162,7 @@ object VStage {
     spark.catalog.refreshTable(genTable(base, cur))
     val rebuilt = rebuild(spark.table(genTable(base, cur)))
     Staging.stageBucketed(rebuilt, genTable(base, next), key,
-      buckets.getOrElse(Staging.sizedBuckets(rebuilt)))
+      Staging.sizedBuckets(rebuilt))
     onStep("staged")
     commitPtr(spark, base, next)
     onStep("committed")

@@ -99,31 +99,6 @@ object EventStreams {
     spark.table(name)
   }
 
-  /** The stream-stream join sinks. `sink = "memory"` (default) drains
-    * through the in-memory table the oracle gate reads — right at
-    * fixture SF, but the memory sink COLLECTS every output row to the
-    * driver, and the joins' output grows with signup×click density per
-    * time bucket (the sf1 probe measured a 10× corpus overflowing
-    * spark.driver.maxResultSize). `sink = "parquet"` spills each
-    * micro-batch to a fresh temp dir and returns the read-back table —
-    * the production shape (executors write, driver never holds rows),
-    * identical result set (pinned). */
-  private def pairsSink(spark: SparkSession, joined: DataFrame,
-                        name: String, sink: String): DataFrame = {
-    require(sink == "memory" || sink == "parquet",
-      s"unknown sink $sink (memory | parquet)")
-    if (sink == "memory") drain(spark, name, "append")(joined)
-    else {
-      val out = java.nio.file.Files
-        .createTempDirectory(s"${name}_spill").toString + "/pairs"
-      withStreamPartitions(spark) {
-        AvailableNow.run(joined, name = Some(name), batch = Some(
-          (batch: DataFrame, _: Long) => batch.write.mode("append").parquet(out)))
-      }
-      spark.read.parquet(out)
-    }
-  }
-
   /** Event-time tumbling 1-hour window aggregation with a 1-hour watermark.
     * State is keyed by (window, event_type) — bounded by the watermark, so
     * it holds at any scale; the shuffle key matches the aggregation key. */
@@ -193,10 +168,12 @@ object EventStreams {
     * bounded by watermark + interval, not stream length. On the bounded
     * fixture the inner join emits exactly the batch pair set (watermarks
     * gate state eviction, not inner-join emission); pinned in the suite.
-    * `sink`: see [[pairsSink]]. */
+    * The pairs drain into the memory table like every other runner here,
+    * so the driver holds every output row: the join's output grows with
+    * signup×click density per hour bucket, and a corpus whose pair set
+    * does not fit `spark.driver.maxResultSize` is out of scope. */
   def runConversionJoin(spark: SparkSession, dir: String,
-                        name: String = "graft_stream_conv",
-                        sink: String = "memory"): DataFrame = {
+                        name: String = "graft_stream_conv"): DataFrame = {
     val bkt = 3600000000L
     val signups = joinSide(spark, dir, "signup", "signup_id", "s_ts")
       .withColumn("bucket", explode(sequence(
@@ -207,7 +184,7 @@ object EventStreams {
     val joined = signups.join(clicks, Seq("bucket"))
       .where(expr("c_ts >= s_ts AND c_ts < s_ts + INTERVAL 1 HOUR"))
       .select("signup_id", "click_id")
-    pairsSink(spark, joined, name, sink)
+    drain(spark, name, "append")(joined)
   }
 
   /** Stream-stream LEFT OUTER interval join — [[runConversionJoin]]'s
@@ -233,10 +210,10 @@ object EventStreams {
     * ≤ the final global watermark min(max s_ts, max c_ts) − 2 h; later
     * signups stay in state and do NOT emit (the q71 closed-before-
     * watermark convention). NULL click_id surfaces as −1 so both
-    * engines order identically. `sink`: see [[pairsSink]]. */
+    * engines order identically. Drains like [[runConversionJoin]]. */
   def runConversionJoinOuter(spark: SparkSession, dir: String,
-                             name: String = "graft_stream_conv_outer",
-                             sink: String = "memory"): DataFrame = {
+                             name: String = "graft_stream_conv_outer")
+      : DataFrame = {
     val bkt = 3600000000L
     val signups = joinSide(spark, dir, "signup", "signup_id", "s_ts")
       .withColumn("s_bucket",
@@ -251,7 +228,7 @@ object EventStreams {
         "leftOuter")
       .select(col("signup_id"),
         coalesce(col("click_id"), lit(-1L)).as("click_id"))
-    pairsSink(spark, joined, name, sink)
+    drain(spark, name, "append")(joined)
   }
 
   /** Streaming exact dedup: watermark-bounded state keyed by the dedup

@@ -86,34 +86,31 @@ object IngestStreams {
     * unless `maxFilesPerTrigger` is None), then terminates — so two runs
     * with a day spooled in between ARE a driver restart: nothing carries
     * over but the checkpoint and the durable state.
-    * `killBetweenDays = false` spools everything and runs ONE streaming
-    * query (the production shape); `true` restarts the stream after
-    * every day — the recovery drill the durability pins compare against
-    * the uninterrupted run. The finer controls (SoakSpec's 10-day soak):
-    * `killAfterDays` restarts the stream after the NAMED days only
-    * (kills at chosen points, ignored when `killBetweenDays` already
-    * restarts everywhere); `afterSegment(lastDay)` runs between stream
-    * incarnations (the mid-run index-compaction hook — compaction
-    * between segments is exactly where a production job schedules it);
+    * With `killAfterDays` empty it spools everything and runs ONE
+    * streaming query (the production shape); otherwise it restarts the
+    * stream after each NAMED day — the recovery drill the durability
+    * pins compare against the uninterrupted run (every day, or chosen
+    * points of SoakSpec's 10-day soak). `afterSegment(lastDay)` runs
+    * between stream incarnations (the mid-run index-compaction hook —
+    * compaction between segments is exactly where a production job
+    * schedules it);
     * `maxFilesPerTrigger = None` lets one micro-batch carry several
     * spooled days (the q364 coarser-batching pin — the order-dependent
     * loops ASSERT one file per trigger instead, see
     * [[assertSingleFile]]). */
   private def driveDays(spark: SparkSession, name: String,
-                        days: Seq[DataFrame], killBetweenDays: Boolean,
+                        days: Seq[DataFrame],
                         body: (DataFrame, Long) => Unit,
-                        killAfterDays: Set[Int] = Set.empty,
+                        killAfterDays: Set[Int],
                         afterSegment: Int => Unit = _ => (),
                         maxFilesPerTrigger: Option[Int] = Some(1)): Unit = {
     val spool = new java.io.File(s"target/ingest_spool_$name")
     val ckpt = new java.io.File(s"target/ingest_ckpt_$name")
     Seq(spool, ckpt).foreach(Staging.deleteRecursively)
-    val kills =
-      if (killBetweenDays) days.indices.map(_ + 1).toSet else killAfterDays
     days.zipWithIndex.foreach { case (d, i0) =>
       val i = i0 + 1
       spoolDay(spool, i, d)
-      if (kills(i) || i == days.size) {
+      if (killAfterDays(i) || i == days.size) {
         val src = spark.readStream.schema(days.head.schema)
         maxFilesPerTrigger.foreach(n =>
           src.option("maxFilesPerTrigger", n.toString))
@@ -202,8 +199,8 @@ object IngestStreams {
   private def lshLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, marker: Option[String],
       ordered: Boolean, bootstrap: Option[DataFrame => Unit],
-      killBetweenDays: Boolean, killAfterDays: Set[Int],
-      afterSegment: Int => Unit, maxFilesPerTrigger: Option[Int])
+      killAfterDays: Set[Int], afterSegment: Int => Unit,
+      maxFilesPerTrigger: Option[Int])
       (step: Tick => (DataFrame, () => Unit)): Unit = {
     val idx = name + "_idx"
     VStage.init(signatures(corpus), idx, "lsh_key")
@@ -229,8 +226,8 @@ object IngestStreams {
       }
       ()
     }
-    driveDays(spark, name, days, killBetweenDays, body, killAfterDays,
-      afterSegment, maxFilesPerTrigger)
+    driveDays(spark, name, days, body, killAfterDays, afterSegment,
+      maxFilesPerTrigger)
   }
 
   /** The dedup-ingest loop behind q358/q370/q377/q379: stage the PREPPED
@@ -244,15 +241,15 @@ object IngestStreams {
     * bucket) — content-preserving, so the survivor semantics are
     * unchanged (q377 oracle-gates exactly that under live ingest). */
   private def ingestDedupLoop(spark: SparkSession, dir: String,
-      name: String, cut0: Long, cut1: Long, killBetweenDays: Boolean,
+      name: String, cut0: Long, cut1: Long, killAfterDays: Set[Int],
       prep: DataFrame => DataFrame,
       compactAfterDay: Option[Int] = None): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
     val outDir = new java.io.File(s"target/ingest_out_$name")
     Staging.deleteRecursively(outDir)
     lshLoop(spark, prep(corpus), days, name, marker = None,
-      ordered = false, bootstrap = None, killBetweenDays,
-      killAfterDays = compactAfterDay.toSet,
+      ordered = false, bootstrap = None,
+      killAfterDays = killAfterDays ++ compactAfterDay.toSet,
       afterSegment = day =>
         if (compactAfterDay.contains(day))
           VStage.compact(spark, name + "_idx", "lsh_key",
@@ -279,8 +276,8 @@ object IngestStreams {
     * semantics, which the oracle replays. */
   def runIngestDedup(spark: SparkSession, dir: String, name: String,
                      cut0: Long = 300, cut1: Long = 450,
-                     killBetweenDays: Boolean = false): DataFrame =
-    ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
+                     killAfterDays: Set[Int] = Set.empty): DataFrame =
+    ingestDedupLoop(spark, dir, name, cut0, cut1, killAfterDays,
       identity)
 
   /** q377: [[runIngestDedup]] with the LSH index COMPACTION run
@@ -294,8 +291,8 @@ object IngestStreams {
     * stream). */
   def runIngestDedupCompact(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 450,
-                            killBetweenDays: Boolean = false): DataFrame =
-    ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
+                            killAfterDays: Set[Int] = Set.empty): DataFrame =
+    ingestDedupLoop(spark, dir, name, cut0, cut1, killAfterDays,
       identity, compactAfterDay = Some(1))
 
   /** The FULL training-prep front under the stream (q370): q358's
@@ -307,8 +304,8 @@ object IngestStreams {
     * gated two-day sequential chain. */
   def runIngestPrep(spark: SparkSession, dir: String, name: String,
                     cut0: Long = 300, cut1: Long = 450,
-                    killBetweenDays: Boolean = false): DataFrame =
-    ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
+                    killAfterDays: Set[Int] = Set.empty): DataFrame =
+    ingestDedupLoop(spark, dir, name, cut0, cut1, killAfterDays,
       df => Dedup.exact(gate(df), col("text"), col("doc_id")))
 
   /** The q49/q351 language + quality gate. */
@@ -333,7 +330,7 @@ object IngestStreams {
     * chain. */
   def runIngestPrepDecon(spark: SparkSession, dir: String, name: String,
                          cut0: Long = 300, cut1: Long = 450,
-                         killBetweenDays: Boolean = false): DataFrame = {
+                         killAfterDays: Set[Int] = Set.empty): DataFrame = {
     // the benchmark gram set builds ONCE, before the stream starts — a
     // benchmark is immutable during ingest, so re-deriving its distinct
     // 5-gram hashes per micro-batch (the pre-r13c shape) paid an
@@ -344,7 +341,7 @@ object IngestStreams {
     val bg = graft.Decontaminate.benchGramSet(
       Tables.t(spark, dir, "documents").where(col("doc_id") % 25 === 0),
       col("text"), n = 5).localCheckpoint()
-    ingestDedupLoop(spark, dir, name, cut0, cut1, killBetweenDays,
+    ingestDedupLoop(spark, dir, name, cut0, cut1, killAfterDays,
       df => {
         val ss = df.sparkSession
         Dedup.exact(
@@ -374,10 +371,10 @@ object IngestStreams {
     * q385's inline chain over the full corpus. */
   def runLexicalIngest(spark: SparkSession, dir: String, name: String,
                        cut0: Long = 300, cut1: Long = 450,
-                       killBetweenDays: Boolean = false): DataFrame = {
+                       killAfterDays: Set[Int] = Set.empty): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
     lexicalLoop(spark, corpus, days, name, maintainStats = false,
-      killBetweenDays)
+      killAfterDays)
   }
 
   /** [[runLexicalIngest]] / [[runLexicalIngestStats]]'s core over
@@ -390,7 +387,6 @@ object IngestStreams {
     * function. */
   private[graft] def lexicalLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, maintainStats: Boolean,
-      killBetweenDays: Boolean,
       killAfterDays: Set[Int] = Set.empty,
       compactAfterDay: Option[Int] = None)
       : DataFrame = {
@@ -406,7 +402,7 @@ object IngestStreams {
     stage(corpus, -1L, VStage.init(_, _, "term"))
     val body = (batch: DataFrame, bid: Long) =>
       stage(batch, bid, VStage.append(_, _))
-    driveDays(spark, name, days, killBetweenDays, body,
+    driveDays(spark, name, days, body,
       // postings compaction runs BETWEEN stream segments: collapse the
       // exact-duplicate rows replayed appends left and re-bucket one
       // file per term bucket — content ≡ collapsePostings, so serving
@@ -453,10 +449,10 @@ object IngestStreams {
     * stats ≡ the inline chain over the full corpus. */
   def runLexicalIngestStats(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 450,
-                            killBetweenDays: Boolean = false): DataFrame = {
+                            killAfterDays: Set[Int] = Set.empty): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
     lexicalLoop(spark, corpus, days, name, maintainStats = true,
-      killBetweenDays)
+      killAfterDays)
   }
 
   /** One day's stats delta from its postings: per-term distinct-doc
@@ -511,7 +507,7 @@ object IngestStreams {
     * serving layer must switch codebooks atomically with the index,
     * which is exactly what the returned centroids are). */
   private[graft] def annLoop(spark: SparkSession, corpusVecs: DataFrame,
-      days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
+      days: Seq[DataFrame], name: String,
       reclusterAfterDay: Option[Int] = None,
       killAfterDays: Set[Int] = Set.empty)
       : Seq[(Long, Array[Double])] = {
@@ -535,7 +531,7 @@ object IngestStreams {
         col("vec_id"), cents), idx)
       ()
     }
-    driveDays(spark, name, days, killBetweenDays, body,
+    driveDays(spark, name, days, body,
       // the recluster runs BETWEEN stream segments, so its day must be
       // a segment boundary
       killAfterDays = killAfterDays ++ reclusterAfterDay.toSet,
@@ -548,8 +544,8 @@ object IngestStreams {
 
   def runAnnIngest(spark: SparkSession, dir: String, name: String,
                    cut0: Long = 300, cut1: Long = 400,
-                   killBetweenDays: Boolean = false): DataFrame =
-    annIngest(spark, dir, name, cut0, cut1, killBetweenDays,
+                   killAfterDays: Set[Int] = Set.empty): DataFrame =
+    annIngest(spark, dir, name, cut0, cut1, killAfterDays,
       reclusterAfterDay = None)
 
   /** q376: [[runAnnIngest]] with the RECLUSTER COMPACTION run
@@ -566,18 +562,18 @@ object IngestStreams {
     * index. */
   def runAnnIngestRecluster(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 400,
-                            killBetweenDays: Boolean = false): DataFrame =
-    annIngest(spark, dir, name, cut0, cut1, killBetweenDays,
+                            killAfterDays: Set[Int] = Set.empty): DataFrame =
+    annIngest(spark, dir, name, cut0, cut1, killAfterDays,
       reclusterAfterDay = Some(1))
 
   private def annIngest(spark: SparkSession, dir: String, name: String,
-                        cut0: Long, cut1: Long, killBetweenDays: Boolean,
+                        cut0: Long, cut1: Long, killAfterDays: Set[Int],
                         reclusterAfterDay: Option[Int]): DataFrame = {
     val e = Tables.t(spark, dir, "embeddings")
     val idx = name + "_idx"
     val (corpus, days) = slices(e, "vec_id", Seq(cut0, cut1))
-    val cents = annLoop(spark, corpus, days, name, killBetweenDays,
-      reclusterAfterDay = reclusterAfterDay)
+    val cents = annLoop(spark, corpus, days, name,
+      reclusterAfterDay = reclusterAfterDay, killAfterDays = killAfterDays)
     // the appends ran through the CLONED batch sessions; refresh = true
     // drops the outer session's cached relation so the serve re-lists
     graft.Similarity.ivfKnnJoinIndex(VStage.load(spark, idx, refresh = true),
@@ -618,7 +614,7 @@ object IngestStreams {
     * measured at 1×/10×/100× in PLANS.md §r12 streaming loops at 100×).
     * Returns the state path. */
   private[graft] def clusterLoop(spark: SparkSession, corpus: DataFrame,
-      days: Seq[DataFrame], name: String, killBetweenDays: Boolean,
+      days: Seq[DataFrame], name: String,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
       maxFilesPerTrigger: Option[Int] = Some(1))
@@ -626,8 +622,7 @@ object IngestStreams {
     val statePath = s"target/ingest_state_$name"
     lshLoop(spark, corpus, days, name, marker = Some(statePath),
       ordered = false, bootstrap = Some(eagerBootstrap(statePath)),
-      killBetweenDays, killAfterDays, afterSegment,
-      maxFilesPerTrigger) { t =>
+      killAfterDays, afterSegment, maxFilesPerTrigger) { t =>
       // the edges materialize (checkpoint) inside ccIncremental
       val next = Dedup.ccIncremental(DurableState.load(t.ss, statePath),
         Dedup.batchIngestEdges(t.batch, t.index, col("text"),
@@ -639,9 +634,9 @@ object IngestStreams {
 
   def runClusterMaintenance(spark: SparkSession, dir: String, name: String,
                             cut0: Long = 300, cut1: Long = 450,
-                            killBetweenDays: Boolean = false): DataFrame = {
+                            killAfterDays: Set[Int] = Set.empty): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
-    val statePath = clusterLoop(spark, corpus, days, name, killBetweenDays)
+    val statePath = clusterLoop(spark, corpus, days, name, killAfterDays)
     clusterCensus(DurableState.load(spark, statePath), cut0)
   }
 
@@ -810,7 +805,6 @@ object IngestStreams {
     * PLANS.md §r12 streaming loops at 100×. */
   private[graft] def clusterLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String,
-      killBetweenDays: Boolean,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => ()): String = {
@@ -818,8 +812,7 @@ object IngestStreams {
     lshLoop(spark, corpus, days, name, marker = Some(statePath + "_patch"),
       ordered = false,
       bootstrap = Some(patchLogBootstrap(spark, statePath, "_labels")),
-      killBetweenDays, killAfterDays, afterSegment,
-      maxFilesPerTrigger = Some(1)) { t =>
+      killAfterDays, afterSegment, maxFilesPerTrigger = Some(1)) { t =>
       // patch + fresh labels checkpoint inside ccIncrementalPatch (via
       // ccContract)
       val (patch, freshLab) = Dedup.ccIncrementalPatch(
@@ -838,9 +831,9 @@ object IngestStreams {
     * independent of corpus size. */
   def runClusterPatchLog(spark: SparkSession, dir: String, name: String,
                          cut0: Long = 300, cut1: Long = 450,
-                         killBetweenDays: Boolean = false): DataFrame =
+                         killAfterDays: Set[Int] = Set.empty): DataFrame =
     runClusterPatchLogMulti(spark, dir, name, Seq(cut0, cut1),
-      killBetweenDays = killBetweenDays)
+      killAfterDays = killAfterDays)
 
   /** [[runClusterPatchLog]] over an ARBITRARY arrival-day chain (q374):
     * `cuts` bound the corpus (`< cuts.head`) and each day
@@ -854,12 +847,12 @@ object IngestStreams {
   def runClusterPatchLogMulti(spark: SparkSession, dir: String,
                               name: String, cuts: Seq[Long],
                               foldFactor: Double = 1.0,
-                              killBetweenDays: Boolean = false): DataFrame = {
+                              killAfterDays: Set[Int] = Set.empty): DataFrame = {
     require(cuts.nonEmpty, "need at least one cut")
     val (corpus, days) =
       slices(Tables.t(spark, dir, "documents"), "doc_id", cuts)
     val statePath = clusterLoopDeferred(spark, corpus, days, name,
-      killBetweenDays, foldFactor = foldFactor)
+      foldFactor = foldFactor, killAfterDays = killAfterDays)
     clusterCensus(patchLogLabels(spark, statePath), cuts.head)
   }
 
@@ -904,7 +897,6 @@ object IngestStreams {
     * Returns the state path. */
   private[graft] def splitLoop(spark: SparkSession, corpus: DataFrame,
       days: Seq[DataFrame], name: String, salt: String,
-      killBetweenDays: Boolean,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => (),
       maxFilesPerTrigger: Option[Int] = Some(1)): String = {
@@ -913,8 +905,7 @@ object IngestStreams {
       ordered = true,
       bootstrap = Some(l0 =>
         eagerBootstrap(statePath)(day0Splits(corpus, l0, salt))),
-      killBetweenDays, killAfterDays, afterSegment,
-      maxFilesPerTrigger) { t =>
+      killAfterDays, afterSegment, maxFilesPerTrigger) { t =>
       val next = Dedup.splitStableAssign(DurableState.load(t.ss, statePath),
         t.index, t.batch, col("text"), col("doc_id"), splitOf(salt),
         scope = t.scope)
@@ -926,10 +917,10 @@ object IngestStreams {
   def runSplitStableIngest(spark: SparkSession, dir: String, name: String,
                            cut0: Long = 300, cut1: Long = 450,
                            salt: String = "sss",
-                           killBetweenDays: Boolean = false): DataFrame = {
+                           killAfterDays: Set[Int] = Set.empty): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
     val statePath = splitLoop(spark, corpus, days, name, salt,
-      killBetweenDays)
+      killAfterDays)
     splitCensus(spark, DurableState.load(spark, statePath))
   }
 
@@ -970,7 +961,6 @@ object IngestStreams {
     * Returns the state path. */
   private[graft] def splitLoopDeferred(spark: SparkSession,
       corpus: DataFrame, days: Seq[DataFrame], name: String, salt: String,
-      killBetweenDays: Boolean,
       foldFactor: Double = 1.0,
       killAfterDays: Set[Int] = Set.empty,
       afterSegment: Int => Unit = _ => ()): String = {
@@ -979,8 +969,7 @@ object IngestStreams {
       ordered = true,
       bootstrap = Some(l0 => patchLogBootstrap(spark, statePath,
         "_assign")(day0Splits(corpus, l0, salt))),
-      killBetweenDays, killAfterDays, afterSegment,
-      maxFilesPerTrigger = Some(1)) { t =>
+      killAfterDays, afterSegment, maxFilesPerTrigger = Some(1)) { t =>
       val (patch, newRows) = Dedup.splitStableAssignPatch(
         patchLogAssign(t.ss, statePath), t.index, t.batch, col("text"),
         col("doc_id"), splitOf(salt), scope = t.scope)
@@ -993,10 +982,10 @@ object IngestStreams {
   def runSplitStablePatchLog(spark: SparkSession, dir: String, name: String,
                              cut0: Long = 300, cut1: Long = 450,
                              salt: String = "sss",
-                             killBetweenDays: Boolean = false): DataFrame = {
+                             killAfterDays: Set[Int] = Set.empty): DataFrame = {
     val (corpus, days) = docDays(spark, dir, cut0, cut1)
     val statePath = splitLoopDeferred(spark, corpus, days, name, salt,
-      killBetweenDays)
+      killAfterDays = killAfterDays)
     splitCensus(spark, patchLogAssign(spark, statePath))
   }
 }

@@ -22,12 +22,8 @@ class BucketSizingSpec extends SparkSpec {
       .bucketSpec.get.numBuckets
 
   /** `body` run with the advisory partition size at `bytes`. */
-  private def withAdvisory[T](bytes: BigInt)(body: => T): T = {
-    val prev = spark.conf.getOption(advisoryKey)
-    spark.conf.set(advisoryKey, bytes.toString)
-    try body
-    finally prev.fold(spark.conf.unset(advisoryKey))(spark.conf.set(advisoryKey, _))
-  }
+  private def withAdvisory[T](bytes: BigInt)(body: => T): T =
+    withConfs(advisoryKey -> bytes.toString)(body)
 
   test("sizedBuckets: a tiny frame gets 1 bucket, an estimate above N " +
       "advisory sizes gets min(N, shuffle partitions), and a " +

@@ -63,20 +63,6 @@ class CleaningDeriveSpec extends SparkSpec {
     assert(math.abs(r.head - (1.0 - 2.5) / 1.5) < 1e-12)
   }
 
-  test("robust approx path tracks the exact path (100 TB percentile swap)") {
-    val df = Tables.t(spark, sf, "customer").select("c_custkey", "c_acctbal")
-    val exact = Normalize.robust(df, Seq("c_acctbal"))
-      .select("c_custkey", "c_acctbal_norm")
-    val approx = Normalize.robust(df, Seq("c_acctbal"), approx = true)
-      .select("c_custkey", "c_acctbal_norm")
-    val joined = exact.withColumnRenamed("c_acctbal_norm", "e")
-      .join(approx.withColumnRenamed("c_acctbal_norm", "a"), "c_custkey")
-    val maxDiff = joined.agg(org.apache.spark.sql.functions.max(
-      org.apache.spark.sql.functions.abs(org.apache.spark.sql.functions.col("e")
-        - org.apache.spark.sql.functions.col("a")))).collect().head.getDouble(0)
-    assert(maxDiff < 0.05, s"approx robust diverged: $maxDiff")
-  }
-
   test("SQL-registered native functions evaluate (graft_dot, graft_fingerprint)") {
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val r = spark.sql(

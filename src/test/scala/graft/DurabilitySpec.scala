@@ -67,7 +67,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_kr364_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runClusterMaintenance(
       spark, sf, "t_kr364_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === uninterrupted)
     assert(uninterrupted.nonEmpty)
   }
@@ -79,7 +79,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_kr365_u", cut0 = 200, cut1 = 350, salt = "krs"))
     val resumed = got(IngestStreams.runSplitStableIngest(
       spark, sf, "t_kr365_k", cut0 = 200, cut1 = 350, salt = "krs",
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === uninterrupted)
     // the pin is only meaningful if day 2 actually inherited through
     // day-1 state: some new docs must exist in the census
@@ -92,7 +92,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_kr358_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runIngestDedup(
       spark, sf, "t_kr358_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === uninterrupted)
     assert(uninterrupted.count(_.head == 2) > 0)
   }
@@ -107,7 +107,7 @@ class DurabilitySpec extends SparkSpec {
     assert(deferred === eager)
     val resumed = got(IngestStreams.runClusterPatchLog(
       spark, sf, "t_pl_kr", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === eager)
     // the patch map must actually be in play for these pins to mean
     // anything: some label moved after day 0
@@ -137,7 +137,7 @@ class DurabilitySpec extends SparkSpec {
     assert(deferred === eager)
     val resumed = got(IngestStreams.runSplitStablePatchLog(
       spark, sf, "t_sp_kr", cut0 = 200, cut1 = 350, salt = "spp",
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === eager)
     val statePath = "target/ingest_state_t_sp_def"
     assert(graft.streaming.DurableState
@@ -218,7 +218,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_dec_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runIngestPrepDecon(
       spark, sf, "t_dec_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === decon)
     assert(decon.nonEmpty)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -243,7 +243,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_lex_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runLexicalIngest(
       spark, sf, "t_lex_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === plain)
     assert(plain.nonEmpty)
     // the replay hazard pinned both ways on a hand-duplicated index
@@ -280,7 +280,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_lexst_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runLexicalIngestStats(
       spark, sf, "t_lexst_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(plain === recomputed) // the q386 staleness tension, resolved
     assert(resumed === plain)
     assert(plain.nonEmpty)
@@ -346,10 +346,9 @@ class DurabilitySpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(1)).as("n"))
       .orderBy("comp").collect().toSeq.map(_.toSeq)
     val perDay = census(IngestStreams.clusterLoop(spark, corpus, days,
-      "t_mfb_perday", killBetweenDays = false))
+      "t_mfb_perday"))
     val oneBatch = census(IngestStreams.clusterLoop(spark, corpus, days,
-      "t_mfb_onebatch", killBetweenDays = false,
-      maxFilesPerTrigger = None))
+      "t_mfb_onebatch", maxFilesPerTrigger = None))
     assert(oneBatch === perDay)
     assert(perDay.nonEmpty)
   }
@@ -362,8 +361,7 @@ class DurabilitySpec extends SparkSpec {
       IngestStreams.splitLoop(spark, docs.where(col("doc_id") < 200),
         Seq(docs.where(col("doc_id") >= 200 && col("doc_id") < 350),
           docs.where(col("doc_id") >= 350)),
-        "t_odc", salt = "odc", killBetweenDays = false,
-        maxFilesPerTrigger = None)
+        "t_odc", salt = "odc", maxFilesPerTrigger = None)
     }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
@@ -407,7 +405,7 @@ class DurabilitySpec extends SparkSpec {
       spark, sf, "t_ann_u", cut0 = 200, cut1 = 350))
     val resumed = got(IngestStreams.runAnnIngest(
       spark, sf, "t_ann_k", cut0 = 200, cut1 = 350,
-      killBetweenDays = true))
+      killAfterDays = Set(1, 2)))
     assert(resumed === uninterrupted)
     assert(uninterrupted.nonEmpty)
     // simulate the crashed replay: day-2's rows append a second time

@@ -310,8 +310,8 @@ class PlanAuditSpec extends SparkSpec {
     "q68_training_prep_pack" -> 1, // benchmark n-gram set
     "q90_bloom_decontaminate" -> 2, // Bloom-hit candidate set (≈true hits)
     "q280_erasure_audit" -> 1, // tombstone (deletion-request) list
-    // vertex-sized graph tables: documented contract, degradable via
-    // Graph.* broadcastVertices=false (ScaleSpec pins both paths).
+    // vertex-sized graph tables: the Graph contract (a vertex set past
+    // the broadcast budget is out of scope; ScaleSpec pins the hints).
     // Counts include the construction-time capture of per-iteration
     // checkpoint executions (each iteration's hinted vertex table
     // canonicalizes distinctly because it builds on that round's
@@ -322,10 +322,9 @@ class PlanAuditSpec extends SparkSpec {
     "q248_clustering_coeff" -> 1, // degree table (orientation join)
     "q284_dag_layers" -> 1, // degree table (orientation join)
     "q249_degree_assortativity" -> 1, // endpoint degree tables ×2 arms
-    // vocabulary-sized document-frequency tables under the
-    // broadcastVocab=true default (Zipf-sublinear; hint-free shuffle
-    // degrade pinned equal in ScaleSpec) — the Graph contract shape.
-    // These hints sit BEHIND the candidate checkpoint since the r9-close
+    // vocabulary-sized document-frequency tables, always broadcast
+    // (Zipf-sublinear; ScaleSpec pins the hints) — the Graph contract
+    // shape. These hints sit BEHIND the candidate checkpoint since the r9-close
     // trim, so they surface via the construction-time capture below
     "q305_weighted_jaccard_banded" -> 1,
     "q326_ngram_containment_banded" -> 1,
@@ -494,8 +493,8 @@ class PlanAuditSpec extends SparkSpec {
     "q166_emd_drift" -> 1, "q184_decile_lift" -> 1,
     "q201_auc_bucketed" -> 1, "q223_qini_uplift" -> 4,
     "q288_histogram_quantile" -> 1, "q336_t_closeness" -> 1,
-    // vocabulary spines — Zipf-sublinear in the corpus (the Graph
-    // broadcastVocab contract precedent)
+    // vocabulary spines — Zipf-sublinear in the corpus (the banded
+    // near-dup operators' vocabulary broadcast precedent)
     "q134_zipf_fit" -> 1, "q173_vocab_coverage" -> 1,
     // count-histogram spine (distinct key-count VALUES, which saturate
     // far below key cardinality — Skew.keyDistribution's spine)

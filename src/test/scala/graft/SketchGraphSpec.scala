@@ -153,29 +153,6 @@ class SketchGraphSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("runConversionJoin: parquet spill sink equals the memory sink " +
-      "(the driver-collect-free production path)") {
-    val mem = EventStreams.runConversionJoin(spark, sf,
-        name = "conv_spec_mem")
-      .orderBy("signup_id", "click_id").collect().toSeq
-    val pq = EventStreams.runConversionJoin(spark, sf,
-        name = "conv_spec_pq", sink = "parquet")
-      .orderBy("signup_id", "click_id").collect().toSeq
-    assert(mem.nonEmpty && pq === mem)
-  }
-
-  test("runConversionJoinOuter: parquet spill sink equals the memory sink") {
-    val mem = EventStreams.runConversionJoinOuter(spark, sf,
-        name = "conv_outer_spec_mem")
-      .orderBy("signup_id", "click_id").collect().toSeq
-    val pq = EventStreams.runConversionJoinOuter(spark, sf,
-        name = "conv_outer_spec_pq", sink = "parquet")
-      .orderBy("signup_id", "click_id").collect().toSeq
-    assert(mem.nonEmpty && pq === mem)
-    // the outer rows are present in both (click_id = -1 sentinel)
-    assert(mem.exists(_.getLong(1) == -1L))
-  }
-
   test("runCdcApply: streamed merge onto pre-seeded state is (ts, event_id)-wins") {
     val statePath = java.nio.file.Files
       .createTempDirectory("graft_cdc").toString + "/state"

@@ -29,11 +29,13 @@ class SoakSpec extends SparkSpec {
   private val kills = Set(2, 5, 8)
 
   /** Mid-run LSH index compaction (after day 5's segment): the VStage
-    * generation swap, content-preserving for an LSH index. */
+    * generation swap, content-preserving for an LSH index, re-bucketing
+    * the sized 1-bucket index into 8. */
   private def compactAt(name: String)(day: Int): Unit =
-    if (day == 5)
+    if (day == 5) withBuckets(8) {
       VStage.compact(spark, name + "_idx", "lsh_key",
-        _.dropDuplicates("lsh_key", "corpus_id"), Some(8))
+        _.dropDuplicates("lsh_key", "corpus_id"))
+    }
 
   private def labelRows(df: org.apache.spark.sql.DataFrame) =
     df.select("id", "comp").collect().toSeq
@@ -43,15 +45,13 @@ class SoakSpec extends SparkSpec {
       "after day 5, auto-folds firing — eager-killed AND patch-log runs " +
       "equal the uninterrupted run AND the from-scratch full recompute") {
     val base = labelRows(DurableState.load(spark,
-      IngestStreams.clusterLoop(spark, corpus, days, "t_soak_c_u",
-        killBetweenDays = false)))
+      IngestStreams.clusterLoop(spark, corpus, days, "t_soak_c_u")))
     val eagerKilled = labelRows(DurableState.load(spark,
       IngestStreams.clusterLoop(spark, corpus, days, "t_soak_c_k",
-        killBetweenDays = false, killAfterDays = kills,
-        afterSegment = compactAt("t_soak_c_k"))))
+        killAfterDays = kills, afterSegment = compactAt("t_soak_c_k"))))
     assert(eagerKilled === base)
     val patchPath = IngestStreams.clusterLoopDeferred(spark, corpus, days,
-      "t_soak_c_p", killBetweenDays = false, foldFactor = 0.05,
+      "t_soak_c_p", foldFactor = 0.05,
       killAfterDays = kills, afterSegment = compactAt("t_soak_c_p"))
     assert(labelRows(IngestStreams.patchLogLabels(spark, patchPath))
       === base)
@@ -80,15 +80,14 @@ class SoakSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted
     val base = assignRows(DurableState.load(spark,
       IngestStreams.splitLoop(spark, corpus, days, "t_soak_s_u",
-        salt = "soak", killBetweenDays = false)))
+        salt = "soak")))
     val eagerKilled = assignRows(DurableState.load(spark,
       IngestStreams.splitLoop(spark, corpus, days, "t_soak_s_k",
-        salt = "soak", killBetweenDays = false, killAfterDays = kills,
+        salt = "soak", killAfterDays = kills,
         afterSegment = compactAt("t_soak_s_k"))))
     assert(eagerKilled === base)
     val patchPath = IngestStreams.splitLoopDeferred(spark, corpus, days,
-      "t_soak_s_p", salt = "soak", killBetweenDays = false,
-      foldFactor = 0.05, killAfterDays = kills,
+      "t_soak_s_p", salt = "soak", foldFactor = 0.05, killAfterDays = kills,
       afterSegment = compactAt("t_soak_s_p"))
     assert(assignRows(IngestStreams.patchLogAssign(spark, patchPath))
       === base)
@@ -114,11 +113,11 @@ class SoakSpec extends SparkSpec {
     val panelDocs = col("id") % 50 === 0
     def serve(tag: String, kills: Set[Int]) = {
       IngestStreams.lexicalLoop(spark, corpus, days, s"t_soak_hl_$tag",
-        maintainStats = false, killBetweenDays = false,
-        killAfterDays = kills, compactAfterDay = Some(5))
+        maintainStats = false, killAfterDays = kills,
+        compactAfterDay = Some(5))
       val cents = IngestStreams.annLoop(spark, vcorpus, vdays,
-        s"t_soak_hv_$tag", killBetweenDays = false,
-        killAfterDays = kills, reclusterAfterDay = Some(5))
+        s"t_soak_hv_$tag", killAfterDays = kills,
+        reclusterAfterDay = Some(5))
       val lex = Curate.tfidfTopKFromPostings(
         IngestStreams.collapsePostings(
           VStage.load(spark, s"t_soak_hl_${tag}_idx", refresh = true)),
