@@ -291,9 +291,7 @@ object AnalyticsQueries {
 
   /** [[Pca.covarianceMatrix]]: the one-pass fixed-point covariance
     * matrix of the embedding table (upper triangle, 0-based dims) — the
-    * distributed half of PCA; the driver-side Jacobi eigen-solve and
-    * codegen projection are pinned in the unit suite (eigenvectors
-    * aren't SQL-expressible). */
+    * distributed half of PCA. */
   private val q219 = QDef("q219_pca_covariance",
     (s, dir) => Pca.covarianceMatrix(T(s, dir, "embeddings"),
       col("embedding")).orderBy("i", "j"),
@@ -325,16 +323,11 @@ object AnalyticsQueries {
       |    / 10000.0 AS cov
       |FROM r ORDER BY i, j""".stripMargin))
 
-  /** [[Trend.poissonBootstrap]]: 64-replicate bootstrap of mean line
-    * price — the distributed (Poisson) bootstrap whose weights are
-    * per-row inverse-CDF scalars, no global n, no per-resample shuffle. */
-  /** Fixed-component PCA projection — the oracle row for the
-    * [[Pca.project]] half of the PCA path (q219 gates the covariance;
-    * the Jacobi eigensolve itself is driver-side and unit-pinned, so
-    * the projection is exercised here against LITERAL components both
-    * engines share). Embeddings quantize to 1e-6 longs, the two
-    * component vectors are small-integer literals, each score is an
-    * exact integer dot sealed in integer space. */
+  /** Fixed-component PCA projection: the embeddings scored against two
+    * LITERAL component vectors both engines share (q219 gates the
+    * covariance). Embeddings quantize to 1e-6 longs, the components are
+    * small-integer literals, and each score is an exact integer dot
+    * computed inline and sealed in integer space. */
   private val q306 = {
     val c1 = (0 until 64).map(i => (i * 7) % 11 - 5)
     val c2 = (0 until 64).map(i => (i * 13) % 17 - 8)
@@ -384,6 +377,9 @@ object AnalyticsQueries {
         |FROM d ORDER BY vec_id""".stripMargin))
   }
 
+  /** [[Trend.poissonBootstrap]]: 64-replicate bootstrap of mean line
+    * price — the distributed (Poisson) bootstrap whose weights are
+    * per-row inverse-CDF scalars, no global n, no per-resample shuffle. */
   private val q221 = QDef("q221_poisson_bootstrap",
     (s, dir) => Trend.poissonBootstrap(
       T(s, dir, "lineitem").select(

@@ -52,25 +52,12 @@ object Bench {
     // Two full timed passes, min per query: single-shot timings on a
     // 32-thread box carry ±3s GC/scheduler noise on the heavy queries;
     // the min of two runs is the honest steady-state number.
-    // Per-query GC wall (driver JVM collector time inside the timed
-    // window) rides along into bench_full.json: it is the instrument
-    // that separates "this query's plan got slower" from "this query
-    // absorbed the suite's GC debt" (the q284 standalone-vs-in-suite
-    // question) without re-running anything.
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans
-    def gcMillis(): Long = {
-      var s = 0L
-      gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0L))
-      s
-    }
-    def timedPass(): Map[String, (Double, Boolean, Long)] =
+    def timedPass(): Map[String, (Double, Boolean)] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         // untimed hygiene: drop blocks of no-longer-referenced
         // localCheckpoint RDDs (ContextCleaner runs off GC) so earlier
         // queries' leftovers don't become GC pauses inside later timings
         System.gc()
-        val g0 = gcMillis()
         val t0 = System.nanoTime()
         // noop sink forces full evaluation of every output column (count()
         // would let Catalyst prune the computed columns out of the plan).
@@ -82,18 +69,14 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        val gd = gcMillis() - g0
         dropLeftoverBlocks() // untimed: next query starts with a clean block manager
-        name -> ((dt, ok, gd))
+        name -> ((dt, ok))
       }.toMap
     val p1 = timedPass()
     val p2 = timedPass()
     val results = selected.keys.toSeq.sorted.map { name =>
-      val (t1, ok1, g1) = p1(name); val (t2, ok2, g2) = p2(name)
-      // gc of the pass that PROVIDED the reported time, so the two
-      // numbers describe the same execution
-      val g = if (t1 <= t2) g1 else g2
-      (name, math.min(t1, t2), ok1 && ok2, g)
+      val (t1, ok1) = p1(name); val (t2, ok2) = p2(name)
+      (name, math.min(t1, t2), ok1 && ok2)
     }
     // The driver keeps only a 2000-char TAIL of stdout: round 3's 61-query
     // full-precision line overflowed it, and round 6's 190-query line
@@ -113,39 +96,34 @@ object Bench {
         results.map(r => shortKey(r._1)).groupBy(identity).collect { case (k, v) if v.size > 1 => k }.mkString(","))
     val topN = sys.env.getOrElse("SPARK_GRAFT_BENCH_TOPN", "40").toInt
     val qs = results.sortBy(-_._2).take(topN)
-      .map { case (k, v, _, _) => s"\"" + shortKey(k) + "\":" + fmt(v) }
+      .map { case (k, v, _) => s"\"" + shortKey(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val fullQs = results.map { case (k, v, _, _) => s"\"" + shortKey(k) + "\":" + fmt(v) }
+    val fullQs = results.map { case (k, v, _) => s"\"" + shortKey(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false, _) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     // A failed query's (short) time-to-throw must not deflate the headline
     // total: sum successes only; failures are listed in "failed" and keep
     // their per-query detail for diagnosis.
-    val total = results.collect { case (_, v, true, _) => v }.sum
+    val total = results.collect { case (_, v, true) => v }.sum
     // core24: subtotal of the original SURVEY §2.15 inventory (q01–q24) —
     // the set BASELINE.md's 60 s target was derived FROM, so it is the
     // number comparable across rounds as the extension suite grows.
     // n_queries/sec_per_query give the full-suite rate for the same reason.
     val core24 = results.collect {
-      case (k, v, true, _) if k.matches("q(0[1-9]|1[0-9]|2[0-4])_.*") => v
+      case (k, v, true) if k.matches("q(0[1-9]|1[0-9]|2[0-4])_.*") => v
     }.sum
     // rate over SUCCESSES only: total already excludes failures, so
     // dividing by results.size would deflate the rate exactly when
     // queries fail
     val nOk = results.count(_._3)
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","core24":${fmt(core24)},"n_queries":${results.size},"sec_per_query":${fmt(total / math.max(nOk, 1))}"""
-    // gc_ms: driver-JVM collector millis inside each query's reported
-    // (min-pass) timed window — bench_full.json only; additive key, so
-    // bench_diff.py and the driver's "queries" parse are untouched
-    val fullGc = results.map { case (k, _, _, g) =>
-      s"\"" + shortKey(k) + "\":" + g }
-      .mkString("{", ",", "}")
     // the run's own config rides along (bench_full.json only), so a
     // record from an 8-core run can never pass for a 32-core one
-    val gcNames = gcBeans.asScala.map("\"" + _.getName + "\"").mkString("[", ",", "]")
+    val gcNames = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map("\"" + _.getName + "\"").mkString("[", ",", "]")
     val maxHeapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
-    val fullLine = s"""{$head,"queries":$fullQs,"gc_ms":$fullGc,"failed":$failed,"sf":"$sfDir","cpus":$cpus,"max_heap_mb":$maxHeapMb,"gc":$gcNames}"""
+    val fullLine = s"""{$head,"queries":$fullQs,"failed":$failed,"sf":"$sfDir","cpus":$cpus,"max_heap_mb":$maxHeapMb,"gc":$gcNames}"""
     // full-suite runs only: dev subset runs must not clobber the round's
     // committed per-query record
     if (args.isEmpty) try {

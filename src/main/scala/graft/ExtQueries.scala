@@ -334,9 +334,7 @@ object ExtQueries {
     * (exactly-once emission on watermark passage, state evicted): the
     * emitted set on a bounded run is the batch aggregation restricted to
     * windows with end <= the final watermark max(ts) - 1h (Spark emits AT
-    * exact equality — pinned in SessionAsofSpec's boundary test). Complete-mode
-    * [[EventStreams.runHourly]] stays as the bounded-backfill twin, pinned
-    * batch-equal in the unit suite. */
+    * exact equality — pinned in SessionAsofSpec's boundary test). */
   private val q38 = QDef("q38_stream_event_windows",
     (s, dir) => EventStreams.runHourlyAppend(s, dir),
     Some("""WITH mx AS (SELECT max(ts) AS mt FROM events)

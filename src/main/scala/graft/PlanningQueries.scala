@@ -228,7 +228,7 @@ object PlanningQueries {
 
   /** [[Skew.saltPlanEval]] on the event-type shuffle key (a handful of
     * hot values by construction): the diminishing-returns table that
-    * picks the salt factor for [[Skew.saltedTwoPhase]]. */
+    * picks the salt factor for [[Skew.saltedJoin]]. */
   private val q340 = QDef("q340_salt_plan",
     (s, dir) => Skew.saltPlanEval(T(s, dir, "events"),
       col("event_type"), col("event_id"), Seq(1, 2, 4, 8, 16)),

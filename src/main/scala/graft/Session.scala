@@ -6,8 +6,7 @@ import org.apache.spark.sql.SparkSession
   * core, UTC session time zone, UI off — plus the caller's `extra`
   * confs (Bench's `spark.local.dir`, the test suite's ANSI-off). ANSI
   * mode is NOT set here: Verify and Bench keep Spark's ANSI-on default,
-  * which TextGateParitySpec distinguishes from the test session.
-  * Extensions are not installed either (they would change plans). */
+  * which TextGateParitySpec distinguishes from the test session. */
 object Session {
   def local(cpus: Int, extra: (String, String)*): SparkSession = {
     val b = SparkSession.builder()

@@ -10,10 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SELECT graft_dot(a.emb, b.emb) FROM ...
   *   SELECT graft_fingerprint(split(text, ' ')) FROM docs
   *
-  * Registered directly on a session's FunctionRegistry; a deployment that
-  * owns session construction can do the same from a
-  * `SparkSessionExtensions` (`injectFunction`) — both paths feed the same
-  * registry, this one also works on an already-built session. */
+  * Registered directly on a session's FunctionRegistry, so it also works
+  * on an already-built session. */
 object GraftFunctions {
   private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot" -> { args =>
@@ -48,41 +46,11 @@ object GraftFunctions {
           org.apache.spark.sql.types.LongType), bits)
     })
 
-  /** (identifier, info, builder) triples — the shape both
-    * `FunctionRegistry.registerFunction` and
-    * `SparkSessionExtensions.injectFunction` consume. */
-  def descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    fns.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftFunctions].getName, name),
-        builder)
-    }
-
-  def register(spark: SparkSession): Unit = descriptions.foreach {
-    case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+  def register(spark: SparkSession): Unit = fns.foreach { case (name, builder) =>
+    spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name),
+      new ExpressionInfo(classOf[GraftFunctions].getName, name), builder)
   }
 }
 
 /** Class token for ExpressionInfo's className slot. */
 class GraftFunctions
-
-/** `spark.sql.extensions` entry point — the deployment path for clusters
-  * where the application does NOT own session construction (Thrift
-  * server, notebook platforms, spark-submit with a shared driver):
-  *
-  *   --conf spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
-  *
-  * injects the same native-function set [[GraftFunctions.register]] adds
-  * to an already-built session; both paths feed the session's
-  * FunctionRegistry (injection pinned in the unit suite via
-  * `Builder.withExtensions` on a fresh session). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptions.foreach(ext.injectFunction)
-    // keep-first window → min-struct aggregate (see RankToMinStruct):
-    // opt-in with the extensions, so sessions that don't load them keep
-    // Spark's stock plans
-    ext.injectOptimizerRule(_ => RankToMinStruct)
-  }
-}

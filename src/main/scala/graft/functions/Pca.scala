@@ -3,14 +3,11 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed PCA, split the way Spark wants it: the covariance matrix
-  * is a ONE-PASS map-side outer-product aggregation (the d(d+1)/2 upper
-  * triangle of Σxxᵀ plus the d column sums — data-sized input, d²-sized
-  * output, nothing quadratic ever shuffles), the eigen-decomposition of
-  * that d×d matrix runs on the driver (d = 64 → a 64×64 symmetric
-  * problem, microseconds — parallelizing it would be theater), and the
-  * projection back over the corpus is a broadcast of the eigenvector
-  * literals into a codegen dot product.
+/** The distributed half of PCA: the covariance matrix as a ONE-PASS
+  * map-side outer-product aggregation (the d(d+1)/2 upper triangle of
+  * Σxxᵀ plus the d column sums — data-sized input, d²-sized output,
+  * nothing quadratic ever shuffles). The eigen-decomposition of that
+  * d×d matrix is left to the caller.
   *
   * Exactness: embedding floats quantize to 1e-6 fixed-point longs, so
   * every cross-row sum is an exact integer and the centered covariance
@@ -66,76 +63,5 @@ object Pca {
             -expr("(2 * (-num) * 10000 + den) div (2 * den)"))
           .otherwise(expr("(2 * num * 10000 + den) div (2 * den)"))
           .cast("double") / lit(1e4)).as("cov"))
-  }
-
-  /** Cyclic-Jacobi eigendecomposition of a symmetric matrix — driver
-    * side, deterministic (fixed sweep order, fixed sweep count;
-    * convergence is quadratic, 12 sweeps ≫ enough at d ≤ 1024).
-    * Returns (eigenvalues desc, eigenvectors as rows) with each
-    * vector's sign canonicalized (largest-|component| positive) so the
-    * decomposition is unique up to the sign convention. */
-  def eigenJacobi(a0: Array[Array[Double]], sweeps: Int = 12)
-      : (Array[Double], Array[Array[Double]]) = {
-    val d = a0.length
-    val a = Array.tabulate(d, d)((i, j) => a0(i)(j))
-    val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
-    var sweep = 0
-    while (sweep < sweeps) {
-      var p = 0
-      while (p < d - 1) {
-        var q = p + 1
-        while (q < d) {
-          val apq = a(p)(q)
-          if (math.abs(apq) > 1e-15) {
-            val theta = (a(q)(q) - a(p)(p)) / (2.0 * apq)
-            val sgn = if (theta >= 0) 1.0 else -1.0
-            val t = sgn / (math.abs(theta) + math.sqrt(theta * theta + 1.0))
-            val c = 1.0 / math.sqrt(t * t + 1.0)
-            val s = t * c
-            var k = 0
-            while (k < d) {
-              val akp = a(k)(p); val akq = a(k)(q)
-              a(k)(p) = c * akp - s * akq
-              a(k)(q) = s * akp + c * akq
-              k += 1
-            }
-            k = 0
-            while (k < d) {
-              val apk = a(p)(k); val aqk = a(q)(k)
-              a(p)(k) = c * apk - s * aqk
-              a(q)(k) = s * apk + c * aqk
-              val vkp = v(k)(p); val vkq = v(k)(q)
-              v(k)(p) = c * vkp - s * vkq
-              v(k)(q) = s * vkp + c * vkq
-              k += 1
-            }
-          }
-          q += 1
-        }
-        p += 1
-      }
-      sweep += 1
-    }
-    val order = (0 until d).sortBy(i => -a(i)(i))
-    val vals = order.map(i => a(i)(i)).toArray
-    val vecs = order.map { i =>
-      val col = Array.tabulate(d)(k => v(k)(i))
-      val m = col.indices.maxBy(k => (math.abs(col(k)), -k))
-      if (col(m) < 0) col.map(-_) else col
-    }.toArray
-    (vals, vecs)
-  }
-
-  /** Project an array<float> embedding onto driver-computed component
-    * row-vectors (literal broadcast into the plan; the dot is the
-    * codegen [[org.apache.spark.sql.graft.DotProduct]] — no UDF). */
-  def project(df: DataFrame, emb: Column, components: Array[Array[Double]])
-      : DataFrame = {
-    val asD = transform(emb, x => x.cast("double"))
-    val cols = components.zipWithIndex.map { case (c, k) =>
-      org.apache.spark.sql.graft.VectorExprs.dot(asD,
-        array(c.map(lit(_)): _*)).as(s"pc${k + 1}")
-    }
-    df.select(col("*") +: cols: _*)
   }
 }

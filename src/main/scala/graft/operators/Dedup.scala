@@ -1072,6 +1072,9 @@ object Dedup {
     math.min(spark.conf.getOption("spark.graft.cc.localEdgeLimit")
       .map(_.toLong).getOrElse(200000L), Int.MaxValue.toLong - 2L).toInt
 
+  /** Round cap of [[connectedComponents]]' label propagation. */
+  private val ccMaxIter = 20
+
   /** Connected components over an undirected candidate-pair edge list via
     * iterative min-label propagation — the clustering step that turns
     * near-dup PAIRS into dedup GROUPS (keep the min-id doc per component,
@@ -1085,7 +1088,7 @@ object Dedup {
     * the cap is generous. Every iteration materializes via localCheckpoint
     * so the plan doesn't grow with iteration count, and the loop exits
     * early the first iteration no label improves. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
+  def connectedComponents(edges: DataFrame,
                           scope: CkptScope = CkptScope.session): DataFrame = {
     // an edge with a null endpoint connects nothing (as in ccContract):
     // dropped before either branch, so the driver probe never reads a
@@ -1137,7 +1140,7 @@ object Dedup {
     var comp = compCk
     var i = 0
     var done = false
-    while (i < maxIter && !done) {
+    while (i < ccMaxIter && !done) {
       val nbr = sym.join(comp, sym("dst") === comp("id"))
         .groupBy(col("src")).agg(min("comp").as("nbr"))
       val prop = comp.join(nbr, comp("id") === nbr("src"), "left")
@@ -1166,7 +1169,7 @@ object Dedup {
     // longer referenced by it
     org.apache.spark.sql.graft.CheckpointUtils.unpersistCheckpoint(sym)
     scope.track(compCk)
-    System.err.println(s"[cc] converged after $i rounds (maxIter $maxIter)")
+    System.err.println(s"[cc] converged after $i rounds (maxIter $ccMaxIter)")
     comp
   }
 
@@ -1272,11 +1275,10 @@ object Dedup {
     * into one weekly rewrite — but the eager form here keeps the
     * operator's output a plain labels table. */
   def ccIncremental(labels: DataFrame, newEdges: DataFrame,
-                    maxIter: Int = 20,
                     scope: CkptScope = CkptScope.session): DataFrame = {
     val l = labels.select(col("id").cast("long").as("id"),
       col("comp").cast("long").as("comp"))
-    val (ends, lsub, remap) = ccContract(l, newEdges, maxIter, scope)
+    val (ends, lsub, remap) = ccContract(l, newEdges, scope)
     // corpus scan 2: map-side relabel (comp is an old component minimum
     // iff it appears as a remap key)
     val relabeled = l.join(broadcast(remap), l("comp") === col("__old"), "left")
@@ -1304,12 +1306,11 @@ object Dedup {
     * at 100×). The eager [[ccIncremental]] stays the right call when the
     * state must be a plain materialized labels table. */
   def ccIncrementalPatch(labels: DataFrame, newEdges: DataFrame,
-                         maxIter: Int = 20,
                          scope: CkptScope = CkptScope.session)
       : (DataFrame, DataFrame) = {
     val l = labels.select(col("id").cast("long").as("id"),
       col("comp").cast("long").as("comp"))
-    val (ends, lsub, remap) = ccContract(l, newEdges, maxIter, scope)
+    val (ends, lsub, remap) = ccContract(l, newEdges, scope)
     val fresh = ends.join(lsub.select("id"), Seq("id"), "left_anti")
     val freshLab = fresh.join(broadcast(remap), fresh("id") === col("__old"), "left")
       .select(fresh("id"), coalesce(col("__new"), fresh("id")).as("comp"))
@@ -1362,7 +1363,6 @@ object Dedup {
     * — the q365 sequential-state property); the streaming drivers get
     * this for free from micro-batching. */
   private def ccContract(l: DataFrame, newEdges: DataFrame,
-                         maxIter: Int,
                          scope: CkptScope = CkptScope.session)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = l.sparkSession
@@ -1456,7 +1456,7 @@ object Dedup {
       .select(coalesce(col("__ca"), col("__ea")).as("id_a"),
         coalesce(col("__cb"), col("__eb")).as("id_b"))
       .where(col("id_a") =!= col("id_b"))
-    val micro = connectedComponents(contracted, maxIter, scope)
+    val micro = connectedComponents(contracted, scope)
     val remap0 = micro.where(col("id") =!= col("comp"))
       .select(col("id").as("__old"), col("comp").as("__new"))
     // a fast-path micro-CC returns a LocalRelation — already driver-
@@ -1552,11 +1552,10 @@ object Dedup {
                         splitBy: Column => Column,
                         spineSplits: Seq[String],
                         shingleSize: Int = 3, numPerm: Int = 16,
-                        bands: Int = 4, maxIter: Int = 20,
+                        bands: Int = 4,
                         scope: CkptScope = CkptScope.session): DataFrame = {
     val (_, bFull, oldTouched0) = splitStableMerge(oldAssign,
-      corpusIndex, batch, text, id, shingleSize, numPerm, bands, maxIter,
-      scope)
+      corpusIndex, batch, text, id, shingleSize, numPerm, bands, scope)
     val oldTouched = scope.ckpt(oldTouched0)
     // inheritance + conflict analysis per touched component
     val inh = scope.ckpt(oldTouched.groupBy(col("__c1"))
@@ -1601,10 +1600,10 @@ object Dedup {
                         batch: DataFrame, text: Column, id: Column,
                         splitBy: Column => Column,
                         shingleSize: Int = 3, numPerm: Int = 16,
-                        bands: Int = 4, maxIter: Int = 20,
+                        bands: Int = 4,
                         scope: CkptScope = CkptScope.session): DataFrame = {
     val (remap, newRows) = splitStableCore(oldAssign, corpusIndex, batch,
-      text, id, splitBy, shingleSize, numPerm, bands, maxIter, scope)
+      text, id, splitBy, shingleSize, numPerm, bands, scope)
     // old rows: splits NEVER move; comps patch through the broadcast
     // map (untouched isolated docs keep their null comp, the day-0
     // convention)
@@ -1630,11 +1629,11 @@ object Dedup {
                              batch: DataFrame, text: Column, id: Column,
                              splitBy: Column => Column,
                              shingleSize: Int = 3, numPerm: Int = 16,
-                             bands: Int = 4, maxIter: Int = 20,
+                             bands: Int = 4,
                              scope: CkptScope = CkptScope.session)
       : (DataFrame, DataFrame) = {
     val (remap, newRows) = splitStableCore(oldAssign, corpusIndex, batch,
-      text, id, splitBy, shingleSize, numPerm, bands, maxIter, scope)
+      text, id, splitBy, shingleSize, numPerm, bands, scope)
     (remap.select(col("__old").as("old"), col("__new").as("new")), newRows)
   }
 
@@ -1655,14 +1654,14 @@ object Dedup {
   private def splitStableMerge(oldAssign: DataFrame, corpusIndex: DataFrame,
                                batch: DataFrame, text: Column, id: Column,
                                shingleSize: Int, numPerm: Int, bands: Int,
-                               maxIter: Int, scope: CkptScope)
+                               scope: CkptScope)
       : (DataFrame, DataFrame, DataFrame) = {
     val oa = oldAssignFrame(oldAssign)
     val labels0 = oa.where(col("__c0").isNotNull)
       .select(col("id"), col("__c0").as("comp"))
     val (_, _, remap) = ccContract(labels0,
       batchIngestEdges(batch, corpusIndex, text, id,
-        shingleSize, numPerm, bands, scope), maxIter, scope)
+        shingleSize, numPerm, bands, scope), scope)
     val bFull = scope.ckpt(batch.select(id.cast("long").as("id"))
       .join(broadcast(remap), col("id") === col("__old"), "left")
       .select(col("id"), coalesce(col("__new"), col("id")).as("__c1")))
@@ -1684,11 +1683,10 @@ object Dedup {
   private def splitStableCore(oldAssign: DataFrame, corpusIndex: DataFrame,
                               batch: DataFrame, text: Column, id: Column,
                               splitBy: Column => Column, shingleSize: Int,
-                              numPerm: Int, bands: Int, maxIter: Int,
+                              numPerm: Int, bands: Int,
                               scope: CkptScope): (DataFrame, DataFrame) = {
     val (remap, bFull, oldTouched) = splitStableMerge(oldAssign,
-      corpusIndex, batch, text, id, shingleSize, numPerm, bands, maxIter,
-      scope)
+      corpusIndex, batch, text, id, shingleSize, numPerm, bands, scope)
     val inh = scope.ckpt(oldTouched.groupBy(col("__c1"))
       .agg(min_by(col("__sp0"), col("id")).as("__isp"))
       ) // batch-bounded (one row per touched component)

@@ -4,16 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video travel as opaque `binary`
-  * columns plus a typed metadata struct; decode / feature-extraction runs
-  * per-partition over the binary payloads.
+  * columns plus a typed metadata struct; feature extraction is an
+  * expression over the binary column, and resize / frame sampling run
+  * per-partition over the payloads.
   *
-  * The decode step is REAL for formats the JDK ships codecs for (PNG/JPEG/
-  * GIF/BMP via `javax.imageio` — no external dependency): actual pixel
-  * dimensions and mean luminance. Payloads no installed codec recognizes
-  * (webp here, plus the text-byte fixtures) fall back to [[decodeStub]]'s
-  * deterministic byte-level features, so the pipeline shape is total
-  * either way. Everything Spark-side — schema, partition-batched
-  * execution, feature signature — is identical in both paths.
+  * Resize is REAL for formats the JDK ships codecs for (PNG/JPEG/GIF/BMP
+  * via `javax.imageio` — no external dependency). Payloads no installed
+  * codec recognizes (webp here, plus the text-byte fixtures) fall back to
+  * a deterministic byte-level stub, so the pipeline shape is total
+  * either way.
   */
 object Multimodal {
   /** Synthesize a media table from the documents fixture: payload = UTF-8
@@ -34,12 +33,10 @@ object Multimodal {
     octet_length(media).cast("long").as("n_bytes"),
     Dedup.hash60(media).as("content_hash"))
 
-  // ---- per-partition decode path (the mapInPandas-equivalent seam) ----
+  // ---- per-partition path (the mapInPandas-equivalent seam) ----
 
   case class MediaRow(doc_id: Long, media: Array[Byte],
                       width: Int, height: Int, format: String)
-  case class MediaFeatures(doc_id: Long, n_bytes: Long, content_hash: Long,
-                           mean_byte: Double)
 
   /** Flatten [[mediaFrame]] output into the typed row shape. */
   def mediaRows(docs: DataFrame): Dataset[MediaRow] =
@@ -47,65 +44,6 @@ object Multimodal {
       col("meta.width").as("width"), col("meta.height").as("height"),
       col("meta.format").as("format"))
       .as[MediaRow](Encoders.product[MediaRow])
-
-  /** JVM twin of [[Dedup.hash60]] (md5 hex prefix -> long). */
-  def hash60Jvm(bytes: Array[Byte]): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(bytes).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
-  /** A really-decoded image: pixel dimensions + mean luminance in [0,255]
-    * (per-pixel gray = (R+G+B)/3, averaged over the raster). */
-  case class DecodedImage(width: Int, height: Int, meanLuma: Double)
-
-  /** Pure-JVM image decode via `javax.imageio` (PNG/JPEG/GIF/BMP readers
-    * ship with the JDK). None when no installed codec recognizes the
-    * payload — callers fall back to the stub features, keeping the decode
-    * pipeline total over arbitrary blobs. */
-  def decodeImage(bytes: Array[Byte]): Option[DecodedImage] =
-    try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
-        .map { img =>
-          val (w, h) = (img.getWidth, img.getHeight)
-          var sum = 0.0
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
-              x += 1
-            }
-            y += 1
-          }
-          DecodedImage(w, h, if (w * h == 0) 0d else sum / (w.toLong * h))
-        }
-    } catch { case _: Exception => None }
-
-  /** Fallback decoder for payloads without an installed codec: deterministic
-    * byte-level features (mean byte value stands in for mean luminance). */
-  private def decodeStub(r: MediaRow): MediaFeatures = {
-    val sum = r.media.foldLeft(0L)((a, b) => a + (b & 0xff))
-    MediaFeatures(r.doc_id, r.media.length.toLong, hash60Jvm(r.media),
-      if (r.media.isEmpty) 0d else sum.toDouble / r.media.length)
-  }
-
-  /** Real-first decode: `javax.imageio` pixels when a codec matches, byte
-    * stub otherwise (one partition = one batch, so codec state amortizes
-    * across rows exactly like a pandas-UDF batch). */
-  private def decodeOne(r: MediaRow): MediaFeatures =
-    decodeImage(r.media) match {
-      case Some(d) =>
-        MediaFeatures(r.doc_id, r.media.length.toLong, hash60Jvm(r.media), d.meanLuma)
-      case None => decodeStub(r)
-    }
-
-  /** Per-partition feature extraction. Narrow transform — no shuffle; at
-    * 100 TB the only knob that matters is input partition sizing
-    * (maxPartitionBytes) so each decode batch fits executor memory. */
-  def decodeFeatures(ds: Dataset[MediaRow]): Dataset[MediaFeatures] =
-    ds.mapPartitions(it => it.map(decodeOne))(Encoders.product[MediaFeatures])
 
   /** Box-filter (area-mean) rescale of a DECODABLE payload: each target
     * pixel averages its source rectangle per channel, re-encoded as PNG
@@ -168,8 +106,8 @@ object Multimodal {
   /** Resize, real-first: decodable payloads (PNG/JPEG/GIF/BMP) get a true
     * area-mean raster rescale re-encoded as PNG ([[resizeImage]]); blobs
     * no codec recognizes keep the deterministic byte-stub path — the
-    * pipeline stays total over arbitrary payloads either way. Same narrow
-    * per-partition shape as decode. */
+    * pipeline stays total over arbitrary payloads either way. Narrow
+    * per-partition transform — no shuffle. */
   def resize(ds: Dataset[MediaRow], targetW: Int, targetH: Int): Dataset[MediaRow] =
     ds.mapPartitions(_.map { r =>
       resizeImage(r.media, targetW, targetH) match {

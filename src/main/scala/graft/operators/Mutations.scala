@@ -26,12 +26,6 @@ object Mutations {
       .unionByName(changes)
   }
 
-  /** Anti-delete: remove every base row whose key appears in `tombstones`.
-    * The deletion half of a CDC apply — same single-anti-join shape. */
-  def applyDeletes(base: DataFrame, tombstones: DataFrame,
-                   keys: Seq[String]): DataFrame =
-    base.join(tombstones.select(keys.map(col): _*), keys, "left_anti")
-
   /** Incremental aggregate-state maintenance: merge a materialized
     * ADDITIVE aggregate state (counts / integer sums keyed by `keys`)
     * with a freshly aggregated delta — the pattern that turns "recompute

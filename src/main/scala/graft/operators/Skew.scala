@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * AQE's skew-join handling (on by default) splits oversized sort-merge
   * partitions at runtime and is the first line of defense. Explicit
   * salting remains the tool when AQE can't help: broadcast-ineligible
-  * dimension joins with a few catastrophic keys, deterministic layout
-  * requirements, or pre-shuffle aggregation of a hot key.
+  * dimension joins with a few catastrophic keys, or deterministic layout
+  * requirements.
   */
 object Skew {
 
@@ -54,22 +54,6 @@ object Skew {
     val saltedSmall = small.withColumn("__salt",
       explode(sequence(lit(0), lit(salts - 1))))
     saltedBig.join(saltedSmall, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Two-phase aggregation over a salted key: partial agg on (key, salt),
-    * final agg on key. Spark's hash aggregate already does map-side
-    * partial aggregation, which makes this unnecessary for plain
-    * `groupBy(key)` — it exists for aggregations where the partial state
-    * itself is heavy per key (e.g. collect-style or sketch merges), so a
-    * hot key's state is built on `salts` tasks before one final merge. */
-  def saltedTwoPhase(df: DataFrame, key: Column, value: Column, salts: Int,
-                     partial: Column => Column, merge: Column => Column): DataFrame = {
-    require(salts > 0, "salts must be positive")
-    df.select(key.as("__k"), value.as("__v"))
-      .withColumn("__salt", pmod(hash(monotonically_increasing_id()), lit(salts)))
-      .groupBy(col("__k"), col("__salt")).agg(partial(col("__v")).as("__p"))
-      .groupBy(col("__k")).agg(merge(col("__p")).as("__m"))
-      .select(col("__k"), col("__m"))
   }
 
   /** Key-distribution report — the DIAGNOSTIC that decides whether the
@@ -134,7 +118,7 @@ object Skew {
     * factor to pick is the smallest s whose hotspot_share stops
     * improving (diminishing returns read directly off the table).
     * Complements [[keyDistribution]] (which diagnoses the skew) and
-    * [[saltedTwoPhase]] (which executes the chosen factor).
+    * [[saltedJoin]] (which executes the chosen factor).
     *
     * Scale shape: ONE corpus aggregation keyed (key, saltBasis mod
     * max-factor) — every requested factor then derives by re-grouping

@@ -92,37 +92,20 @@ object Staging {
       .saveAsTable(table)
   }
 
-  /** Sort-clustered parquet staging — the zone-map/data-skipping layout.
-    *
-    * `repartitionByRange` gives every output file a DISJOINT range of the
-    * cluster key (sampling-based boundaries, exact partitioning) and
-    * `sortWithinPartitions` orders rows inside each file, so parquet
-    * row-group min/max statistics are tight and non-overlapping. A later
-    * scan with a predicate on the cluster key prunes whole files and row
-    * groups from the footer stats alone — at 100 TB this is the difference
-    * between reading the full table and reading one range slice. The
-    * disjoint-range property and content preservation are pinned in the
-    * unit suite ([[graft.ScaleSpec]]). */
-  def stageSorted(df: DataFrame, path: String, nFiles: Int,
-                  keys: org.apache.spark.sql.Column*): Unit =
-    df.repartitionByRange(nFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** Z-order-clustered parquet staging — [[stageSorted]]'s
-    * two-dimensional sibling, and the EXECUTED form of the layout
+  /** Z-order-clustered parquet staging — the zone-map/data-skipping
+    * layout, and the EXECUTED form of the layout
     * [[Layout.zonemapPruneEval]] only scores by simulation: rows sort by
     * the Morton interleave of the two (pre-binned) dimensions, so every
     * output file covers a compact rectangle-ish region of (x, y) space
     * and its parquet min/max footer stats are tight on BOTH columns. A
     * scan predicating on either — or both — dimensions skips whole files
-    * from the zone maps, where a single-key sort ([[stageSorted]]) can
-    * only ever skip on its one key. `bits` bounds each dimension
+    * from the zone maps, where a single-key range sort can only ever
+    * skip on its one key. `bits` bounds each dimension
     * (callers bin/modulo into [0, 2^bits) first — same contract as
     * [[Layout.zorderKey]]); the transient Morton key orders the write
     * and is dropped from the stored schema. Real-file pruning under
     * both-dimension predicates is pinned in [[graft.ScaleSpec]] against
-    * the staged files' actual zone maps, x-sorted staging as the
+    * the staged files' actual zone maps, an x-range-sorted write as the
     * control. */
   def stageZordered(df: DataFrame, path: String, nFiles: Int, bits: Int,
                     x: org.apache.spark.sql.Column,
@@ -143,7 +126,7 @@ object Staging {
     * scan into reading one partition's files. Choose LOW-cardinality
     * columns — each distinct value is a directory, and tiny partitions
     * make many tiny files (the small-files problem); high-cardinality
-    * pruning belongs to [[stageSorted]] zone maps instead. Pruning is
+    * pruning belongs to [[stageZordered]] zone maps instead. Pruning is
     * pinned in the unit suite and exercised by q101. */
   def stagePartitioned(df: DataFrame, path: String, cols: String*): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)

@@ -310,30 +310,6 @@ object TrainOrder {
         col("cum_tokens"), col("min_score"), col("max_score"))
       .orderBy("stage")
 
-  /** Materialize the training order: write the corpus as parquet
-    * partitioned by shard, ONE file per shard, rows in global_pos
-    * order within each file — the bytes a data loader streams. The
-    * shard hash-repartition gives each shard one task (a straggler
-    * only if shardTokens is set silly-large); sortWithinPartitions
-    * orders rows inside the file; parquet preserves row order per
-    * file on read. Returns the shard count. */
-  def writeShards(df: DataFrame, id: Column, tokens: Column, seed: String,
-                  shardTokens: Long, outDir: String,
-                  payload: Seq[Column] = Nil,
-                  prefixChars: Int = 2): Long = {
-    val a = shardAssign(df, id, tokens, seed, shardTokens, prefixChars)
-    val withPayload =
-      if (payload.isEmpty) a
-      else a.join(df.select((id.cast("long").as("doc_id") +: payload): _*),
-        "doc_id")
-    val nShards = a.agg(max("shard_id")).collect()(0).getLong(0) + 1
-    withPayload
-      .repartition(nShards.toInt min 10000, col("shard_id"))
-      .sortWithinPartitions("shard_id", "global_pos")
-      .write.mode("overwrite").partitionBy("shard_id").parquet(outDir)
-    nShards
-  }
-
   /** [[Sampling.tokenBudgetPlan]] with per-source EPOCH CAPS — the
     * data-constrained refinement: a source may repeat at most
     * `maxEpochs` times, and budget it cannot absorb re-distributes over

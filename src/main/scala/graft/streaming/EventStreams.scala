@@ -108,30 +108,20 @@ object EventStreams {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
 
-  /** Drive the stream over the bounded fixture and return the final result
-    * as a batch DataFrame (memory sink, complete mode). */
-  def runHourly(spark: SparkSession, dir: String,
-                name: String = "graft_stream_hourly"): DataFrame =
-    hourly(spark, dir, name, "complete")
-
-  private def hourly(spark: SparkSession, dir: String, name: String,
-                     mode: String): DataFrame =
-    drain(spark, name, mode)(hourlyAgg(readEventStream(spark, dir))).select(
+  /** [[hourlyAgg]] drained in append mode, the live-deployment shape: a
+    * window row is emitted exactly once, when the watermark passes its
+    * end, and its state is evicted. State and sink growth are bounded by
+    * the watermark at any scale. On a bounded AvailableNow run the final
+    * watermark is max(ts) - 1 hour, so the emitted set is precisely the
+    * batch hourly aggregation restricted to windows with end <= that
+    * cutoff (emission at exact equality is pinned in the unit suite's
+    * boundary test). */
+  def runHourlyAppend(spark: SparkSession, dir: String,
+                      name: String = "graft_stream_hourly_append"): DataFrame =
+    drain(spark, name, "append")(hourlyAgg(readEventStream(spark, dir))).select(
       date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
       col("event_type"), col("n"), round(col("sum_value"), 4).as("sum_value"))
       .orderBy("hour_ts", "event_type")
-
-  /** Live-deployment twin of [[runHourly]]: append mode — a window row is
-    * emitted exactly once, when the watermark passes its end, and its state
-    * is evicted. State and sink growth are bounded by the watermark at any
-    * scale (the complete-mode variant stays as the bounded-backfill shape).
-    * On a bounded AvailableNow run the final watermark is max(ts) - 1 hour,
-    * so the emitted set is precisely the batch hourly aggregation restricted
-    * to windows with end <= that cutoff (emission at exact equality is
-    * pinned in the unit suite's boundary test). */
-  def runHourlyAppend(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_hourly_append"): DataFrame =
-    hourly(spark, dir, name, "append")
 
   /** Streaming twin of [[Sessionize.sessions]]: session_window aggregation
     * under a watermark, append mode (session windows don't support complete
@@ -247,10 +237,10 @@ object EventStreams {
     * Aggregator inside a streaming groupBy, the bounded-state answer to
     * "distinct users per window" on an unbounded stream (exact distinct
     * state grows with cardinality; the sketch state is ≤ k longs per
-    * group). Complete mode over the bounded fixture — the backfill shape,
-    * like [[runHourly]]; a live deployment adds a watermark and append
-    * emission. The sketch is deterministic (md5 bottom-k), so a batch
-    * DuckDB oracle recomputes the identical estimate (q113). */
+    * group). Complete mode over the bounded fixture — the backfill shape;
+    * a live deployment adds a watermark and append emission. The sketch
+    * is deterministic (md5 bottom-k), so a batch DuckDB oracle recomputes
+    * the identical estimate (q113). */
   def runKmvDistinct(spark: SparkSession, dir: String, k: Int = 32,
                      name: String = "graft_stream_kmv"): DataFrame = {
     import org.apache.spark.sql.Encoders

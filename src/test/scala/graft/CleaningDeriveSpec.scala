@@ -83,29 +83,6 @@ class CleaningDeriveSpec extends SparkSpec {
     assert(r.getDouble(1) === 1.5)
   }
 
-  test("GraftExtensions injects the same functions via spark.sql.extensions path") {
-    import org.apache.spark.sql.SparkSession
-    // getOrCreate returns the active session, so release it for the
-    // duration: the fresh session shares the SparkContext but runs the
-    // builder (and its withExtensions) from scratch — exactly what
-    // `--conf spark.sql.extensions=...GraftExtensions` does at startup
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder().master("local[4]")
-        .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-        .getOrCreate()
-      val r = s2.sql(
-        "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").collect().head
-      assert(r.getDouble(0) === 11.0)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
-  }
-
   test("graft_dot malformed input: unequal lengths and null elements yield NULL, like aggregate(zip_with)") {
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
     // composable reference spelling against the same inputs

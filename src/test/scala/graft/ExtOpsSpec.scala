@@ -235,48 +235,6 @@ class ExtOpsSpec extends SparkSpec {
     assert(diff.count() === 0)
   }
 
-  test("multimodal: per-partition decode path agrees with expression path") {
-    val docs = Tables.t(spark, sf, "documents").limit(50)
-    val exprPath = rows(Multimodal.mediaFrame(docs)
-      .select(Seq(col("doc_id")) ++ Multimodal.featureColumns(col("media")): _*)
-      .orderBy("doc_id"))
-    val mpPath = rows(Multimodal.decodeFeatures(Multimodal.mediaRows(docs))
-      .toDF().select("doc_id", "n_bytes", "content_hash").orderBy("doc_id"))
-    assert(exprPath.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ===
-      mpPath.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-  }
-
-  test("multimodal: real javax.imageio decode of a 2x2 PNG (dims + exact mean luma)") {
-    // deterministic 2x2 PNG built with the same JDK codec that reads it
-    val img = new java.awt.image.BufferedImage(2, 2,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, 0x000000) // luma 0
-    img.setRGB(1, 0, 0xffffff) // luma 255
-    img.setRGB(0, 1, 0x808080) // luma 128
-    img.setRGB(1, 1, 0x402000) // luma (64+32+0)/3 = 32
-    val baos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", baos))
-    val png = baos.toByteArray
-
-    val d = Multimodal.decodeImage(png).get
-    assert(d.width === 2 && d.height === 2)
-    assert(d.meanLuma === (0.0 + 255 + 128 + 32) / 4)
-    // non-image bytes -> None (fallback seam)
-    assert(Multimodal.decodeImage("not an image".getBytes).isEmpty)
-
-    // the Spark decode path uses the real pixels for PNG payloads...
-    val ds = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, png, 2, 2, "png"),
-      Multimodal.MediaRow(2L, "plain text".getBytes, 16, 16, "webp")))(
-      org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val feats = Multimodal.decodeFeatures(ds).collect().sortBy(_.doc_id)
-    assert(feats(0).mean_byte === d.meanLuma)
-    assert(feats(0).n_bytes === png.length.toLong)
-    // ...and the stub's mean-byte for undecodable payloads
-    val txt = "plain text".getBytes
-    assert(feats(1).mean_byte === txt.map(_ & 0xff).sum.toDouble / txt.length)
-  }
-
   test("multimodal resize: target dims in metadata, byte count tracks area ratio") {
     val docs = Tables.t(spark, sf, "documents").limit(20)
     val in = Multimodal.mediaRows(docs).collect().map(r => r.doc_id -> r).toMap
@@ -311,11 +269,14 @@ class ExtOpsSpec extends SparkSpec {
     // decodable payload: truly rescaled raster, re-encoded PNG
     val real = out.head
     assert(real.width === 4 && real.height === 2 && real.format === "png")
-    val d = Multimodal.decodeImage(real.media).get
-    assert(d.width === 4 && d.height === 2)
-    assert(d.meanLuma === 127.5) // half black, half white survives exactly
     val rt = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(real.media))
+    assert(rt.getWidth === 4 && rt.getHeight === 2)
+    val luma = for (y <- 0 until 2; x <- 0 until 4) yield {
+      val rgb = rt.getRGB(x, y)
+      (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3.0
+    }
+    assert(luma.sum / luma.size === 127.5) // half black, half white survives exactly
     for (y <- 0 until 2; x <- 0 until 4)
       assert((rt.getRGB(x, y) & 0xffffff) ===
         (if (x < 2) 0x000000 else 0xffffff),
@@ -403,16 +364,6 @@ class ExtOpsSpec extends SparkSpec {
       assert(est <= truth, s"'$t' overestimated: $est > $truth")
       assert(truth - est <= n / k, s"'$t' error too large: ${truth - est}")
     }
-  }
-
-  test("streaming hourly agg equals batch hourly agg") {
-    val streamed = rows(EventStreams.runHourly(spark, sf, "graft_stream_spec"))
-    val batch = rows(Tables.t(spark, sf, "events")
-      .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour_ts"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
-      .orderBy("hour_ts", "event_type"))
-    assert(streamed === batch)
   }
 
   test("streaming PSI/SRM monitors: hours partition the stream, scores sane") {

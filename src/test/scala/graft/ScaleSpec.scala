@@ -789,39 +789,6 @@ class ScaleSpec extends SparkSpec {
     assert(s1 === s2)
   }
 
-  test("saltedTwoPhase sum equals direct groupBy sum") {
-    val df = ((1 to 500).map(_ => ("hot", 1L)) ++
-      (1 to 50).map(i => (s"k$i", i.toLong))).toDF("k", "v")
-    val got = Skew.saltedTwoPhase(df, col("k"), col("v"), salts = 4,
-        partial = sum, merge = sum)
-      .as[(String, Long)].collect().toMap
-    val exp = df.groupBy("k").agg(sum("v")).as[(String, Long)].collect().toMap
-    assert(got === exp)
-  }
-
-  test("stageSorted: per-file key ranges disjoint (zone-map layout), content preserved") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val e = Tables.t(spark, sf, "events").select("event_id", "user_id")
-    val path = "target/test_stage_sorted"
-    Staging.stageSorted(e, path, 4, col("user_id"))
-    val files = new java.io.File(path).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-    assert(files.length > 1, "need multiple files to demonstrate disjoint ranges")
-    val ranges = files.map { f =>
-      spark.read.parquet(f).agg(min("user_id"), max("user_id"))
-        .as[(Long, Long)].head()
-    }
-    ranges.sortBy(_._1).sliding(2).foreach {
-      case Array((_, hiPrev), (loNext, _)) =>
-        assert(hiPrev <= loNext, s"overlapping file ranges: $hiPrev > $loNext")
-      case _ =>
-    }
-    // content preserved exactly (multiset equality)
-    val back = spark.read.parquet(path)
-    assert(back.exceptAll(e).isEmpty && e.exceptAll(back).isEmpty)
-  }
-
   test("stageZordered: REAL per-file zone maps prune both dimensions; " +
     "x-sort layout can't prune y") {
     import org.apache.spark.sql.functions._
@@ -854,7 +821,8 @@ class ScaleSpec extends SparkSpec {
       s"z-order kept all ${zz.length} files under the y predicate")
     // ...while the x-sorted control layout spans all y in every file
     val sp = "target/test_stage_zordered_xsort"
-    Staging.stageSorted(e.orderBy("event_id"), sp, 8, col("xb"))
+    e.orderBy("event_id").repartitionByRange(8, col("xb"))
+      .sortWithinPartitions(col("xb")).write.mode("overwrite").parquet(sp)
     val ss = zones(sp)
     assert(ss.count(_._2 <= 3) === ss.length,
       "x-sorted files should all contain low-y rows (no y pruning)")

@@ -216,7 +216,7 @@ class SketchGraphSpec extends SparkSpec {
 
   // -------------------------------------------------- mutations & negatives
 
-  test("upsert: changes win, unmatched base survives, inserts append; deletes drop") {
+  test("upsert: changes win, unmatched base survives, inserts append") {
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "v", "x")
     val changes = Seq((2L, "B", 99.0), (9L, "new", 1.0)).toDF("k", "v", "x")
@@ -224,9 +224,6 @@ class SketchGraphSpec extends SparkSpec {
       .orderBy("k").as[(Long, String, Double)].collect().toSeq
     assert(merged === Seq((1L, "a", 10.0), (2L, "B", 99.0), (3L, "c", 30.0),
       (9L, "new", 1.0)))
-    val afterDelete = Mutations.applyDeletes(base, Seq(Tuple1(2L)).toDF("k"),
-      Seq("k")).orderBy("k").as[(Long, String, Double)].collect().toSeq
-    assert(afterDelete === Seq((1L, "a", 10.0), (3L, "c", 30.0)))
   }
 
   test("negativeSample: k draws per anchor, no self-pairs, negatives from corpus, deterministic") {

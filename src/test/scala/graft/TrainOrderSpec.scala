@@ -214,35 +214,4 @@ class TrainOrderSpec extends SparkSpec {
     pace.foreach { r => cum += r.getLong(2)
       assert(r.getLong(3) === cum, "cum_tokens is the running sum") }
   }
-
-  test("writeShards: one parquet file per shard, rows inside each file " +
-       "in global order, and the shard-ordered concatenation replays " +
-       "the exact shardAssign order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards")
-      .toString + "/out"
-    val nShards = TrainOrder.writeShards(docs, col("doc_id"), col("nt"),
-      seed = "s1", shardTokens = 500L, outDir = dir,
-      payload = Seq(col("source")))
-    val assign = TrainOrder.shardAssign(docs, col("doc_id"), col("nt"),
-      seed = "s1", shardTokens = 500L).collect().sortBy(_.getLong(2))
-    val expect = assign.map(_.getLong(0)).toSeq
-    assert(nShards === assign.map(_.getLong(4)).max + 1)
-    val shardDirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("shard_id=")).sortBy(f =>
-        f.getName.stripPrefix("shard_id=").toLong)
-    assert(shardDirs.length === nShards)
-    shardDirs.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
-        s"${d.getName}: exactly one file per shard")
-    }
-    val replayed = shardDirs.flatMap { d =>
-      val rows = spark.read.parquet(d.getAbsolutePath).collect()
-      val pos = rows.map(_.getAs[Long]("global_pos"))
-      assert(pos.toSeq === pos.sorted.toSeq,
-        s"${d.getName}: rows out of order inside the file")
-      rows.sortBy(_.getAs[Long]("global_pos"))
-        .map(_.getAs[Long]("doc_id"))
-    }.toSeq
-    assert(replayed === expect, "concatenated shards = the full order")
-  }
 }
